@@ -686,7 +686,7 @@ def scale_demos(spark) -> dict:
 
 
 def main() -> None:
-    from skrub_spark import get_session
+    from skrub_spark import get_session, release
     from skrub_spark.queries import queries
 
     spark = get_session(app_name="skrub_spark_bench")
@@ -716,7 +716,7 @@ def main() -> None:
                 qs[name](spark, warm_dir).count()
             except Exception as e:  # noqa: BLE001
                 print(f"# warmup {name} failed: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
+        release(spark)
         print(
             f"# untimed sf0.001 warm-up pass: {time.time() - t0:.1f}s",
             file=sys.stderr,
@@ -747,9 +747,9 @@ def main() -> None:
             # ~250 sequential queries those blocks accumulate and
             # LRU-thrash executor memory, inflating LATE queries by
             # 2-3x (r10 probe). Each query runs once per leg, so
-            # dropping its cache after timing costs nothing and
-            # isolates measurements.
-            spark.catalog.clearCache()
+            # dropping its cache and local-checkpoint blocks after
+            # timing costs nothing and isolates measurements.
+            release(spark)
     import statistics
 
     timings = {

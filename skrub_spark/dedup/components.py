@@ -26,6 +26,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 
 def _fingerprint(e: DataFrame) -> tuple:
     """Order-independent edge-set fingerprint: (count, xor of row
@@ -89,7 +91,6 @@ def connected_components(
     col_b: str = "id_b",
     max_iter: int = 20,
     on_nonconverged: str = "raise",
-    checkpoint: str = "local",
     local_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Input: undirected edges (col_a, col_b). Output: (id, component)
@@ -108,40 +109,12 @@ def connected_components(
     way, and the distributed path is untouched for anything larger.
     Pass 0 to force the distributed path.
 
-    ``checkpoint`` truncates the per-round lineage (without it the
-    plan doubles every round): "local" (default) uses executor-local
-    ``localCheckpoint`` — fine in local mode and fastest, but blocks
-    are lost with an executor, so a cluster job would restart from
-    round 0 on failure; "reliable" uses ``DataFrame.checkpoint()``
-    to the configured ``spark.sparkContext.setCheckpointDir`` (HDFS/
-    object store), the fault-tolerant choice for the 100 TB cluster
-    run (r6, VERDICT r5 #4).
+    Each round is checkpointed (without it the plan doubles every
+    round); :func:`skrub_spark.session.checkpoint` picks local or
+    reliable from the configured checkpoint dir.
 
-    Cache contract (r13, VERDICT r12 #7): the narrow projected pair
-    frame is persisted and BACKS THE RETURNED lazy frame (its
-    singleton branch), so it cannot be released in-function. In a
-    long-lived session call ``spark.catalog.clearCache()`` (or
-    ``df.unpersist()`` the input projection) after the last consumer
-    — the bench/battery do this between queries."""
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(
-            f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
-        )
-    if checkpoint == "reliable":
-        sc = pairs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)"
-            )
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
+    The persisted pair projection backs the returned frame; see
+    :func:`skrub_spark.release` for the cache contract."""
     # The caller's pair pipeline (LSH banding, cosine verify, ...) is
     # often the expensive part; without a persist it would execute up
     # to four times — size probe, edge collect, and once per branch of
@@ -171,11 +144,11 @@ def connected_components(
                 ).limit(0)
             return _with_singletons(pairs, col_a, col_b, labels)
     # invariant: e is the symmetrized edge set entering each phase
-    e = _ckpt(_symmetrize(edges))
+    e = checkpoint(_symmetrize(edges))
     converged = False
     before = _fingerprint(e)
     for _ in range(max_iter):
-        e2 = _ckpt(_symmetrize(_small_star(_symmetrize(_large_star(e)))))
+        e2 = checkpoint(_symmetrize(_small_star(_symmetrize(_large_star(e)))))
         after = _fingerprint(e2)
         e = e2
         if after == before:

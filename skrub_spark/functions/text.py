@@ -24,16 +24,6 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.trim(c), _WS), lambda t: t != "")
 
 
-def bpe_ish_tokens(col: Column | str) -> Column:
-    """BPE-ish subword-boundary tokens: splits on whitespace AND at
-    letter/digit/punctuation boundaries — a cheap proxy for byte-pair
-    tokenizer counts used for corpus token accounting."""
-    c = F.col(col) if isinstance(col, str) else col
-    # Insert break before digit-runs and punctuation, then split.
-    marked = F.regexp_replace(c, r"([0-9]+|[^\sA-Za-z0-9]+)", r" $1 ")
-    return F.filter(F.split(F.trim(marked), _WS), lambda t: t != "")
-
-
 def _shifted_shingles(items: Column, k: int, sep: str) -> Column:
     """k-grams over an array via zip_with of k shifted slices.
 

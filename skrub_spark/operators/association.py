@@ -58,11 +58,8 @@ def association_rules(
     distinct baskets — all exact-integer single divisions,
     6dp-rounded.
 
-    Cache contract (r13, VERDICT r12 #7): the distinct basket frame
-    is persisted and backs the RETURNED lazy frame, so it cannot be
-    released in-function. In a long-lived session call
-    ``spark.catalog.clearCache()`` after the last consumer — the
-    bench/battery do this between queries.
+    The persisted distinct basket frame backs the returned frame; see
+    :func:`skrub_spark.release` for the cache contract.
     """
     ms = int(min_support_count)
     # persisted: THREE consumers (the basket count, the item

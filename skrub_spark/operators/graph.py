@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 SCALE = 1_000_000_000
 
 
@@ -182,7 +184,6 @@ def hits(
     *,
     n_iter: int = 3,
     partitions: int | None = None,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Kleinberg's HITS (1999) — the hubs/authorities companion to
     ``pagerank``: authority(i) = Σ_{j→i} hub(j), hub(i) = Σ_{i→j}
@@ -229,29 +230,9 @@ def hits(
     # literal maxes, the repeated nodes/e self-references make
     # Catalyst re-ANALYSIS super-linear (a cached final frame still
     # took ~20s to re-plan at 96 nodes) — lineage truncation per
-    # half-step keeps analysis O(1) per iteration. Same
-    # local/reliable switch as dedup/components.py: "local" is the
-    # single-machine default, "reliable" writes to the configured
-    # checkpoint dir for real clusters. Frames are |V|-bounded.
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(
-            f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
-        )
-    if checkpoint == "reliable":
-        sc = edges.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)"
-            )
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
+    # half-step keeps analysis O(1) per iteration (session.checkpoint:
+    # the mode follows the configured checkpoint dir). Frames are
+    # |V|-bounded.
     # r12-opt half-step shape: checkpoint the UNNORMALIZED per-node
     # sums first (one heavy job: join + map-side-combined sum + the
     # nodes left-join), then read the normalizer max off the
@@ -263,7 +244,7 @@ def hits(
     # redundant heavy work. Normalization math is unchanged
     # (identical literal-embedded integer floor-div).
     for _ in range(int(n_iter)):
-        araw = _ckpt(
+        araw = checkpoint(
             nodes.join(
                 e.join(h.withColumnRenamed("node", "src"), "src")
                 .groupBy("dst")
@@ -281,7 +262,7 @@ def hits(
             "node",
             F.expr(f"(ar * {SCALE_H}L) div {am}L").alias("a"),
         )
-        hraw = _ckpt(
+        hraw = checkpoint(
             nodes.join(
                 e.join(a.withColumnRenamed("node", "dst"), "dst")
                 .groupBy("src")
@@ -320,7 +301,6 @@ def label_propagation(
     *,
     n_iter: int = 3,
     partitions: int | None = None,
-    checkpoint: str = "local",
     nodes_df: DataFrame | None = None,
     node: str = "node",
 ) -> DataFrame:
@@ -359,25 +339,6 @@ def label_propagation(
         e = e.repartition(partitions, "src")
     e = e.persist()
     nodes = e.select(F.col("src").alias("node")).distinct().persist()
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(
-            f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
-        )
-    if checkpoint == "reliable":
-        sc = edges.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)"
-            )
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
     lab = nodes.select("node", F.col("node").alias("label"))
     w = Window.partitionBy("node").orderBy(
         F.col("cnt").desc(), F.col("label").asc()
@@ -403,7 +364,7 @@ def label_propagation(
                 F.coalesce("new_label", "label").alias("label"),
             )
         )
-        lab = _ckpt(lab)
+        lab = checkpoint(lab)
     if nodes_df is not None:
         key_t = lab.schema["node"].dataType
         universe = nodes_df.select(
@@ -541,7 +502,6 @@ def k_core(
     k: int,
     n_iter: int = 4,
     partitions: int | None = None,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """k-core decomposition by synchronous peeling — the maximal
     subgraph where every node keeps ≥ k neighbors. PageRank ranks
@@ -571,33 +531,14 @@ def k_core(
     e = fwd.union(rev).filter(F.col("src") != F.col("dst")).distinct()
     if partitions:
         e = e.repartition(partitions, "src")
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(
-            f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
-        )
-    if checkpoint == "reliable":
-        sc = edges.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)"
-            )
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    e = _ckpt(e)
+    e = checkpoint(e)
     for _ in range(int(n_iter)):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         bad = deg.filter(F.col("deg") < int(k)).select("src")
         e = e.join(bad, "src", "left_anti").join(
             bad.withColumnRenamed("src", "dst"), "dst", "left_anti"
         )
-        e = _ckpt(e)
+        e = checkpoint(e)
     return e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
@@ -612,7 +553,6 @@ def bfs_distances(
     *,
     max_hops: int = 4,
     directed: bool = False,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Multi-source BFS: ``(node, dist)`` for every node within
     ``max_hops`` of any source (dist = exact hop distance to the
@@ -632,8 +572,7 @@ def bfs_distances(
     anti-join against the settled set; frontiers and the settled
     frame are |V|-sized, edges are touched once per round.
     Per-round checkpointing truncates lineage exactly like
-    ``label_propagation``; at 100 TB pass ``checkpoint='reliable'``
-    (requires an explicit setCheckpointDir).
+    ``label_propagation``.
     """
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if directed:
@@ -648,25 +587,6 @@ def bfs_distances(
             .distinct()
         )
     e = e.persist()
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(
-            f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
-        )
-    if checkpoint == "reliable":
-        sc = edges.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)"
-            )
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
     # Align the seed ids to the edges' native key type (string hosts,
     # long ids, ... — same rule as pagerank/hits/label_propagation).
     # A hard cast('long') here silently NULLed string-keyed seeds and
@@ -675,7 +595,7 @@ def bfs_distances(
     settled = sources.select(
         F.col(node).cast(key_t).alias("node"), F.lit(0).alias("dist")
     ).distinct()
-    settled = _ckpt(settled)
+    settled = checkpoint(settled)
     frontier = settled.select("node")
     for h in range(1, int(max_hops) + 1):
         nxt = (
@@ -686,11 +606,11 @@ def bfs_distances(
             .distinct()
             .join(settled.select("node"), "node", "left_anti")
         )
-        nxt = _ckpt(nxt)
+        nxt = checkpoint(nxt)
         settled = settled.unionByName(
             nxt.select("node", F.lit(h).alias("dist"))
         )
-        settled = _ckpt(settled)
+        settled = checkpoint(settled)
         frontier = nxt
     return settled.select("node", F.col("dist").cast("int").alias("dist"))
 
@@ -705,7 +625,6 @@ def weighted_distances(
     *,
     n_rounds: int = 4,
     directed: bool = False,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Bounded Bellman-Ford: cheapest path cost from any source to
     every node reachable within ``n_rounds`` edges — ``(node,
@@ -724,7 +643,7 @@ def weighted_distances(
     source end, reusing the persisted edge partitioning) + one
     min-groupBy + a full-outer min-merge with the previous
     distances; all post-edge frames are |V|-sized. Lineage is
-    checkpointed per round (``reliable`` option for clusters).
+    checkpointed per round like ``bfs_distances``.
     """
     fwd = edges.select(
         F.col(src).alias("src"),
@@ -745,25 +664,6 @@ def weighted_distances(
             .distinct()
         )
     e = e.persist()
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(
-            f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}"
-        )
-    if checkpoint == "reliable":
-        sc = edges.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)"
-            )
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
     # Same native-key-type alignment as bfs_distances: string-keyed
     # graphs must not have their seeds cast to long (silent NULLs).
     key_t = e.schema["src"].dataType
@@ -771,7 +671,7 @@ def weighted_distances(
         F.col(node).cast(key_t).alias("node"),
         F.lit(0).cast("long").alias("dist"),
     ).distinct()
-    dist = _ckpt(dist)
+    dist = checkpoint(dist)
     for _ in range(int(n_rounds)):
         relaxed = (
             e.join(
@@ -795,7 +695,7 @@ def weighted_distances(
                 ).alias("dist"),
             )
         )
-        dist = _ckpt(dist)
+        dist = checkpoint(dist)
     return dist.select("node", F.col("dist").cast("long").alias("dist"))
 
 

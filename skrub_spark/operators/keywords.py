@@ -107,11 +107,8 @@ def more_like_this(
     6dp — rankings replay bit-identically in the DuckDB oracle
     (``more_like_this``), ties broken by candidate id.
 
-    Cache contract (r13, VERDICT r12 #7): the tf, weight and norm
-    frames are persisted and back the RETURNED lazy frame, so they
-    cannot be released in-function. In a long-lived session call
-    ``spark.catalog.clearCache()`` after the last consumer — the
-    bench/battery do this between queries."""
+    The persisted tf, weight and norm frames back the returned frame;
+    see :func:`skrub_spark.release` for the cache contract."""
     spark = docs.sparkSession
     if isinstance(probe_ids, DataFrame):
         probes = probe_ids.select(F.col(probe_ids.columns[0]).alias("__pid"))

@@ -651,8 +651,7 @@ def q_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # words_az09 regex passes over the corpus (two count frames,
     # vocabulary, scoring occurrences). One tokenization into a
     # persisted narrow frame; identical tokens -> identical grams ->
-    # identical scores (oracle-verified). Cache released by the
-    # bench/battery clearCache() between queries.
+    # identical scores (oracle-verified). Cache: see skrub_spark.release.
     tok = docs.select(
         "doc_id", words_az09("text").alias("__words")
     ).persist()
@@ -818,7 +817,7 @@ def q_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # op's own counters), so Catalyst prunes the per-doc text
     # rebuild entirely. Blocks stay cached for the session and are
     # LRU-evicted under pressure; a consumer that needs them gone
-    # immediately can spark.catalog.clearCache() after materializing.
+    # immediately calls skrub_spark.release after materializing.
     # 1. boilerplate: drop short/shouting lines, rebuild
     b = remove_boilerplate_lines(docs, "text", min_words=20)
     b = (
@@ -17143,7 +17142,7 @@ def q_lm_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regex passes (trigram occ, bigram types, vocabulary) —
     # tokenize once into a persisted words frame (scoring keeps its
     # own pass: the probe text differs). Identical tokens ->
-    # identical counts; cache released by bench/battery clearCache().
+    # identical counts. Cache: see skrub_spark.release.
     tok_train = docs.select(words_az09("text").alias("__words")).persist()
     lm = train_kn_trigram(tok_train, words_col="__words")
     probe = docs.select(
@@ -18550,7 +18549,7 @@ def q_lm_perplexity_kn5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted words frame and point every training pass at the
     # cached arrays (identical tokens -> identical counts; the
     # scoring side keeps its own single pass because the probe text
-    # differs). Cache released by the bench/battery clearCache().
+    # differs). Cache: see skrub_spark.release.
     tok_train = (
         docs.where(F.col("lang") == "en")
         .select(words_az09("text").alias("__words"))
@@ -19012,7 +19011,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame feeds the trainer's two count frames, the vocabulary,
     # the scoring occurrences AND the lang join (formerly 5
     # words_az09/parquet passes). Identical tokens -> identical
-    # buckets; cache released by the bench/battery clearCache().
+    # buckets. Cache: see skrub_spark.release.
     tok = docs.select(
         "doc_id", "lang", words_az09("text").alias("__words")
     ).persist()
@@ -20873,8 +20872,7 @@ def q_rho_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into a persisted narrow (doc_id, words) frame and point every
     # pass at the cached arrays: identical tokens -> identical grams
     # -> identical scores (oracle-verified). The persist backs the
-    # returned lazy frame; the bench/battery clearCache() between
-    # queries releases it (repo-wide session-scope cache contract).
+    # returned lazy frame; see skrub_spark.release for the cache contract.
     tok = docs.select(
         "doc_id", words_az09("text").alias("__words")
     ).persist()

@@ -56,19 +56,15 @@ def corpus_datasheet(
     """The datasheet's numeric core: ``(section, metric, value)``
     rows (value is a double — exact counts or 6dp ratios).
 
-    Cache contract (r13, VERDICT r12 #7): the tokenized base frame
-    is persisted and backs the RETURNED lazy frame, so it cannot be
-    released in-function. In a long-lived session call
-    ``spark.catalog.clearCache()`` after the last consumer — the
-    bench/battery do this between queries."""
+    The persisted tokenized base frame backs the returned frame; see
+    :func:`skrub_spark.release` for the cache contract."""
     from pyspark import StorageLevel
 
     # persisted: every datasheet section aggregates this frame, and
     # left lazy each union branch re-executed the per-row
     # tokenization (size(words_az09)) — ~8 corpus re-scans in one
     # action (r12-opt). MEMORY_AND_DISK so a 100 TB corpus spills
-    # instead of OOMing; the bench/battery clear the cache after
-    # each query.
+    # instead of OOMing (released by skrub_spark.release).
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(lang_col).cast("string").alias("lang"),

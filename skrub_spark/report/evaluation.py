@@ -50,9 +50,8 @@ def classification_report(
     # API-boundary tradeoff (documented, r10 advice): eager=True
     # executes the upstream AT CALL TIME, and localCheckpoint blocks
     # are NOT replayable — on a cluster, losing the executor holding
-    # them fails downstream actions instead of recomputing, and the
-    # blocks are released by GC of the DataFrame, not by
-    # spark.catalog.clearCache(). For a (k+1)²-row frame consumed
+    # them fails downstream actions instead of recomputing (blocks are
+    # freed by skrub_spark.release). For a (k+1)²-row frame consumed
     # immediately, that exposure window is negligible and the
     # concurrent-branch dedup is worth it; callers needing lineage
     # durability can persist()+count() the INPUT df themselves.

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults sized for the local test harness; on a real cluster the
 # caller overrides shuffle partitions to ~2-3x total cores.
@@ -89,6 +89,42 @@ def fan_out(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Truncate ``df``'s lineage at an iterative operator's round
+    boundary (one Spark job per round). The mode follows the session:
+    with a checkpoint dir configured
+    (``spark.sparkContext.setCheckpointDir``, HDFS/object store on a
+    cluster) the round is written there, fault-tolerant across
+    executor loss; otherwise it is an executor-local
+    ``localCheckpoint``, fastest and released by :func:`release`."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)
+
+
+def release(spark: SparkSession) -> None:
+    """Drop every staged block of the session.
+
+    Staging/release contract: operators persist or locally checkpoint
+    frames that back their RETURNED lazy result (a fan-out branch
+    point, a round's edge set, a pinned ``monotonically_increasing_id``),
+    so they cannot free them in-function. A long-lived session calls
+    ``release(spark)`` after the last consumer of those results; the
+    bench and the battery do so between queries.
+
+    ``spark.catalog.clearCache()`` alone frees only cache-manager
+    persists; ``localCheckpoint`` blocks live outside it and survive
+    even a JVM GC. So after clearing the cache this unpersists every
+    persistent RDD that is locally checkpointed (checkpointed, with no
+    checkpoint file). Frames built before the call must not be reused
+    after it: their checkpoint blocks are gone and an action on them
+    raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        if rdd.isCheckpointed() and not rdd.getCheckpointFile().isPresent():
+            rdd.unpersist(False)
 
 
 def get_session(

@@ -55,12 +55,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in ALL_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for t in ALL_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
     opts = {"header": "true", "inferSchema": schema is None}
     opts.update(options)

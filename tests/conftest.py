@@ -28,10 +28,31 @@ def _slow_ids() -> set[str]:
         return set()
 
 
+def _stale_slow_ids(config, slow: set[str], nodeids: set[str]) -> list[str]:
+    """Slow ids that name no test. An id counts when its file is gone,
+    or when its file was collected whole and the id is not in it (a
+    command line narrowed to node ids checks nothing)."""
+    if any("::" in str(a) for a in config.args):
+        return []
+    files = {nid.split("::", 1)[0] for nid in nodeids}
+    stale = []
+    for nid in sorted(slow - nodeids):
+        path = nid.split("::", 1)[0]
+        if path in files or not (config.rootpath / path).exists():
+            stale.append(nid)
+    return stale
+
+
 def pytest_collection_modifyitems(config, items):
     slow = _slow_ids()
     if not slow:
         return
+    stale = _stale_slow_ids(config, slow, {item.nodeid for item in items})
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_tests.txt names tests that do not exist "
+            "(renamed or moved? update the file): " + ", ".join(stale)
+        )
     for item in items:
         # nodeid is relative to rootdir: "tests/test_x.py::test_y[p]"
         if item.nodeid in slow:

@@ -159,35 +159,83 @@ def test_connected_components_long_chain(spark):
     assert len(comp) == 64
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint='reliable' round-trips through a configured
-    checkpoint dir (the cluster fault-tolerance path); without a
-    configured dir it refuses with a clear error."""
-    import pytest
+_CKPT_PAIRS = [(1, 2), (2, 3), (10, 11)]
+_CKPT_EDGES = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a int, id_b int"
+# Runs in a child interpreter: Spark cannot unset a checkpoint dir,
+# and with one set every later checkpoint in the shared test session
+# would silently switch to the reliable path.
+_RELIABLE_CHILD = """
+import json, sys
+from skrub_spark import get_session
+from skrub_spark.dedup.components import connected_components
+from skrub_spark.operators.graph import k_core
+
+spark = get_session(
+    app_name="reliable_ckpt", master="local[1]", shuffle_partitions=1,
+    extra_conf={"spark.ui.enabled": "false"},
+)
+spark.sparkContext.setLogLevel("ERROR")
+spark.sparkContext.setCheckpointDir(sys.argv[1])
+pairs = spark.createDataFrame(json.loads(sys.argv[2]), "id_a int, id_b int")
+edges = spark.createDataFrame(json.loads(sys.argv[3]), "src int, dst int")
+cc = connected_components(pairs, local_threshold=0).collect()
+core = k_core(edges, k=3).collect()
+print(json.dumps({"cc": sorted(map(list, cc)), "core": sorted(map(list, core))}))
+"""
+
+
+def test_reliable_checkpoint_matches_local(spark, tmp_path):
+    """With a checkpoint dir configured, the iterative operators take
+    the reliable (fault-tolerant) checkpoint path, write checkpoint
+    files there, and return exactly the rows of the local path."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from skrub_spark.operators.graph import k_core
+
+    pairs = spark.createDataFrame(_CKPT_PAIRS, "id_a int, id_b int")
+    edges = spark.createDataFrame(_CKPT_EDGES, "src int, dst int")
+    local = {
+        "cc": sorted(
+            map(list, connected_components(pairs, local_threshold=0).collect())
+        ),
+        "core": sorted(map(list, k_core(edges, k=3).collect())),
+    }
+    ckpt = tmp_path / "ckpt"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(
+            [repo] + [p for p in [os.environ.get("PYTHONPATH")] if p]
+        ),
+        SPARK_GRAFT_DRIVER_MEM="1g",
     )
-    sc = spark.sparkContext
-    old = sc.getCheckpointDir()
-    if old is None:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            connected_components(
-                pairs, checkpoint="reliable", local_threshold=0
-            )
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        out = connected_components(
-            pairs, checkpoint="reliable", local_threshold=0
-        )
-        comp = {r["id"]: r["component"] for r in out.collect()}
-        assert comp[1] == comp[2] == comp[3] == 1
-        assert comp[10] == comp[11] == 10
-        with pytest.raises(ValueError, match="checkpoint"):
-            connected_components(pairs, checkpoint="bogus")
-    finally:
-        if old is not None:
-            sc.setCheckpointDir(old)
+    res = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _RELIABLE_CHILD,
+            str(ckpt),
+            json.dumps(_CKPT_PAIRS),
+            json.dumps(_CKPT_EDGES),
+        ],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    reliable = json.loads(res.stdout.strip().splitlines()[-1])
+    assert reliable == local
+    assert local["cc"] == [[1, 1], [2, 1], [3, 1], [10, 10], [11, 10]]
+    assert local["core"] == [[1, 3], [2, 3], [3, 3], [4, 3]]
+    written = [
+        f for _, _, files in os.walk(ckpt) for f in files if f.startswith("part-")
+    ]
+    assert written, "reliable path wrote no checkpoint files"
 
 
 def test_fingerprint_distinguishes_equal_count_sets(spark):

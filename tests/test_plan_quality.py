@@ -1258,15 +1258,18 @@ def test_query_quantization_matches_spark_rounding(spark):
 
 
 def test_operator_persists_release_with_clearCache(spark, sf_dir):
-    """r13 (VERDICT r12 #7): operators whose persisted frames back
+    """Operators whose persisted or locally checkpointed frames back
     their RETURNED lazy result (more_like_this w/norms,
-    association_rules b, connected_components pairs) document a
-    session-scope cache contract — spark.catalog.clearCache() after
-    the last consumer releases every cached block. Assert the
-    contract actually does: after materializing each operator and
-    clearing, no RDD reports cached partitions."""
+    association_rules b, connected_components pairs and its
+    per-round local checkpoints) rely on the session-scope cache
+    contract: ``release(spark)`` after the last consumer frees every
+    cached block. ``clearCache()`` alone leaves the localCheckpoint
+    blocks behind. Assert the contract holds absolutely: after
+    materializing each operator and releasing, no RDD reports cached
+    partitions."""
     from pyspark.sql import functions as F
 
+    from skrub_spark import release
     from skrub_spark.dedup.components import connected_components
     from skrub_spark.operators.association import association_rules
     from skrub_spark.operators.keywords import more_like_this
@@ -1283,6 +1286,7 @@ def test_operator_persists_release_with_clearCache(spark, sf_dir):
         [(1, 2), (2, 3), (5, 5)], "id_a long, id_b long"
     )
     connected_components(pairs).collect()
+    connected_components(pairs, local_threshold=0).collect()
 
     def cached_rdds():
         return [
@@ -1291,6 +1295,6 @@ def test_operator_persists_release_with_clearCache(spark, sf_dir):
             if r.numCachedPartitions() > 0
         ]
 
-    assert len(cached_rdds()) > 0  # the persists are live pre-clear
-    spark.catalog.clearCache()
+    assert len(cached_rdds()) > 0  # the persists are live pre-release
+    release(spark)
     assert cached_rdds() == []

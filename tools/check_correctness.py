@@ -59,6 +59,7 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
+    from skrub_spark import release
 
     if os.environ.get("SPARK_GRAFT_VANILLA"):
         # mimic the DRIVER's environment: a plain SparkSession with
@@ -100,6 +101,7 @@ def main():
             print(f"FAIL {name}: spark error: {e}")
             continue
         elapsed = time.time() - t0
+        release(spark)
         if name not in oracles:
             records[name] = {
                 "status": "rows_only", "rows": len(srows),

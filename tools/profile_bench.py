@@ -2,11 +2,13 @@
 
 Runs the bench HEADLINE queries exactly like bench.py (same session,
 same warm-up at sf0.001, same timed action ``df.count()``, same
-``clearCache()`` between queries) but additionally records, per query:
+``release(spark)`` between queries) but additionally records, per query:
 
 - wall seconds (same methodology as bench.py)
 - number of Spark jobs the action triggered
-- summed job duration (from the UI REST API)
+- job seconds: the union of the jobs' [submission, completion]
+  intervals from the UI REST API (concurrent jobs are not
+  double-counted, so ``gap_s = wall_s - job_s`` stays >= 0)
 - number of stages / tasks
 
 Output: one JSON dict per line to the path in argv[1]
@@ -22,6 +24,7 @@ import os
 import sys
 import time
 import urllib.request
+from datetime import datetime
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,10 +47,26 @@ def _jobs(spark):
         return json.load(r)
 
 
+def _ts(s):
+    return datetime.strptime(
+        s.replace("GMT", "").strip(), "%Y-%m-%dT%H:%M:%S.%f"
+    ).timestamp()
+
+
+def _union_s(intervals) -> float:
+    """Total length covered by (start, end) intervals."""
+    total, reach = 0.0, float("-inf")
+    for lo, hi in sorted(intervals):
+        if hi > reach:
+            total += hi - max(lo, reach)
+            reach = hi
+    return total
+
+
 def main() -> None:
     from bench import HEADLINE
 
-    from skrub_spark import get_session
+    from skrub_spark import get_session, release
     from skrub_spark.queries import queries
 
     spark = get_session(app_name="skrub_spark_profile")
@@ -64,7 +83,7 @@ def main() -> None:
                 qs[name](spark, warm_dir).count()
             except Exception as e:  # noqa: BLE001
                 print(f"# warmup {name} failed: {e}", file=sys.stderr)
-        spark.catalog.clearCache()
+        release(spark)
         print(f"# warm-up: {time.time() - t0:.1f}s", file=sys.stderr)
 
     records = []
@@ -80,36 +99,26 @@ def main() -> None:
             wall = time.time() - t0
             build = tb - t0
             spark.sparkContext.setJobDescription(None)
-            spark.catalog.clearCache()
+            release(spark)
             time.sleep(0.05)
             jobs = [j for j in _jobs(spark) if j["jobId"] not in before]
             njobs = len(jobs)
-            jobsec = 0.0
+            spans = []
             nstages = 0
             ntasks = 0
             n_skipped_ts = 0
             for j in jobs:
-                # r13 (ADVICE r12): parse the REST timestamps with a
-                # real format instead of fixed-offset slices (the old
-                # [20:23] slice fed 'GMT' to float() on format drift
-                # and the bare except silently undercounted job_s).
-                # Skipped jobs are now counted and reported.
+                # unparseable or missing timestamps are counted and
+                # reported rather than silently undercounting job_s
                 try:
-                    from datetime import datetime
-
-                    def _ts(s):
-                        return datetime.strptime(
-                            s.replace("GMT", "").strip(),
-                            "%Y-%m-%dT%H:%M:%S.%f",
-                        ).timestamp()
-
-                    jobsec += _ts(j["completionTime"]) - _ts(
-                        j["submissionTime"]
+                    spans.append(
+                        (_ts(j["submissionTime"]), _ts(j["completionTime"]))
                     )
                 except (KeyError, ValueError):
                     n_skipped_ts += 1
                 nstages += len(j.get("stageIds", []))
                 ntasks += j.get("numTasks", 0)
+            jobsec = _union_s(spans)
             if n_skipped_ts:
                 print(
                     f"# {name}: {n_skipped_ts}/{njobs} jobs skipped in "
