@@ -16,7 +16,7 @@ import os
 import sys
 
 import skrub_spark.queries as q_mod
-from skrub_spark.queries import oracle_sql, queries
+from skrub_spark.queries import BATTERY, WINDOW, oracle_sql, queries
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -42,6 +42,8 @@ def test_oracle_sql_pinned():
 
 def test_every_query_function_registered_once():
     qs = queries()
+    declared = WINDOW + BATTERY
+    assert len(declared) == len(set(declared)) == len(qs)
     defined = {
         n[2:]
         for n in dir(q_mod)
@@ -49,6 +51,11 @@ def test_every_query_function_registered_once():
     }
     assert set(qs) == defined
     assert all(fn is getattr(q_mod, f"q_{n}") for n, fn in qs.items())
+
+
+def test_window_is_the_driver_gate():
+    assert len(WINDOW) == len(set(WINDOW)) == 50
+    assert list(WINDOW) == list(queries())[:50]
 
 
 def test_oracles_name_registered_queries():
