@@ -87,6 +87,14 @@ def main():
     oracles = entrymod.oracle_sql()
     failures = []
     records = {}
+
+    def fail(name, status, msg):
+        # status names the failed check: spark_error, duckdb_error,
+        # columns, rowcount or values
+        failures.append(name)
+        records[name] = {"status": status, "err": msg[:500]}
+        print(f"FAIL {name}: {msg}")
+
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
@@ -95,13 +103,13 @@ def main():
             sdf = fn(spark, SF_DIR)
             srows = sdf.collect()
             scols = list(sdf.columns)
+            elapsed = time.time() - t0
         except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            records[name] = {"status": "spark_error", "err": str(e)[:500]}
-            print(f"FAIL {name}: spark error: {e}")
+            fail(name, "spark_error", f"spark error: {e}")
             continue
-        elapsed = time.time() - t0
-        release(spark)
+        finally:
+            # a failed query's staged blocks must not leak into the next
+            release(spark)
         if name not in oracles:
             records[name] = {
                 "status": "rows_only", "rows": len(srows),
@@ -114,18 +122,18 @@ def main():
         try:
             ddf = con.execute(oracles[name]).fetch_arrow_table()
         except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {e}")
+            fail(name, "duckdb_error", f"duckdb error: {e}")
             continue
         dcols = ddf.column_names
         if sorted(scols) != sorted(dcols):
-            failures.append(name)
-            print(f"FAIL {name}: columns {sorted(scols)} != {sorted(dcols)}")
+            fail(name, "columns", f"columns {sorted(scols)} != {sorted(dcols)}")
             continue
         drows = ddf.to_pylist()
         if len(srows) != len(drows):
-            failures.append(name)
-            print(f"FAIL {name}: rowcount spark={len(srows)} duckdb={len(drows)}")
+            fail(
+                name, "rowcount",
+                f"rowcount spark={len(srows)} duckdb={len(drows)}",
+            )
             continue
         cols = sorted(scols)
 
@@ -138,9 +146,8 @@ def main():
         )
         dset = sorted((tuple(canon(r[c]) for c in cols) for r in drows), key=sort_key)
         if sset != dset:
-            failures.append(name)
             ndiff = sum(1 for a, b in zip(sset, dset) if a != b)
-            print(f"FAIL {name}: values differ ({ndiff}/{len(sset)} rows)")
+            fail(name, "values", f"values differ ({ndiff}/{len(sset)} rows)")
             for a, b in list(zip(sset, dset))[:200]:
                 if a != b:
                     print(f"  spark : {a}")
@@ -151,10 +158,6 @@ def main():
                 "status": "pass", "rows": len(srows), "sec": round(elapsed, 2),
             }
             print(f"PASS {name} ({len(srows)} rows, {elapsed:.1f}s)")
-    for name in failures:
-        records.setdefault(name, {"status": "fail"})
-        if records[name].get("status") == "pass":
-            records[name]["status"] = "fail"
     if JSON_OUT:
         import json
 

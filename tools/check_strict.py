@@ -11,7 +11,7 @@ difference. Floats compare by exact bit pattern via ``repr``.
 
 Usage: python tools/check_strict.py [sf_dir] [query_list]
 Default sf_dir = /root/testdata/sf0.01 (the driver's gate scale);
-default query list = the FIRST 50 queries (the gate window).
+default query list = ``WINDOW``, the driver's 50-entry gate.
 """
 
 from __future__ import annotations
@@ -59,6 +59,9 @@ def main():
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    from skrub_spark import release
+    from skrub_spark.queries import WINDOW
+
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -73,7 +76,7 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = ONLY if ONLY else list(qs)[:50]
+    names = ONLY if ONLY else WINDOW
     failures = []
     for name in names:
         if name not in qs:
@@ -90,6 +93,8 @@ def main():
             failures.append(name)
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
             continue
+        finally:
+            release(spark)
         try:
             # to_pylist over Arrow: ints stay ints, HUGEINT becomes
             # Decimal — representation drift is VISIBLE, as at the
