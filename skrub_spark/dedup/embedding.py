@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot_product
+from .pairs import bucket_pairs
 
 
 def embedding_near_duplicates(
@@ -82,14 +83,18 @@ def embedding_near_duplicates(
     # Candidates stay NARROW (ids only) through the bucket self-join
     # and the pair dedup; the 2x dim-double vectors join back per
     # SURVIVING pair only, not per banded candidate row.
-    a = banded.select(F.col("id").alias("id_a"), "bucket_idx", "bucket")
-    b = banded.select(F.col("id").alias("id_b"), "bucket_idx", "bucket")
-    cand = (
-        a.join(b, on=["bucket_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    cand = bucket_pairs(banded, ["bucket_idx", "bucket"]).dropDuplicates(
+        ["id_a", "id_b"]
     )
+    return _cosine_verify(cand, base, threshold)
+
+
+def _cosine_verify(
+    cand: DataFrame, base: DataFrame, threshold: float
+) -> DataFrame:
+    """Join the vectors and norms of ``base`` (id, v, nrm) back onto
+    the ``(id_a, id_b)`` candidates and keep pairs with exact cosine
+    >= threshold: (id_a, id_b, cosine)."""
     va = base.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
@@ -180,27 +185,8 @@ def semantic_dedup(
         )
         .persist()
     )
-    a = base.select(F.col("id").alias("id_a"), "cell")
-    b = base.select(F.col("id").alias("id_b"), "cell")
-    cand = (
-        a.join(b, on="cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    va = base.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    vb = base.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    cos = dot_product(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    pairs = (
-        cand.join(va, on="id_a")
-        .join(vb, on="id_b")
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b")
-    )
+    cand = bucket_pairs(base, "cell")
+    pairs = _cosine_verify(cand, base, threshold).select("id_a", "id_b")
     comp = connected_components(pairs, "id_a", "id_b")
     all_ids = df.select(F.col(id_col).alias("id")).distinct()
     return (

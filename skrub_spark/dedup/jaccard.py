@@ -45,6 +45,7 @@ from ..functions.text import (
     distinct_shingles,
     word_shingles,
 )
+from .pairs import bucket_pairs
 
 
 def ngram_jaccard_pairs(
@@ -91,16 +92,9 @@ def ngram_jaccard_pairs(
     exploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
 
     if not prefix_filter:
-        a = exploded.select(
-            F.col("id").alias("id_a"), F.col("n_grams").alias("na"), "gram"
-        )
-        b = exploded.select(
-            F.col("id").alias("id_b"), F.col("n_grams").alias("nb"), "gram"
-        )
         inter = (
-            a.join(b, on="gram")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "na", "nb")
+            bucket_pairs(exploded, "gram", carry=["n_grams"])
+            .groupBy("id_a", "id_b", "n_grams_a", "n_grams_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
     else:
@@ -115,11 +109,11 @@ def ngram_jaccard_pairs(
             .join(gb, on=["id_b", "gram"])
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
-            .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_grams", "na"), on="id_a")
-            .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_grams", "nb"), on="id_b")
+            .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_grams", "n_grams_a"), on="id_a")
+            .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_grams", "n_grams_b"), on="id_b")
         )
     jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
+        F.col("n_grams_a") + F.col("n_grams_b") - F.col("n_inter")
     ).cast("double")
     return (
         inter.withColumn("jaccard", jac)
@@ -150,19 +144,12 @@ def _prefix_candidates(exploded: DataFrame, t: float) -> DataFrame:
     prefix = ranked.filter(F.col("pos") <= prefix_len).select(
         "id", "gram", "n_capped"
     )
-    a = prefix.select(
-        F.col("id").alias("id_a"), F.col("n_capped").alias("ca"), "gram"
-    )
-    b = prefix.select(
-        F.col("id").alias("id_b"), F.col("n_capped").alias("cb"), "gram"
-    )
     return (
-        a.join(b, on="gram")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(prefix, "gram", carry=["n_capped"])
         # size-ratio filter: J >= t implies min >= t * max
         .filter(
-            F.least("ca", "cb").cast("double")
-            >= F.lit(t) * F.greatest("ca", "cb").cast("double")
+            F.least("n_capped_a", "n_capped_b").cast("double")
+            >= F.lit(t) * F.greatest("n_capped_a", "n_capped_b").cast("double")
         )
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])

@@ -7,8 +7,8 @@ Physical plan (flat, scale-first — no giant nested expressions):
    ``min(xxhash64(gram, seed_k))`` aggregates (map-side partial agg,
    whole-stage codegen keeps the 64 mins in registers)
 3. band key b = variadic ``xxhash64(min_{b*r} .. min_{b*r+r-1}, b)``
-4. equi-join on (band_idx, band_key) → candidate pairs; bucket-size
-   cap guards boilerplate buckets going quadratic
+4. :func:`~.pairs.bucket_pairs` on (band_idx, band_key) → candidate
+   pairs; the bucket-size cap guards boilerplate buckets going quadratic
 5. exact Jaccard verify via gram co-occurrence counts restricted to
    candidate pairs — |∩| is a count, |∪| = n_a + n_b − |∩|; the
    gram sets themselves never travel through a join.
@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import MAX_GRAMS_PER_DOC, distinct_shingles, word_shingles
+from .pairs import bucket_pairs
 
 
 def _gram_rows(
@@ -137,46 +138,23 @@ def dedup_minhash_pairs(
             "band_idx", "band_key"
         ),
     )
-    # Within-bucket pairs in ONE shuffle: collect each bucket's members
-    # and expand ordered pairs JVM-side with nested `transform` — the
-    # former self-join + count-then-semi-join bucket cap cost three
-    # extra exchanges for the same result. The cap (and a >=2 floor)
-    # becomes a plain size() filter; collect_list stays bounded because
-    # capped buckets hold <= max_bucket (id, n_grams) structs.
-    members = F.array_sort(F.col("members"))
-    pair_structs = F.flatten(
-        F.transform(
-            members,
-            lambda x, i: F.transform(
-                F.slice(members, i + F.lit(2), F.size(members)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    cand = (
-        banded.groupBy("band_idx", "band_key")
-        .agg(F.collect_list(F.struct("id", "n_grams")).alias("members"))
-        .filter((F.size("members") >= 2) & (F.size("members") <= max_bucket))
-        .select(F.explode(pair_structs).alias("p"))
-        .select(
-            F.col("p.a.id").alias("id_a"),
-            F.col("p.b.id").alias("id_b"),
-            F.col("p.a.n_grams").alias("na"),
-            F.col("p.b.n_grams").alias("nb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # within-bucket pairs in ONE shuffle: the capped bucket_pairs form
+    # costs three fewer exchanges than a self-join plus a bucket count
+    cand = bucket_pairs(
+        banded, ["band_idx", "band_key"], carry=["n_grams"],
+        max_bucket=max_bucket,
+    ).dropDuplicates(["id_a", "id_b"])
     # exact verify: count co-occurring grams per candidate pair
     ga = grams.select(F.col("id").alias("id_a"), "gram")
     gb = grams.select(F.col("id").alias("id_b"), "gram")
     inter = (
         cand.join(ga, on="id_a")
         .join(gb, on=["id_b", "gram"])
-        .groupBy("id_a", "id_b", "na", "nb")
+        .groupBy("id_a", "id_b", "n_grams_a", "n_grams_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
+        F.col("n_grams_a") + F.col("n_grams_b") - F.col("n_inter")
     ).cast("double")
     return (
         inter.withColumn("jaccard", jac)

@@ -3,8 +3,8 @@
 64-bit simhash per document, then candidate generation by banding
 the fingerprint into b chunks — two documents within hamming
 distance (b-1) share at least one identical chunk (pigeonhole), so
-an equi-join on (chunk_idx, chunk_value) finds all such pairs
-without an O(n²) comparison.
+:func:`~.pairs.bucket_pairs` on (chunk_idx, chunk_value) finds all
+such pairs without an O(n²) comparison.
 
 Physical plan for the fingerprint: explode shingles → one groupBy
 with 64 plain ``sum(case getbit)`` aggregates → pack the sign bits.
@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hamming64
 from ..functions.text import word_shingles
+from .pairs import bucket_pairs
 
 
 def simhash_table(
@@ -106,17 +107,12 @@ def dedup_simhash_pairs(
             )
         ).alias("chunk_idx", "chunk_val"),
     )
-    a = chunks.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sim_a"), "chunk_idx", "chunk_val"
-    )
-    b = chunks.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sim_b"), "chunk_idx", "chunk_val"
-    )
     return (
-        a.join(b, on=["chunk_idx", "chunk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(chunks, ["chunk_idx", "chunk_val"], carry=["simhash"])
         .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", hamming64(F.col("sim_a"), F.col("sim_b")))
+        .withColumn(
+            "hamming", hamming64(F.col("simhash_a"), F.col("simhash_b"))
+        )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

@@ -18,6 +18,7 @@ from pyspark.sql.functions import broadcast
 
 from ..functions.text import char_ngrams
 from .components import connected_components
+from .pairs import bucket_pairs
 
 
 def deduplicate_strings(
@@ -38,25 +39,19 @@ def deduplicate_strings(
         F.array_distinct(char_ngrams(F.col(col), ngram)).alias("grams"),
     )
     expl = uniq.select("s", F.explode("grams").alias("gram"))
-    a = expl.select(F.col("s").alias("s_a"), "gram")
-    b = expl.select(F.col("s").alias("s_b"), "gram")
-    cand = (
-        a.join(b, on="gram")
-        .filter(F.col("s_a") < F.col("s_b"))
-        .dropDuplicates(["s_a", "s_b"])
-    )
-    ga = uniq.select(F.col("s").alias("s_a"), F.col("grams").alias("ga"))
-    gb = uniq.select(F.col("s").alias("s_b"), F.col("grams").alias("gb"))
+    cand = bucket_pairs(expl, "gram", id="s").dropDuplicates(["id_a", "id_b"])
+    ga = uniq.select(F.col("s").alias("id_a"), F.col("grams").alias("ga"))
+    gb = uniq.select(F.col("s").alias("id_b"), F.col("grams").alias("gb"))
     pairs = (
-        cand.join(ga, on="s_a")
-        .join(gb, on="s_b")
+        cand.join(ga, on="id_a")
+        .join(gb, on="id_b")
         .withColumn(
             "jac",
             F.size(F.array_intersect("ga", "gb")).cast("double")
             / F.greatest(F.size(F.array_union("ga", "gb")).cast("double"), F.lit(1.0)),
         )
         .filter(F.col("jac") >= similarity_threshold)
-        .select(F.col("s_a").alias("id_a"), F.col("s_b").alias("id_b"))
+        .select("id_a", "id_b")
     )
     comp = connected_components(pairs, "id_a", "id_b")  # (id=string, component)
     labeled = counts.join(
@@ -71,6 +66,53 @@ def deduplicate_strings(
         .select(col, out_col)
     )
     return df.join(broadcast(canon), on=col, how="left")
+
+
+def _blocked_candidates(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    col_a: str,
+    col_b: str,
+    block: str,
+    max_block: int,
+    op: str,
+) -> DataFrame:
+    """Distinct ``(name_a, name_b)`` pairs sharing a block key, for the
+    blocked string joins below: blocks holding more than ``max_block``
+    distinct names (over both sides) are dropped, and a self-join
+    (same frame and column twice) keeps ``name_a < name_b``."""
+    if block == "first_token":
+        bk = lambda c: F.split(F.lower(F.col(c)), r"\s+").getItem(0)  # noqa: E731
+    elif block == "prefix2":
+        bk = lambda c: F.substring(F.lower(F.col(c)), 1, 2)  # noqa: E731
+    else:
+        raise ValueError(f"{op}: unknown block {block!r}")
+    self_join = df_a is df_b and col_a == col_b
+    a = df_a.select(
+        F.col(col_a).alias("name_a"), bk(col_a).alias("__bk")
+    ).dropDuplicates(["name_a"])
+    b = df_b.select(
+        F.col(col_b).alias("name_b"), bk(col_b).alias("__bk")
+    ).dropDuplicates(["name_b"])
+    # Count DISTINCT names per block over the union of both sides —
+    # summing per-side rows would double-count shared names (a
+    # self-join block would be dropped at max_block/2), diverging
+    # from the documented "more than max_block distinct names" cap.
+    sizes = (
+        a.select("__bk", F.col("name_a").alias("__nm"))
+        .unionAll(b.select("__bk", F.col("name_b").alias("__nm")))
+        .groupBy("__bk")
+        .agg(F.countDistinct("__nm").alias("__bs"))
+    )
+    ok_blocks = sizes.filter(
+        F.col("__bs") <= int(max_block)
+    ).select("__bk")
+    cand = a.join(ok_blocks, "__bk", "left_semi").join(b, "__bk")
+    return cand.filter(
+        F.col("name_a") < F.col("name_b")
+        if self_join
+        else F.col("name_a") != F.col("name_b")
+    )
 
 
 def jaro_winkler_join(
@@ -97,47 +139,17 @@ def jaro_winkler_join(
     Catalyst shuffles/broadcasts like any other); the verify UDF
     touches candidate pairs only, and blocks holding more than
     ``max_block`` distinct names are DROPPED before the candidate
-    join (r10, VERDICT r9 #7 — the minhash ``max_bucket``
-    discipline: one hot block key must not reintroduce the
-    all-pairs quadratic; the skipped block is the documented recall
-    trade, same as a too-common LSH bucket). Blocking recall is the
+    join (the ``max_bucket`` cap of :func:`~.pairs.bucket_pairs`:
+    one hot block key must not reintroduce the all-pairs quadratic;
+    the skipped block is the documented recall trade, same as a
+    too-common LSH bucket). Blocking recall is the
     standard trade — a typo inside the block key misses the pair.
     Self-join: pass the same frame twice; the output keeps
     ``name_a < name_b`` then, dropping self/duplicate pairs."""
     from ..functions.text import jaro_winkler
 
-    if block == "first_token":
-        bk = lambda c: F.split(F.lower(F.col(c)), r"\s+").getItem(0)  # noqa: E731
-    elif block == "prefix2":
-        bk = lambda c: F.substring(F.lower(F.col(c)), 1, 2)  # noqa: E731
-    else:
-        raise ValueError(f"jaro_winkler_join: unknown block {block!r}")
-    self_join = df_a is df_b and col_a == col_b
-    a = df_a.select(
-        F.col(col_a).alias("name_a"), bk(col_a).alias("__bk")
-    ).dropDuplicates(["name_a"])
-    b = df_b.select(
-        F.col(col_b).alias("name_b"), bk(col_b).alias("__bk")
-    ).dropDuplicates(["name_b"])
-    # Count DISTINCT names per block over the union of both sides —
-    # summing per-side rows would double-count shared names (a
-    # self-join block would be dropped at max_block/2), diverging
-    # from the documented "more than max_block distinct names" cap
-    # (r10 advice item).
-    sizes = (
-        a.select("__bk", F.col("name_a").alias("__nm"))
-        .unionAll(b.select("__bk", F.col("name_b").alias("__nm")))
-        .groupBy("__bk")
-        .agg(F.countDistinct("__nm").alias("__bs"))
-    )
-    ok_blocks = sizes.filter(
-        F.col("__bs") <= int(max_block)
-    ).select("__bk")
-    cand = a.join(ok_blocks, "__bk", "left_semi").join(b, "__bk")
-    cand = cand.filter(
-        F.col("name_a") < F.col("name_b")
-        if self_join
-        else F.col("name_a") != F.col("name_b")
+    cand = _blocked_candidates(
+        df_a, df_b, col_a, col_b, block, max_block, "jaro_winkler_join"
     )
     return (
         cand.withColumn("jw", jaro_winkler("name_a", "name_b"))
@@ -171,35 +183,8 @@ def damerau_levenshtein_join(
 
     if int(max_dist) < 0:
         raise ValueError("damerau_levenshtein_join: max_dist must be >= 0")
-    if block == "first_token":
-        bk = lambda c: F.split(F.lower(F.col(c)), r"\s+").getItem(0)  # noqa: E731
-    elif block == "prefix2":
-        bk = lambda c: F.substring(F.lower(F.col(c)), 1, 2)  # noqa: E731
-    else:
-        raise ValueError(
-            f"damerau_levenshtein_join: unknown block {block!r}"
-        )
-    self_join = df_a is df_b and col_a == col_b
-    a = df_a.select(
-        F.col(col_a).alias("name_a"), bk(col_a).alias("__bk")
-    ).dropDuplicates(["name_a"])
-    b = df_b.select(
-        F.col(col_b).alias("name_b"), bk(col_b).alias("__bk")
-    ).dropDuplicates(["name_b"])
-    sizes = (
-        a.select("__bk", F.col("name_a").alias("__nm"))
-        .unionAll(b.select("__bk", F.col("name_b").alias("__nm")))
-        .groupBy("__bk")
-        .agg(F.countDistinct("__nm").alias("__bs"))
-    )
-    ok_blocks = sizes.filter(
-        F.col("__bs") <= int(max_block)
-    ).select("__bk")
-    cand = a.join(ok_blocks, "__bk", "left_semi").join(b, "__bk")
-    cand = cand.filter(
-        F.col("name_a") < F.col("name_b")
-        if self_join
-        else F.col("name_a") != F.col("name_b")
+    cand = _blocked_candidates(
+        df_a, df_b, col_a, col_b, block, max_block, "damerau_levenshtein_join"
     )
     # two cheap JVM-side prefilters BEFORE the Python verify, both
     # lossless: DL >= length difference, and DL <= k implies plain

@@ -14,8 +14,8 @@ resemblance washes out local copies.
 Shape at 100 TB: per-document position/hash rows (one explode), the
 window minimum over a PER-DOCUMENT frame bounded by document length
 (never corpus-wide), distinct selected fingerprints, and pair
-overlap as one equi-join on the 8-byte fingerprint hash with a
-``max_postings`` hot-hash guard — the same bucket-join discipline
+overlap from :func:`~.pairs.bucket_pairs` on the 8-byte fingerprint
+hash, with ``max_postings`` as its hot-bucket cap — the same kernel
 as minhash LSH, nothing pairwise.
 
 Hashes are the ENGINE-PORTABLE 60-bit md5 rule, the tie rule is the
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import word_shingles
 from ..session import fan_out
+from .pairs import bucket_pairs
 
 _WINNOW_SALT = "wn9|"
 
@@ -107,9 +108,9 @@ def winnowing_pairs(
     """Document pairs sharing at least ``min_shared`` selected
     fingerprint HASHES: ``(id_a, id_b, n_shared)`` with
     ``id_a < id_b``. ``max_postings`` drops fingerprints appearing
-    in more than that many documents before the self-join (the
-    minhash ``max_bucket`` quadratic guard — a boilerplate hash
-    shared by half the corpus must not join n² rows)."""
+    in more than that many documents (the ``max_bucket`` cap of
+    :func:`~.pairs.bucket_pairs` — a boilerplate hash shared by half
+    the corpus must not emit n² pairs)."""
     fps = (
         winnow_fingerprints(
             df, content_col, id_col, k=k, w=w, salt=salt
@@ -117,18 +118,8 @@ def winnowing_pairs(
         .select(id_col, "fp")
         .distinct()
     )
-    rare = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= int(max_postings))
-        .select("fp")
-    )
-    e = fps.join(rare, "fp", "left_semi")
-    a = e.select(F.col(id_col).alias("id_a"), "fp")
-    b = e.select(F.col(id_col).alias("id_b"), "fp")
     return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(fps, "fp", id=id_col, max_bucket=int(max_postings))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= int(min_shared))

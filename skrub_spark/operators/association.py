@@ -17,9 +17,10 @@ practice and the only one whose candidate space survives 100 TB):
    min support BEFORE the pair join (the A-priori downward-closure
    pruning — an infrequent item cannot be in a frequent pair), so
    the quadratic step only sees surviving items;
-4. pair candidates: basket self-join on the basket key with
-   ``item_a < item_b`` (each unordered pair once), counted by a
-   map-side-combined groupBy on the pair.
+4. pair candidates: :func:`~skrub_spark.dedup.pairs.bucket_pairs`
+   self-joins on the basket key with ``item_a < item_b`` (each
+   unordered pair once), counted by a map-side-combined groupBy on
+   the pair.
 
 The self-join is per-basket quadratic — bounded by stripping
 infrequent items first and, at web scale, by the same per-basket
@@ -38,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..dedup.pairs import bucket_pairs
 
 
 def association_rules(
@@ -84,12 +87,9 @@ def association_rules(
     kept = b.join(
         F.broadcast(freq.select("item")), "item"
     ).select("basket", "item")
-    left = kept.select("basket", F.col("item").alias("item_a"))
-    right = kept.select("basket", F.col("item").alias("item_b"))
     pairs = (
-        left.join(right, "basket")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
+        bucket_pairs(kept, "basket", id="item")
+        .groupBy(F.col("id_a").alias("item_a"), F.col("id_b").alias("item_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("pair_count"))
         .filter(F.col("pair_count") >= ms)
     )
@@ -187,11 +187,9 @@ def item_cooccurrence(
         F.col(basket_col).alias("b"), F.col(item_col).alias("i")
     ).distinct().persist()
     ic = bi.groupBy("i").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    right = bi.select(F.col("b"), F.col("i").alias("j"))
     pairs = (
-        bi.join(right, "b")
-        .filter(F.col("i") < F.col("j"))
-        .groupBy("i", "j")
+        bucket_pairs(bi, "b", id="i")
+        .groupBy(F.col("id_a").alias("i"), F.col("id_b").alias("j"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
         .filter(F.col("n_ab") >= int(min_pair_count))
     )

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..dedup.pairs import bucket_pairs
+
 
 def segment_bitmaps(
     df: DataFrame, segment_col: str, member_col: str
@@ -63,20 +65,11 @@ def audience_overlap(
     sizes = bm.groupBy("segment").agg(
         F.sum(F.bit_count("bits")).cast("long").alias("n")
     )
-    a = bm.select(
-        F.col("segment").alias("segment_a"),
-        "word",
-        F.col("bits").alias("bits_a"),
-    )
-    b = bm.select(
-        F.col("segment").alias("segment_b"),
-        "word",
-        F.col("bits").alias("bits_b"),
-    )
     inter = (
-        a.join(b, "word")
-        .filter(F.col("segment_a") < F.col("segment_b"))
-        .groupBy("segment_a", "segment_b")
+        bucket_pairs(bm, "word", id="segment", carry=["bits"])
+        .groupBy(
+            F.col("id_a").alias("segment_a"), F.col("id_b").alias("segment_b")
+        )
         .agg(
             F.sum(
                 F.bit_count(F.expr("bits_a & bits_b"))

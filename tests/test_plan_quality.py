@@ -265,6 +265,20 @@ def test_embedding_lsh_narrow_candidates(spark):
     assert "va" not in dedup_part.split("Join")[0]
 
 
+def test_winnowing_pairs_cap_inside_pair_step(spark):
+    """The ``max_postings`` cap is the size filter of the one-shuffle
+    bucket_pairs form: no per-fingerprint count joined back through
+    a semi-join, and no cartesian pair step."""
+    from skrub_spark.dedup.winnowing import winnowing_pairs
+    from skrub_spark.sources import load_table
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    plan = plan_of(winnowing_pairs(docs))
+    assert "LeftSemi" not in plan
+    assert "CartesianProduct" not in plan
+    assert "collect_list" in plan
+
+
 def test_boilerplate_removal_map_only(spark):
     """Boilerplate line removal is a pure map stage: zero exchanges,
     straight Project over the scan (the HOF lambdas themselves sit
