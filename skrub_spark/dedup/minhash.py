@@ -214,8 +214,9 @@ def minhash_buckets(
     # partial aggregation (the shuffle carries (id, h1, h2) rows,
     # combined to n_docs x n_components longs before the wire). The
     # per-row fold expression the streaming op uses is an interpreted
-    # HOF — right for an unshuffleable micro-batch, ~4x slower per
-    # byte here (8.3s -> measured below at sf0.1).
+    # HOF — right for an unshuffleable micro-batch, ~8x slower here:
+    # the 5000 sf0.1 documents on local[4] took 13.7 s to band through
+    # the fold against 1.7 s through this form, with identical buckets.
     p = F.lit(_MERSENNE_P).cast("long")
     grams = df.select(
         F.col(id_col),

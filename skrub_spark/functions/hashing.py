@@ -61,8 +61,12 @@ def minhash_from_grams(
     ``hash='md5'`` (default): double hashing h_k = (h1 + k·h2) mod
     2^31-1, with h1/h2 the two 60-bit halves of ONE md5 per gram —
     engine-portable (the DuckDB oracle replays signatures exactly)
-    and only one cryptographic hash per gram; the per-component work
-    is substr/conv arithmetic on the materialized hex string.
+    and only one cryptographic hash per gram. Each gram is hashed
+    once into ``named_struct(a=h1, b=h2)``; the fold's accumulator is
+    an n-field struct updated field by field, so a step allocates no
+    per-component arrays. Its lambdas are parsed SQL: one expression
+    build instead of a py4j call per node. An empty gram array gives
+    all 2^31-1, a null array null.
     ``hash='xxhash'``: n_components seeded xxhash64s per gram,
     full 64-bit range, Spark-only.
     """
@@ -77,21 +81,27 @@ def minhash_from_grams(
                 lambda a, b: F.least(a, b),
             ),
         )
-    p = F.lit(_MERSENNE_P).cast("long")
-    ks = F.sequence(F.lit(0).cast("long"), F.lit(n_components - 1).cast("long"))
-    # materialize the hex digest once per gram; the fold then only
-    # does substr/conv arithmetic per component (h1 + k*h2 < 2^37,
-    # safe under ANSI long math).
-    hexes = F.transform(grams, lambda g: F.md5(g))
-    init = F.array_repeat(p, n_components)
-
-    def _step(acc, m):
-        h1 = F.pmod(F.conv(F.substring(m, 1, 15), 16, 10).cast("long"), p)
-        h2 = F.pmod(F.conv(F.substring(m, 16, 15), 16, 10).cast("long"), p)
-        comps = F.transform(ks, lambda k: F.pmod(h1 + k * h2, p))
-        return F.zip_with(acc, comps, lambda a, b: F.least(a, b))
-
-    return F.aggregate(hexes, init, _step)
+    # h1 + k*h2 < (k + 1) * 2^31: safe under ANSI long math
+    p = f"CAST({_MERSENNE_P} AS BIGINT)"
+    half = "pmod(CAST(conv(substring(m, {}, 15), 16, 10) AS BIGINT), " + p + ")"
+    hs = F.call_function(
+        "transform",
+        F.transform(grams, lambda g: F.md5(g)),
+        F.expr(f"m -> named_struct('a', {half.format(1)}, 'b', {half.format(16)})"),
+    )
+    ks = range(n_components)
+    init = "named_struct(" + ", ".join(f"'c{k}', {p}" for k in ks) + ")"
+    step = ", ".join(
+        f"'c{k}', least(acc.c{k}, pmod(s.a + {k} * s.b, {p}))" for k in ks
+    )
+    finish = ", ".join(f"acc.c{k}" for k in ks)
+    return F.call_function(
+        "aggregate",
+        hs,
+        F.expr(init),
+        F.expr(f"(acc, s) -> named_struct({step})"),
+        F.expr(f"acc -> array({finish})"),
+    )
 
 
 def md5_band_keys(

@@ -2,9 +2,12 @@
 skrub/_table_vectorizer.py (Cleaner), _drop_uninformative.py,
 _drop_similar.py.
 
-All fit statistics come from ONE distributed aggregation pass over
-the table (per-column null counts, approx distinct, min/max) — no
-per-column jobs, no driver-side data."""
+Cleaner.fit runs three passes, none of them per column: a row count
+and a seeded sample agg that detect datetime/numeric strings, then
+DropUninformative's one agg of per-column null counts and approx
+distinct counts over the cleaned columns (kept as
+``approx_distinct_``, which TableVectorizer routes on). No
+driver-side data."""
 
 from __future__ import annotations
 
@@ -49,6 +52,7 @@ class DropUninformative(SparkTransformer):
             aggs.append(F.approx_count_distinct(c).alias(f"{c}__dist"))
         row = df.agg(*aggs).first()
         n = row["__n"]
+        self.approx_distinct_ = {c: row[f"{c}__dist"] for c in df.columns}
         self.drops_ = []
         for c, t in df.dtypes:
             nulls, dist = row[f"{c}__nulls"], row[f"{c}__dist"]
@@ -164,6 +168,8 @@ class Cleaner(SparkTransformer):
             drop_if_constant=self.drop_if_constant,
             drop_null_fraction=self.drop_null_fraction,
         ).fit(cleaned_df)
+        # approx distinct count of each cleaned column, kept or dropped
+        self.approx_distinct_ = self._drop.approx_distinct_
 
     def _clean_exprs(self, df: DataFrame) -> DataFrame:
         out = []

@@ -1,8 +1,8 @@
 """TableReport — parity with skrub/_reporting (TableReport).
 
 Per-column summary statistics computed in ONE distributed agg pass
-(+ one exploded-groupBy pass for ALL numeric histograms at once, one
-small pass for top string values, one `limit(n)` for the preview).
+(+ one exploded-groupBy pass for ALL top string values and numeric
+histograms at once, one `limit(n)` for the preview).
 Renders as a plain dict / JSON or a self-contained HTML document
 (the reference's flagship UX, skrub/_reporting/ — stat cards, bar
 distributions, sample rows, optional associations table). No
@@ -15,7 +15,7 @@ from __future__ import annotations
 import html as _html
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _NUMERIC = {"double", "float", "int", "bigint", "smallint", "tinyint"}
@@ -68,19 +68,8 @@ class TableReport:
             if f"{c}__q" in row and row[f"{c}__q"] is not None:
                 q = row[f"{c}__q"]
                 info["quantiles"] = {"25%": q[0], "50%": q[1], "75%": q[2]}
-            if t == "string" and n:
-                top = (
-                    df.groupBy(c)
-                    .count()
-                    .orderBy(F.col("count").desc(), F.col(c).asc())
-                    .limit(self.n_top_values)
-                    .collect()
-                )
-                info["top_values"] = [
-                    {"value": r[c], "count": r["count"]} for r in top
-                ]
             cols[c] = info
-        self._add_histograms(cols, row, dtypes)
+        self._add_cells(cols, row, dtypes)
         self._summary = {
             "title": self.title,
             "n_rows": n,
@@ -89,10 +78,17 @@ class TableReport:
         }
         return self._summary
 
-    def _add_histograms(self, cols: dict, stat_row: dict, dtypes: dict) -> None:
-        """Equal-width _N_BINS histograms for every numeric column in
-        ONE exploded groupBy (same single-job shape as
-        column_associations) — the collect is columns x bins cells."""
+    def _add_cells(self, cols: dict, stat_row: dict, dtypes: dict) -> None:
+        """Top values of every string column and equal-width _N_BINS
+        histograms of every numeric column in ONE exploded
+        ``groupBy(ci, k).count()``, where ``k`` is the value or the bin
+        as a string. Each column keeps its ``max(n_top_values, _N_BINS)``
+        highest-ranked cells (count desc, then ``k``); that single
+        ``rk <= K`` predicate lets Spark plan a partial top-K
+        (WindowGroupLimit) before the exchange, so no task sorts all of
+        a column's distinct values. The collect is columns x K cells;
+        string cells are trimmed to ``n_top_values`` here."""
+        strs = [c for c, t in dtypes.items() if t == "string" and stat_row["__n"]]
         num = [
             c
             for c, t in dtypes.items()
@@ -101,34 +97,48 @@ class TableReport:
             and stat_row.get(f"{c}__max") is not None
             and stat_row[f"{c}__max"] != stat_row[f"{c}__min"]
         ]
-        if not num:
+        if not strs and not num:
             return
-        structs = []
-        for i, c in enumerate(num):
+        structs = [
+            F.struct(F.lit(i).alias("ci"), F.col(c).alias("k"))
+            for i, c in enumerate(strs)
+        ]
+        bins = {}
+        for i, c in enumerate(num, start=len(strs)):
             mn = float(stat_row[f"{c}__min"])
-            mx = float(stat_row[f"{c}__max"])
-            w = (mx - mn) / _N_BINS
-            b = F.least(
-                F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(w)),
-                F.lit(_N_BINS - 1),
+            w = (float(stat_row[f"{c}__max"]) - mn) / _N_BINS
+            bins[i] = (c, mn, w)
+            # least() skips nulls: without the when, a null would count
+            # in the top bin
+            b = F.when(
+                F.col(c).isNotNull(),
+                F.least(
+                    F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(w)),
+                    F.lit(_N_BINS - 1),
+                ),
             )
-            structs.append(F.struct(F.lit(i).alias("ci"), b.alias("b")))
+            structs.append(F.struct(F.lit(i).alias("ci"), b.cast("string").alias("k")))
+        rank = Window.partitionBy("ci").orderBy(F.col("count").desc(), F.col("k"))
         cells = (
             self.df.select(F.explode(F.array(*structs)).alias("e"))
-            .where(F.col("e.b").isNotNull())
-            .groupBy("e.ci", "e.b")
+            # a null string is a top value, a null bin is no cell
+            .where(F.col("e.k").isNotNull() | (F.col("e.ci") < len(strs)))
+            .groupBy("e.ci", "e.k")
             .count()
+            .withColumn("rk", F.row_number().over(rank))
+            .where(F.col("rk") <= max(self.n_top_values, _N_BINS))
             .collect()
         )
-        hists: dict[int, list[int]] = {
-            i: [0] * _N_BINS for i in range(len(num))
-        }
-        for r in cells:
-            hists[r["ci"]][int(r["b"])] = r["count"]
-        for i, c in enumerate(num):
-            mn = float(stat_row[f"{c}__min"])
-            mx = float(stat_row[f"{c}__max"])
-            w = (mx - mn) / _N_BINS
+        top: dict[int, list] = {i: [] for i in range(len(strs))}
+        hists = {i: [0] * _N_BINS for i in bins}
+        for r in sorted(cells, key=lambda r: (r["ci"], r["rk"])):
+            if r["ci"] in top:
+                top[r["ci"]].append({"value": r["k"], "count": r["count"]})
+            else:
+                hists[r["ci"]][int(r["k"])] = r["count"]
+        for i, c in enumerate(strs):
+            cols[c]["top_values"] = top[i][: self.n_top_values]
+        for i, (c, mn, w) in bins.items():
             cols[c]["histogram"] = [
                 {"lo": mn + j * w, "hi": mn + (j + 1) * w, "count": hists[i][j]}
                 for j in range(_N_BINS)

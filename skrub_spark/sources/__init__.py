@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region",
@@ -22,6 +23,37 @@ TPCH_TABLES = (
     "lineitem",
 )
 ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
+
+# (realpath, st_mtime_ns, st_size, nanosAsLong conf) -> inferred schema
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring each file's schema once.
+
+    Parquet schema inference launches one Spark job per read; a
+    regular local file whose identity (real path, mtime, size) and
+    the nanos-as-long conf are unchanged is read with the schema
+    inferred the first time, which launches none. A rewrite at the
+    same path changes mtime or size and re-infers. Directories and
+    remote URIs always infer: a directory's mtime misses in-place
+    rewrites of its part files.
+    """
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (
+        os.path.realpath(path),
+        st.st_mtime_ns,
+        st.st_size,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -39,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
         dtype = dict(df.dtypes).get("ts")
         from pyspark.sql import functions as F
 
@@ -48,7 +80,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif dtype == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -13,9 +13,12 @@ Turns an arbitrary DataFrame into an all-numeric feature DataFrame:
   (MinHashEncoder default, like the reference's hashing-friendly
   option; StringEncoder/GapEncoder pluggable)
 
-The cardinality split mirrors skrub's (default threshold 40). One
-distributed agg decides the routing; the transform is a single
-select over the cleaned table plus whatever the encoders add.
+The cardinality split mirrors skrub's (default threshold 40). The
+routing reads the approx distinct counts of the Cleaner's
+DropUninformative pass (with ``clean=False``, one cardinality agg of
+its own); one more agg collects every one-hot vocabulary. The
+transform is a single select over the cleaned table plus whatever
+the encoders add.
 """
 
 from __future__ import annotations
@@ -65,16 +68,30 @@ class TableVectorizer(SparkTransformer):
 
         dtypes = dict(work.dtypes)
         str_cols = [
-            c for c, t in dtypes.items() if t == "string" and c not in self.passthrough
+            c
+            for c, t in dtypes.items()
+            if t == "string"
+            and c not in self.passthrough
+            and c not in self.specific_transformers
         ]
-        card = {}
-        if str_cols:
+        if self._cleaner:
+            card = self._cleaner.approx_distinct_
+        elif str_cols:
             row = work.agg(
                 *[F.approx_count_distinct(c).alias(c) for c in str_cols]
             ).first()
             card = {c: row[c] for c in str_cols}
-
+        else:
+            card = {}
+        one_hot = [c for c in str_cols if card[c] <= self.cardinality_threshold]
+        # collect_set drops nulls; array_sort is orderBy's binary order
         self._low_card: dict[str, list] = {}
+        if one_hot:
+            row = work.agg(
+                *[F.array_sort(F.collect_set(c)).alias(c) for c in one_hot]
+            ).first()
+            self._low_card = {c: list(row[c]) for c in one_hot}
+
         self._encoders: list[SparkTransformer] = []
         self._numeric_cols = []
         self._kind = {}
@@ -104,14 +121,8 @@ class TableVectorizer(SparkTransformer):
                 if hasattr(enc, "cols"):
                     enc.cols = [c]
                 self._encoders.append(enc.fit(work))
-            elif t == "string" and card.get(c, 1 << 30) <= self.cardinality_threshold:
+            elif c in self._low_card:
                 self._kind[c] = "one_hot"
-                vals = [
-                    r[0]
-                    for r in work.select(c).distinct().orderBy(c).collect()
-                    if r[0] is not None
-                ]
-                self._low_card[c] = vals
             elif t == "string":
                 self._kind[c] = "high_cardinality"
                 enc = (

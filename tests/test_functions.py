@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import functions as F
 
 from skrub_spark.functions.datetime import datetime_feature_columns
 from skrub_spark.functions.hashing import (
     hamming64,
     minhash_band_keys,
+    minhash_from_grams,
     minhash_signature,
     simhash64,
 )
@@ -97,6 +100,37 @@ def test_minhash_properties(spark):
     # deterministic
     out2 = {r["id"]: r["sig"] for r in df.select("id", minhash_signature(F.col("t"), 16).alias("sig")).collect()}
     assert out2 == sigs
+
+
+def _md5_minhash_ref(grams, n):
+    """Pure-Python double hashing over one md5 per gram:
+    h_k = (h1 + k*h2) mod 2^31-1, h1/h2 the hex digits 1-15 and 16-30."""
+    p = (1 << 31) - 1
+    sig = [p] * n
+    for g in grams:
+        m = hashlib.md5(g.encode()).hexdigest()
+        h1, h2 = int(m[:15], 16) % p, int(m[15:30], 16) % p
+        sig = [min(s, (h1 + k * h2) % p) for k, s in enumerate(sig)]
+    return sig
+
+
+def test_minhash_from_grams_matches_md5_reference(spark):
+    grams = [
+        ["ab", "bc", "cd"],
+        ["hé", "éllo", "日本", "本語"],
+        ["x"] * 5 + ["yz"],
+        [],
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(grams)), "id int, g array<string>")
+    for n in (1, 16):
+        got = dict(
+            df.select("id", minhash_from_grams(F.col("g"), n).alias("s")).collect()
+        )
+        for i, g in enumerate(grams):
+            assert got[i] == (None if g is None else _md5_minhash_ref(g, n))
+    assert got[3] == [(1 << 31) - 1] * 16
+    assert got[4] is None
 
 
 def test_minhash_band_keys(spark):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 import skrub_spark.selectors as s
 from skrub_spark import SkrubLearner, ToStr, var
 from skrub_spark.encoders.dtypes import DurationToFloat
-from skrub_spark.sources import read_csv, read_json, write_parquet
+from skrub_spark.sources import load_table, read_csv, read_json, write_parquet
 
 
 def test_parquet_roundtrip_partitioned(spark, tmp_path):
@@ -24,6 +24,35 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
     assert pruned.count() == 2
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
+
+
+def test_load_table_infers_each_file_schema_once(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    sc = spark.sparkContext
+
+    def load(group):
+        sc.setJobGroup(group, "count jobs")
+        try:
+            df = load_table(spark, str(tmp_path), "t")
+            return df, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    first, _ = load("load_first")
+    second, jobs = load("load_second")
+    assert jobs == 0
+    assert second.schema == first.schema
+    assert sorted(map(tuple, second.collect())) == [(1, "x"), (2, "y")]
+
+    # a rewrite at the same path with another schema is read as written
+    pq.write_table(pa.table({"c": [1.5], "d": [True], "e": ["z"]}), path)
+    third, _ = load("load_rewritten")
+    assert third.dtypes == [("c", "double"), ("d", "boolean"), ("e", "string")]
+    assert third.collect()[0]["e"] == "z"
 
 
 def test_read_csv_json(spark, tmp_path):

@@ -102,6 +102,57 @@ def test_table_report(spark):
     assert rep["columns"]["id"]["min"] == 1
 
 
+@pytest.mark.parametrize("n_top", [2, 3, 15])
+def test_table_report_top_values_and_bins(spark, n_top):
+    """Top values rank by count desc, then value with null first (ties
+    included); every histogram bin survives an n_top_values below or
+    above the bin count."""
+    cats = ["b"] * 3 + ["a"] * 3 + [None] * 3 + ["c"] * 2 + ["d"]
+    rows = [(c, float(i) if i % 4 else None) for i, c in enumerate(cats * 5)]
+    df = spark.createDataFrame(rows, "s string, x double")
+    rep = TableReport(df, n_top_values=n_top).summary()
+    ref = (
+        df.groupBy("s")
+        .count()
+        .orderBy(F.col("count").desc(), F.col("s").asc())
+        .limit(n_top)
+        .collect()
+    )
+    assert rep["columns"]["s"]["top_values"] == [
+        {"value": r["s"], "count": r["count"]} for r in ref
+    ]
+    assert rep["columns"]["s"]["top_values"][:2] == [
+        {"value": None, "count": 15},
+        {"value": "a", "count": 15},
+    ]
+    xs = [x for _, x in rows if x is not None]
+    lo, w = min(xs), (max(xs) - min(xs)) / 10
+    want = [0] * 10
+    for x in xs:
+        want[min(int((x - lo) // w), 9)] += 1
+    hist = rep["columns"]["x"]["histogram"]
+    assert [h["count"] for h in hist] == want
+    assert all(want)
+
+
+def test_table_report_cell_pass_plans_group_limit(spark, monkeypatch):
+    """The single ``rk <= K`` filter plans a partial top-K
+    (WindowGroupLimit) ahead of the exchange."""
+    df = spark.createDataFrame(
+        [(i, f"v{i % 7}") for i in range(50)], "x int, s string"
+    )
+    plans = []
+    collect = type(df).collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", recording_collect)
+    TableReport(df).summary()
+    assert any("WindowGroupLimit" in p for p in plans), plans
+
+
 def test_column_associations(spark):
     # y is a deterministic function of x -> V = 1; z independent-ish
     rows = [(i % 3, (i % 3) * 10, i % 2) for i in range(60)]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import skrub_spark.selectors as s
@@ -14,6 +15,7 @@ from skrub_spark import (
     ToFloat,
     tabular_pipeline,
 )
+from skrub_spark.table_vectorizer import _safe
 
 
 def _frame(spark):
@@ -101,3 +103,53 @@ def test_table_vectorizer_specific_transformers(spark):
     )
     out = tv.fit(df).transform(df)
     assert "seg_0" in out.columns and "seg_AUTO" not in out.columns
+
+
+def _fit_jobs(spark, tv, df, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count jobs")
+    try:
+        tv.fit(df)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+@pytest.mark.parametrize("clean", [True, False])
+def test_table_vectorizer_fit_jobs_flat_in_one_hot_columns(spark, clean):
+    """Every one-hot vocabulary comes from one agg: the fit's job count
+    must not grow with the number of one-hot columns."""
+    rows = [(i, *[f"v{(i + k) % 3}" for k in range(6)]) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "id int, " + ", ".join(f"s{k} string" for k in range(6))
+    )
+    one = _fit_jobs(
+        spark, TableVectorizer(clean=clean), df.select("id", "s0"), f"tv1_{clean}"
+    )
+    six = _fit_jobs(spark, TableVectorizer(clean=clean), df, f"tv6_{clean}")
+    assert six <= one, f"{six} fit jobs for 6 one-hot columns vs {one} for 1"
+
+
+@pytest.mark.parametrize("clean", [True, False])
+def test_table_vectorizer_vocabulary_matches_distinct_order_by(spark, clean):
+    """Vocabularies and feature names equal the per-column
+    ``distinct().orderBy()`` reference: nulls dropped, binary order over
+    mixed case and non-ASCII values."""
+    u = ["b", "B", "a", None, "é", "Z", "ä", "a b", "日本", "b", None, "Z"]
+    w = ["x", None, "X", "ß", "y", "x", "Ω", "y", "x", None, "ß", "X"]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(zip(u, w))],
+        "id int, u string, w string",
+    )
+    tv = TableVectorizer(clean=clean).fit(df)
+    names = tv.get_feature_names_out()
+    for c in ("u", "w"):
+        ref = [
+            r[0]
+            for r in df.select(c).distinct().orderBy(c).collect()
+            if r[0] is not None
+        ]
+        assert tv._low_card[c] == ref
+        assert [n for n in names if n.startswith(f"{c}_")] == [
+            f"{c}_{_safe(v)}" for v in ref
+        ]

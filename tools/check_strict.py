@@ -17,9 +17,11 @@ default query list = ``WINDOW``, the driver's 50-entry gate.
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = (

@@ -24,9 +24,11 @@ Sections:
 Usage: python tools/train_frozen.py [sf_dir]   (default sf0.01)
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np  # noqa: E402
 
@@ -446,7 +448,7 @@ def main():
     spark = get_session()
     spark.sparkContext.setLogLevel("ERROR")
 
-    path = "/root/repo/skrub_spark/_frozen.py"
+    path = os.path.join(ROOT, "skrub_spark", "_frozen.py")
 
     _ALL_MARKERS = (_LINKAGE_MARKER, _LID_MARKER, _GAP_MARKER,
                     _UNIGRAM_MARKER, _ALS_MARKER, _KN_MARKER)
@@ -590,7 +592,7 @@ GBT_CLASSIFIER = {gbt_clf!r}
 OPQ_MODEL = {opq!r}
 '''
     out += _linkage_section(linkage) + _lid_section(lid) + _gap_section(gap)
-    path = "/root/repo/skrub_spark/_frozen.py"
+    path = os.path.join(ROOT, "skrub_spark", "_frozen.py")
     with open(path, "w") as f:
         f.write(out)
     print(f"wrote {path}")
