@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import MAX_GRAMS_PER_DOC, distinct_shingles, word_shingles
+from ..session import fan_out
 
 
 def ngram_contamination(
@@ -58,15 +59,12 @@ def ngram_contamination(
     the output is bit-identical to ``bloom=False`` (asserted in
     tests/test_plan_quality.py) and the ``decontaminate`` battery
     oracle is unchanged."""
-    par = train.sparkSession.sparkContext.defaultParallelism
-
     def grams(df):
         return (
-            df.select(
+            fan_out(df.select(
                 F.col(id_col).alias("id"),
                 F.col(content_col).alias("__t"),
-            )
-            .repartition(par)
+            ))
             .select(
                 "id",
                 F.explode_outer(distinct_shingles(

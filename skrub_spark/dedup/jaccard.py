@@ -45,6 +45,7 @@ from ..functions.text import (
     distinct_shingles,
     word_shingles,
 )
+from ..session import fan_out
 from .pairs import bucket_pairs
 
 
@@ -66,10 +67,10 @@ def ngram_jaccard_pairs(
         prefix_filter = threshold >= 0.5
     def grams_expr_of(c):
         return word_shingles(c, n) if unit == "word" else char_ngrams(c, n)
-    par = df.sparkSession.sparkContext.defaultParallelism
     docs = (
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("__t"))
-        .repartition(par)
+        fan_out(
+            df.select(F.col(id_col).alias("id"), F.col(content_col).alias("__t"))
+        )
         .select("id", distinct_shingles(
             grams_expr_of(F.col("__t")), max_grams_per_doc
         ).alias("grams"))

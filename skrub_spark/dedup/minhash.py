@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import MAX_GRAMS_PER_DOC, distinct_shingles, word_shingles
+from ..session import fan_out
 from .pairs import bucket_pairs
 
 
@@ -38,10 +39,10 @@ def _gram_rows(
 ):
     # single-file inputs arrive as one partition; spread the (cheap)
     # id+text rows before the expensive shingling projection
-    par = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("__t"))
-        .repartition(par)
+        fan_out(
+            df.select(F.col(id_col).alias("id"), F.col(content_col).alias("__t"))
+        )
         .select("id", F.explode(distinct_shingles(
             word_shingles(F.col("__t"), shingle_k), max_grams_per_doc
         )).alias("gram"))

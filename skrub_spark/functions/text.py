@@ -18,10 +18,23 @@ from pyspark.sql import functions as F
 _WS = r"\s+"
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal, escaped for the parser."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# The higher-order-function lambdas below are parsed SQL
+# (``F.expr("t -> ...")``): a Python lambda builds its body one py4j
+# call per Column node, a parsed one costs a single call.
+_NONEMPTY = "t -> t != ''"
+
+
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens, empty strings removed."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.trim(c), _WS), lambda t: t != "")
+    return F.call_function(
+        "filter", F.split(F.trim(c), _WS), F.expr(_NONEMPTY)
+    )
 
 
 def _shifted_shingles(items: Column, k: int, sep: str) -> Column:
@@ -34,11 +47,13 @@ def _shifted_shingles(items: Column, k: int, sep: str) -> Column:
     n = F.size(items)
     width = n - (k - 1)
     out = F.slice(items, 1, width)
+    join = F.expr(
+        f"(a, b) -> concat(a, {sql_string(sep)}, b)" if sep
+        else "(a, b) -> concat(a, b)"
+    )
     for j in range(1, k):
-        out = F.zip_with(
-            out,
-            F.slice(items, j + 1, width),
-            lambda a, b: F.concat(a, F.lit(sep), b) if sep else F.concat(a, b),
+        out = F.call_function(
+            "zip_with", out, F.slice(items, j + 1, width), join
         )
     return F.when(n >= k, out).otherwise(F.array().cast("array<string>"))
 
@@ -74,7 +89,7 @@ def char_ngrams(col: Column | str, n: int, lowercase: bool = True) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     if lowercase:
         c = F.lower(c)
-    chars = F.filter(F.split(c, ""), lambda x: x != "")
+    chars = F.call_function("filter", F.split(c, ""), F.expr(_NONEMPTY))
     return _shifted_shingles(chars, n, "")
 
 
@@ -254,9 +269,10 @@ def rolling_fingerprint(
 def lines(col: Column | str) -> Column:
     """Non-empty trimmed lines as array<string>."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(
-        F.transform(F.split(c, r"\n"), lambda s: F.trim(s)),
-        lambda s: s != "",
+    return F.call_function(
+        "filter",
+        F.call_function("transform", F.split(c, r"\n"), F.expr("t -> trim(t)")),
+        F.expr(_NONEMPTY),
     )
 
 
@@ -265,8 +281,8 @@ def words_az09(col: Column | str) -> Column:
     regex is RE2-compatible so a DuckDB oracle can replay it
     exactly."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(
-        F.split(F.lower(c), r"[^a-z0-9]+"), lambda t: t != ""
+    return F.call_function(
+        "filter", F.split(F.lower(c), r"[^a-z0-9]+"), F.expr(_NONEMPTY)
     )
 
 

@@ -16,10 +16,11 @@ trick. Spark-first realization:
   the n_features log-ratio vector, corpus-independent. Laplace
   smoothing keeps unseen buckets finite.
 - :func:`dsir_log_weight` — corpus-scale scoring with a FROZEN
-  ratio vector: one token explode, one (id, bucket) partial-agg,
-  one broadcast join against the n_features-row ratio table, one
-  per-doc sum. Pure md5/double arithmetic → with literal ratios the
-  whole pass is exact SQL (battery query ``dsir_weights``).
+  ratio vector, map-only: one in-row fold over each document's unit
+  array sums the ratios looked up in a constant-folded literal
+  table (no exchange, no join). Pure md5/double arithmetic → with
+  literal ratios the whole pass is exact SQL (battery query
+  ``dsir_weights``).
 - :func:`dsir_resample` — Gumbel-top-k: key = logw + Gumbel(0,1)
   with the Gumbel drawn from the CONTENT-ADDRESSED md5 uniform
   (same rule as every sampler in this repo), so the "random" draw
@@ -29,9 +30,10 @@ trick. Spark-first realization:
   k rows.
 
 At 100 TB: fit touches the corpus once with an n_features-bounded
-shuffle; scoring is the same map-shaped pass as
-``score_quality``; resampling adds one map-only key column and a
-top-k. Nothing driver-side scales with the corpus.
+shuffle; scoring is the same map-only fold as ``score_quality``
+(one helper, one unit rule, one bucket rule); resampling adds one
+map-only key column and a top-k. Nothing driver-side scales with
+the corpus.
 
 Reference parity: skrub has no data-selection operator; this is a
 beyond-reference operator specified by the brief's training-data
@@ -46,21 +48,10 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens, word_shingles
-from .quality_classifier import feature_bucket
+from .quality_classifier import _unit_fold, bucket_sql, units
 from .sampling import _FINE_BUCKETS, _hash_bucket
 
 _DEFAULT_SALT = "dsir|"
-
-
-def _units(content_col: str, bigrams: bool) -> Column:
-    """Lowercased unigram (+ word-bigram) units — the same unit rule
-    as hashed_text_features, kept in one place so fit and score
-    can never drift."""
-    u = F.transform(tokens(F.col(content_col)), lambda t: F.lower(t))
-    if bigrams:
-        u = F.concat(u, word_shingles(F.col(content_col), 2))
-    return u
 
 
 def _bucket_counts(
@@ -69,8 +60,8 @@ def _bucket_counts(
     """Total unit count per hashed bucket — ≤ n_features rows ever
     reach the driver."""
     rows = (
-        df.select(F.explode(_units(content_col, bigrams)).alias("u"))
-        .select(feature_bucket(F.col("u"), n_features, salt).alias("bucket"))
+        df.select(F.explode(units(F.col(content_col), bigrams)).alias("u"))
+        .select(F.expr(bucket_sql("u", n_features, salt)).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
@@ -117,42 +108,20 @@ def dsir_log_weight(
     df: DataFrame,
     model: dict,
     content_col: str = "text",
-    id_col: str = "doc_id",
     weight_col: str = "dsir_logw",
 ) -> DataFrame:
     """Adds ``weight_col`` = Σ over units of log_ratios[bucket(unit)]
     (the document's log importance weight under the bag-of-hashed-
     n-grams model), ROUNDED to 6dp so the double sum is engine-
-    portable. Zero-unit docs get 0.0 — every input row survives.
-
-    ONE explode, ONE map-side-combined per-doc sum: the 256-entry
-    ratio vector rides as a constant-folded literal array indexed by
-    ``element_at`` (no join, no second shuffle — the weight-table
-    BROADCAST join the quality classifier uses is already optimal at
-    corpus scale, but a frozen vector this small is cheaper still as
-    plan constant). Built as one ``F.expr`` string: 256 per-element
-    ``F.lit`` calls would cost a py4j round-trip each."""
-    arr = F.expr(
-        "array(" + ",".join(
-            f"CAST({float(x)!r} AS DOUBLE)" for x in model["log_ratios"]
-        ) + ")"
+    portable. Zero-unit and null documents get 0.0 — every input row
+    survives. Map-only: the same in-row fold as
+    :func:`~.quality_classifier.score_quality`, with the 256-entry
+    ratio vector as the lookup table."""
+    logw = _unit_fold(
+        F.col(content_col), model, "log_ratios", _DEFAULT_SALT, mean=False
     )
-    b = feature_bucket(
-        F.col("__u"), model["n_features"], model.get("salt", _DEFAULT_SALT)
-    )
-    logw = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(_units(content_col, model["bigrams"])).alias("__u"),
-        )
-        .select("id", F.element_at(arr, (b + F.lit(1)).cast("int")).alias("__lr"))
-        .groupBy("id")
-        .agg(F.round(F.sum("__lr"), 6).alias("__logw"))
-    )
-    return (
-        df.join(logw.withColumnRenamed("id", id_col), id_col, "left")
-        .withColumn(weight_col, F.coalesce("__logw", F.lit(0.0)))
-        .drop("__logw")
+    return df.withColumn(
+        weight_col, F.coalesce(F.round(logw, 6), F.lit(0.0))
     )
 
 
@@ -188,7 +157,7 @@ def dsir_resample(
     (distributed TakeOrdered — orderBy + limit plans as a per-
     partition top-k merge, never a full sort). Deterministic: ties
     (6dp-rounded keys CAN collide) break on ``id_col``."""
-    scored = dsir_log_weight(df, model, content_col, id_col)
+    scored = dsir_log_weight(df, model, content_col)
     keyed = scored.withColumn(
         key_col,
         F.round(gumbel_key(F.col(id_col), F.col("dsir_logw"), salt), 6),

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import char_ngrams
-from .quality_classifier import feature_bucket
+from .quality_classifier import bucket_sql
 
 _LID_SALT = "lid1|"
 
@@ -102,9 +102,7 @@ def hashed_char_features(
     return (
         fan_out(df.select(F.col(id_col).alias("id"), F.col(content_col)))
         .select(F.col("id"), F.explode(grams).alias("g"))
-        .select(
-            "id", feature_bucket(F.col("g"), n_features, salt).alias("bucket")
-        )
+        .select("id", F.expr(bucket_sql("g", n_features, salt)).alias("bucket"))
         .groupBy("id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -9,18 +9,21 @@ and the frozen model then scores the full corpus map-side. This
 module provides that loop Spark-first:
 
 - :func:`hashed_text_features` — hashed unigram+bigram counts. The
-  bucket hash is the ENGINE-PORTABLE md5 rule shared with the
-  samplers (``conv(substring(md5(salt||unit),1,15),16,10) mod
-  n_features``), so a SQL oracle replays every bucket exactly.
+  unit rule (lowercased whitespace tokens plus word bigrams) and the
+  bucket hash, the ENGINE-PORTABLE md5 rule shared with the samplers
+  (``conv(substring(md5(salt||unit),1,15),16,10) mod n_features``),
+  are defined once here for fitting and scoring, and DSIR uses the
+  same two; a SQL oracle replays every bucket exactly.
 - :func:`fit_quality_classifier` — distributed MLlib
   LogisticRegression over per-doc tf vectors (features are built
   JVM-side: map_from_entries + a dense transform; no Python in the
   feature path). Fit runs on the LABELED sample — bounded by the
   teacher's budget, not the corpus — exactly as FineWeb-Edu trains
   on ~500k annotated pages, never the full crawl.
-- :func:`score_quality` — corpus-scale scoring with FROZEN weights:
-  one explode + one (id, bucket) map-side-combined aggregation +
-  one broadcast join against the n_features-row weight table.
+- :func:`score_quality` — corpus-scale scoring with FROZEN weights,
+  map-only: one in-row fold over each document's unit array looks
+  every unit's weight up in a constant-folded literal table, so the
+  pass has no exchange and no join (:func:`quality_score_column`).
   ``score = sigmoid(bias + mean(weight[bucket(unit)]))`` is pure
   arithmetic, so with literal weights the whole pass is exact SQL
   (battery query ``quality_classifier_scores``) and feeds
@@ -38,21 +41,57 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens, word_shingles
+from ..functions.text import sql_string, tokens, word_shingles
 
 _DEFAULT_SALT = "qc1|"
 
 
-def feature_bucket(unit: Column, n_features: int, salt: str = _DEFAULT_SALT) -> Column:
-    """Stable, engine-portable feature bucket in [0, n_features):
-    60 md5 bits -> mod n_features (same construction as
-    ``sampling._hash_bucket``; DuckDB replays it as
-    ``('0x' || substr(md5(salt || u), 1, 15))::BIGINT % n``)."""
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), unit)), 1, 15), 16, 10
-        ).cast("long"),
-        F.lit(int(n_features)),
+def units(col: Column, bigrams: bool) -> Column:
+    """A document's feature units: lowercased whitespace tokens, then
+    its lowercased word bigrams when ``bigrams``."""
+    u = F.call_function("transform", tokens(col), F.expr("t -> lower(t)"))
+    if bigrams:
+        u = F.concat(u, word_shingles(col, 2))
+    return u
+
+
+def bucket_sql(unit: str, n_features: int, salt: str = _DEFAULT_SALT) -> str:
+    """SQL for the stable, engine-portable feature bucket of the SQL
+    expression ``unit`` in [0, n_features): 60 md5 bits -> mod
+    n_features (same construction as ``sampling._hash_bucket``;
+    DuckDB replays it as ``('0x' || substr(md5(salt || u), 1, 15))
+    ::BIGINT % n``)."""
+    return (
+        f"pmod(CAST(conv(substring(md5(concat({sql_string(salt)}, {unit})),"
+        f" 1, 15), 16, 10) AS BIGINT), {int(n_features)})"
+    )
+
+
+def _unit_fold(
+    col: Column, model: dict, table: str, salt: str, mean: bool
+) -> Column:
+    """Sum of ``model[table][bucket(u)]`` over the units of ``col``
+    (their mean when ``mean``; 0.0 for a document without units), in
+    one in-row fold with an ``(s, n)`` struct accumulator: the units
+    are built once and nothing leaves the row. The table rides as a
+    constant-folded literal array; null text gives null."""
+    arr = "array(" + ",".join(
+        f"CAST({float(w)!r} AS DOUBLE)" for w in model[table]
+    ) + ")"
+    b = bucket_sql("u", model["n_features"], model.get("salt", salt))
+    finish = (
+        "CASE WHEN acc.n > 0 THEN acc.s / CAST(acc.n AS DOUBLE)"
+        " ELSE CAST(0 AS DOUBLE) END" if mean else "acc.s"
+    )
+    return F.call_function(
+        "aggregate",
+        units(col, model["bigrams"]),
+        F.expr("named_struct('s', CAST(0 AS DOUBLE), 'n', 0)"),
+        F.expr(
+            f"(acc, u) -> named_struct('s', acc.s + element_at({arr},"
+            f" CAST({b} + 1 AS INT)), 'n', acc.n + 1)"
+        ),
+        F.expr(f"acc -> {finish}"),
     )
 
 
@@ -66,18 +105,17 @@ def hashed_text_features(
     salt: str = _DEFAULT_SALT,
 ) -> DataFrame:
     """Hashed n-gram counts: one row per (doc, bucket) with the count
-    of lowercased whitespace unigrams (and word bigrams when
-    ``bigrams``) hashing into that bucket. The explode + groupBy is
-    map-side combined; nothing leaves the JVM. (r10 note: a
-    fan_out here was measured NET-NEGATIVE — unigram+bigram md5
+    of the :func:`units` hashing into that bucket. The explode +
+    groupBy is map-side combined; nothing leaves the JVM. (r10 note:
+    a fan_out here was measured NET-NEGATIVE — unigram+bigram md5
     work per doc is too small to amortize the extra shuffle, unlike
     the char-trigram pipeline in operators/language_id.py.)"""
-    units = F.transform(tokens(F.col(content_col)), lambda t: F.lower(t))
-    if bigrams:
-        units = F.concat(units, word_shingles(F.col(content_col), 2))
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(units).alias("u"))
-        .select("id", feature_bucket(F.col("u"), n_features, salt).alias("bucket"))
+        df.select(
+            F.col(id_col).alias("id"),
+            F.explode(units(F.col(content_col), bigrams)).alias("u"),
+        )
+        .select("id", F.expr(bucket_sql("u", n_features, salt)).alias("bucket"))
         .groupBy("id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -159,38 +197,18 @@ def fit_quality_classifier(
 def quality_score_column(
     model: dict, content_col: str = "text"
 ) -> Column:
-    """The frozen-model quality score as a PURE Column — the
-    per-unit weight lookup and mean run inside the row (F.aggregate
-    over the unit array, weights as a constant-folded literal
-    array), so there is no groupBy/join at all. This is the form
-    that runs unchanged inside Structured Streaming (stateless map;
-    battery query ``streaming_quality_gate``) and the cheapest batch
-    shape for pipelines that already carry the text column. Same
-    arithmetic as :func:`score_quality` — identical scores after the
-    battery queries' 6dp round (the in-row sum orders additions
-    sequentially; the groupBy form orders them by shuffle)."""
-    units = F.transform(tokens(F.col(content_col)), lambda t: F.lower(t))
-    if model["bigrams"]:
-        units = F.concat(units, word_shingles(F.col(content_col), 2))
-    warr = F.expr(
-        "array(" + ",".join(
-            f"CAST({float(w)!r} AS DOUBLE)" for w in model["weights"]
-        ) + ")"
+    """The frozen-model quality score as a pure Column:
+    ``sigmoid(bias + mean over units of weights[bucket(unit)])``,
+    with the weight lookup and the mean in one in-row fold over the
+    unit array. A stateless map, so it also runs unchanged inside
+    Structured Streaming (battery query ``streaming_quality_gate``).
+    Zero-unit and null documents score ``sigmoid(bias)``, the
+    empty-feature margin. The mean (not the sum) keeps the margin
+    length-invariant, the same tf normalization the fit used."""
+    mean = _unit_fold(
+        F.col(content_col), model, "weights", _DEFAULT_SALT, mean=True
     )
-    n_feat = int(model["n_features"])
-    salt = model.get("salt", _DEFAULT_SALT)
-    total = F.aggregate(
-        units,
-        F.lit(0.0),
-        lambda acc, u: acc
-        + F.element_at(
-            warr, (feature_bucket(u, n_feat, salt) + F.lit(1)).cast("int")
-        ),
-    )
-    n = F.size(units)
-    margin = F.lit(float(model["bias"])) + F.when(
-        n > 0, total / n.cast("double")
-    ).otherwise(F.lit(0.0))
+    margin = F.lit(float(model["bias"])) + F.coalesce(mean, F.lit(0.0))
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
 
 
@@ -198,47 +216,10 @@ def score_quality(
     df: DataFrame,
     model: dict,
     content_col: str = "text",
-    id_col: str = "doc_id",
     score_col: str = "quality_score",
 ) -> DataFrame:
     """Score every document with a frozen model: adds ``score_col`` =
-    ``sigmoid(bias + mean over units of weights[bucket(unit)])``.
-
-    The 100 TB path: one token explode, one map-side-combined
-    (id, bucket) aggregation, one BROADCAST join against the
-    n_features-row weight table, one per-doc aggregation — no
-    Python, no driver data. Zero-unit docs score ``sigmoid(bias)``
-    (the empty-feature margin), so every input row survives with a
-    score. Mean (not sum) of unit weights keeps the margin
-    length-invariant — the same tf normalization the fit used."""
-    feats = hashed_text_features(
-        df, content_col, id_col,
-        n_features=model["n_features"], bigrams=model["bigrams"],
-        salt=model.get("salt", _DEFAULT_SALT),
-    )
-    spark = df.sparkSession
-    wt = spark.createDataFrame(
-        [(i, float(w)) for i, w in enumerate(model["weights"])],
-        "bucket long, w double",
-    )
-    dots = (
-        feats.join(F.broadcast(wt), "bucket", "left")
-        .groupBy("id")
-        .agg(
-            (
-                F.sum(F.col("cnt") * F.coalesce("w", F.lit(0.0)))
-                / F.sum("cnt")
-            ).alias("__dot")
-        )
-    )
-    margin = F.lit(float(model["bias"])) + F.coalesce(
-        F.col("__dot"), F.lit(0.0)
-    )
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-    return (
-        df.join(
-            dots.withColumnRenamed("id", id_col), id_col, "left"
-        )
-        .withColumn(score_col, score)
-        .drop("__dot")
-    )
+    :func:`quality_score_column`. Map-only: no exchange, no join, no
+    Python, no driver data; every input row keeps its place and gets
+    a score."""
+    return df.withColumn(score_col, quality_score_column(model, content_col))

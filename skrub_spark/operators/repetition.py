@@ -27,59 +27,46 @@ from pyspark.sql import functions as F
 from ..functions.text import lines, words_az09
 
 
+# The scans' lambdas are parsed SQL: one py4j call each, where the
+# Python-composed struct steps cost one per Column node.
+_SAME = "acc.run > 0 AND x = acc.prev"
+_RUN = f"CASE WHEN {_SAME} THEN acc.run + 1 ELSE 1 END"
+
+
 def _line_run_scan(arr: Column) -> Column:
     """Scan sorted lines, counting distinct values and characters
     inside duplicated values: a run of length c>1 contributes
     c*length(line) to ``dup`` (the first repeat retroactively adds
     the run head's chars)."""
-
-    def step(acc: Column, x: Column) -> Column:
-        same = (acc["run"] > 0) & (x == acc["prev"])
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            (acc["nd"] + F.when(same, F.lit(0)).otherwise(F.lit(1))).alias(
-                "nd"
-            ),
-            (
-                acc["dup"]
-                + F.when(
-                    same,
-                    F.when(acc["run"] == 1, F.length(x) * 2).otherwise(
-                        F.length(x)
-                    ).cast("long"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("dup"),
-        )
-
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("nd"),
-        F.lit(0).cast("long").alias("dup"),
+    return F.call_function(
+        "aggregate",
+        F.array_sort(arr),
+        F.expr(
+            "named_struct('prev', CAST(NULL AS STRING), 'run', 0, 'nd', 0,"
+            " 'dup', CAST(0 AS BIGINT))"
+        ),
+        F.expr(
+            f"(acc, x) -> named_struct('prev', x, 'run', {_RUN},"
+            f" 'nd', acc.nd + CASE WHEN {_SAME} THEN 0 ELSE 1 END,"
+            f" 'dup', acc.dup + CASE WHEN {_SAME} THEN CAST(CASE WHEN"
+            " acc.run = 1 THEN length(x) * 2 ELSE length(x) END AS BIGINT)"
+            " ELSE CAST(0 AS BIGINT) END)"
+        ),
     )
-    return F.aggregate(F.array_sort(arr), init, step)
 
 
 def _top_run_scan(arr: Column) -> Column:
     """Longest equal-value run in a sorted array = the max
     occurrence count of any value."""
-
-    def step(acc: Column, x: Column) -> Column:
-        same = (acc["run"] > 0) & (x == acc["prev"])
-        run = F.when(same, acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-        )
-
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
+    return F.call_function(
+        "aggregate",
+        F.array_sort(arr),
+        F.expr("named_struct('prev', CAST(NULL AS STRING), 'run', 0, 'best', 0)"),
+        F.expr(
+            f"(acc, x) -> named_struct('prev', x, 'run', {_RUN},"
+            f" 'best', greatest(acc.best, {_RUN}))"
+        ),
     )
-    return F.aggregate(F.array_sort(arr), init, step)
 
 
 def repetition_stats(
@@ -121,8 +108,9 @@ def repetition_stats(
         F.col(id_col),
         F.size(ls).cast("long").alias("n_lines"),
         _line_run_scan(ls).alias("__l"),
-        F.aggregate(
-            ls, F.lit(0).cast("long"), lambda a, x: a + F.length(x)
+        F.call_function(
+            "aggregate", ls, F.expr("CAST(0 AS BIGINT)"),
+            F.expr("(acc, x) -> acc + length(x)"),
         ).alias("__tot_chars"),
         F.size(ws).cast("long").alias("n_words"),
         _top_run_scan(ws)["best"].cast("long").alias("__top_c"),

@@ -3334,9 +3334,10 @@ def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r6 #1 — the FineWeb-Edu distillation shape): a hashed-
     unigram logistic regression (trained by tools/train_frozen.py
     against the stopword-ratio teacher, 0.99 held-out accuracy) is
-    replayed map-side over the corpus — one token explode, one
-    broadcast join against the 256-row weight table, one per-doc
-    mean, a sigmoid. With literal weights the whole pass is
+    replayed map-only over the corpus — one in-row fold per document
+    looks each unit's weight up in the 256-entry literal table and
+    takes the mean, then a sigmoid; no exchange, no join. With
+    literal weights the whole pass is
     md5/double arithmetic, so the DuckDB oracle replays every score
     to 6dp; the keep flag thresholds the ROUNDED score on both
     sides. The FIT is rows-only by nature (MLlib LBFGS) and carries
@@ -3418,13 +3419,13 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage): every document's log importance weight under the FROZEN
     hashed-n-gram model (target = the English slice, raw = the whole
     corpus, trained by tools/train_frozen.py). Scoring is the same
-    100 TB map shape as the quality classifier — one unigram+bigram
-    explode, one map-side-combined (id, bucket) agg, one broadcast
-    join against the 256-row log-ratio table, one per-doc sum. With
+    map-only fold as the quality classifier — one in-row pass over
+    each document's unigram+bigram units sums their entries of the
+    256-entry literal log-ratio table; no exchange, no join. With
     literal ratios the whole pass is md5/double arithmetic: the
     DuckDB oracle replays every weight to 6dp. The FIT is a bounded
     two-pass count (rows-only by nature) contracted in
-    tests/test_dsir.py."""
+    tests/test_r8_ops.py."""
     _prep(spark)
     from ._frozen import DSIR_MODEL
     from .operators.dsir import dsir_log_weight

@@ -10,6 +10,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Defaults sized for the local test harness; on a real cluster the
 # caller overrides shuffle partitions to ~2-3x total cores.
 _DEFAULTS = {
@@ -142,6 +144,13 @@ def get_session(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
     if extra_conf:
         conf.update(extra_conf)
+    # Python-UDF workers unpickle functions of this package by module
+    # name, so they must import it even when the caller reached it
+    # only through sys.path: put its parent directory first on their path.
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get(key)) if p
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import hashlib
+import re
 
 from pyspark.sql import functions as F
 
@@ -17,10 +18,12 @@ from skrub_spark.functions.hashing import (
 from skrub_spark.functions.text import (
     char_ngrams,
     language_id,
+    lines,
     quality_columns,
     rolling_fingerprint,
     tokens,
     word_shingles,
+    words_az09,
 )
 from skrub_spark.functions.vector import cosine_similarity, vector_literal
 
@@ -44,6 +47,69 @@ def test_tokens_and_ngrams(spark):
     assert rows[2]["ng"] == []  # shorter than n
     assert rows[3]["toks"] == []
     assert rows[3]["sh"] == []
+
+
+_JAVA_WS = r"[ \t\n\x0b\f\r]+"  # Java regex \s
+
+
+def _tokens_ref(s):
+    return None if s is None else [t for t in re.split(_JAVA_WS, s) if t]
+
+
+def _shingles_ref(items, k, sep):
+    if len(items) < k:
+        return []
+    return [sep.join(items[i:i + k]) for i in range(len(items) - k + 1)]
+
+
+_TEXT_CASES = [
+    None,
+    "",
+    "   ",
+    " \t\n ",
+    "a",
+    "  hello   world  again ",
+    "one two  three   four",
+    "Ünïcödé CAFÉ naïve Жук 日本語",
+    "line one \n\n  Line Two\t\n line one\r\n x-y_z 42b",
+]
+
+
+def test_text_helpers_match_python_reference(spark):
+    """tokens, word_shingles (k = 2, 3), char_ngrams, lines and
+    words_az09 against Python references on null, empty,
+    whitespace-only, multi-space and unicode strings. A null string
+    gives null tokens/lines/words but empty shingle and n-gram
+    arrays (their size guard reads a null size as "too short")."""
+    df = spark.createDataFrame(list(enumerate(_TEXT_CASES)), "id int, t string")
+    cols = {
+        "toks": tokens("t"),
+        "sh2": word_shingles("t", 2),
+        "sh3": word_shingles("t", 3),
+        "ng3": char_ngrams("t", 3),
+        "lines": lines("t"),
+        "az09": words_az09("t"),
+    }
+    got = {
+        r["id"]: r.asDict()
+        for r in df.select("id", *[c.alias(k) for k, c in cols.items()]).collect()
+    }
+    for i, s in enumerate(_TEXT_CASES):
+        low = None if s is None else s.lower()
+        want = {
+            "toks": _tokens_ref(s),
+            "sh2": _shingles_ref(_tokens_ref(low) or [], 2, " "),
+            "sh3": _shingles_ref(_tokens_ref(low) or [], 3, " "),
+            "ng3": _shingles_ref(list(low or ""), 3, ""),
+            "lines": None if s is None else [
+                ln.strip(" ") for ln in s.split("\n") if ln.strip(" ")
+            ],
+            "az09": None if s is None else [
+                t for t in re.split("[^a-z0-9]+", low) if t
+            ],
+        }
+        for k, v in want.items():
+            assert got[i][k] == v, (s, k, got[i][k], v)
 
 
 def test_char_ngrams_content(spark):

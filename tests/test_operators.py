@@ -238,6 +238,47 @@ def test_reliable_checkpoint_matches_local(spark, tmp_path):
     assert written, "reliable path wrote no checkpoint files"
 
 
+_WORKER_PATH_CHILD = """
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from skrub_spark import get_session
+from skrub_spark.operators.html_extract import html_extract
+
+spark = get_session(app_name="worker_path", master="local[1]", shuffle_partitions=1)
+page = "<html><head><title>t{}</title></head><body><p>{}</p></body></html>"
+df = spark.createDataFrame(
+    [(i, page.format(i, "word " * 30)) for i in range(3)], "id long, content string"
+)
+print(sorted((r["id"], r["title"]) for r in html_extract(df).collect()))
+"""
+
+
+def test_python_workers_import_package_reached_through_sys_path(tmp_path):
+    """A process that reaches the package only through ``sys.path``
+    (another working directory, no PYTHONPATH) still runs an operator
+    whose Python workers import it: ``get_session`` puts the
+    package's parent directory on the workers' path."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    res = subprocess.run(
+        [sys.executable, "-c", _WORKER_PATH_CHILD, repo],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    got = res.stdout.strip().splitlines()[-1]
+    assert got == "[(0, 't0'), (1, 't1'), (2, 't2')]"
+
+
 def test_fingerprint_distinguishes_equal_count_sets(spark):
     """Adversarial fingerprint check: equal-count edge sets must
     fingerprint differently (the convergence test compares

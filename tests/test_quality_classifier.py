@@ -130,3 +130,60 @@ def test_score_quality_empty_doc_gets_bias_score(spark):
     # every weight is 1.0 and tf sums to 1 -> margin = bias + 1
     expected_full = 1.0 / (1.0 + math.exp(-0.6))
     assert abs(out[1] - expected_full) < 1e-12
+
+
+def _units_ref(text, bigrams):
+    """Python replay of quality_classifier.units: whitespace (Java
+    ``\\s``) tokens lowercased, then lowercased word bigrams."""
+    import re
+
+    toks = [t.lower() for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t]
+    if not bigrams:
+        return toks
+    return toks + [f"{toks[i]} {toks[i + 1]}" for i in range(len(toks) - 1)]
+
+
+@pytest.mark.parametrize(
+    "bigrams, salt", [(False, None), (True, None), (True, "q'c\\1|")]
+)
+def test_score_quality_matches_md5_replay(spark, bigrams, salt):
+    """score_quality on the frozen weights against a pure-Python
+    replay: hashlib.md5 buckets, a sequential sum over the units, the
+    mean, the sigmoid. The third case puts a quote and a backslash in
+    the salt, which the scoring SQL must escape."""
+    import hashlib
+    import math
+
+    from skrub_spark._frozen import QUALITY_MODEL
+    from skrub_spark.operators.quality_classifier import score_quality
+
+    model = dict(QUALITY_MODEL, bigrams=bigrams)
+    if salt is not None:
+        model["salt"] = salt
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "",
+        None,
+        "   \t  ",
+        "Ünïcödé CAFÉ  naïve Жук 日本語 café",
+        "to be or not to be to be or not to be",
+        "alpha\tbeta\ngamma  alpha beta",
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = dict(
+        score_quality(df, model).select("doc_id", "quality_score").collect()
+    )
+    w, n_feat = model["weights"], model["n_features"]
+    for i, text in enumerate(texts):
+        s, n = 0.0, 0
+        for u in _units_ref(text or "", bigrams):
+            h = hashlib.md5((model["salt"] + u).encode()).hexdigest()
+            s += w[int(h[:15], 16) % n_feat]
+            n += 1
+        margin = model["bias"] + (s / n if n else 0.0)
+        want = 1.0 / (1.0 + math.exp(-margin))
+        # the JVM and libm exp may differ in the last bit
+        assert math.isclose(got[i], want, rel_tol=1e-14), (i, got[i], want)
+    assert len(got) == len(texts)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 
 def _bucket(unit: str, n: int, salt: str) -> int:
-    """Python replay of quality_classifier.feature_bucket."""
+    """Python replay of quality_classifier.bucket_sql."""
     h = hashlib.md5((salt + unit).encode()).hexdigest()
     return int(h[:15], 16) % n
 
