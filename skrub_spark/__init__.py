@@ -246,9 +246,9 @@ from .report.datasheet import (  # noqa: F401
     datasheet_html,
 )
 from .operators.lm_filter import (  # noqa: F401
-    KNTrigramLM,
-    score_kn_perplexity,
-    train_kn_trigram,
+    KNNgramLM,
+    score_kn_ngram_perplexity,
+    train_kn_ngram,
 )
 from .operators.unigram_lm import (  # noqa: F401
     UnigramModel,

@@ -42,6 +42,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..base import SparkTransformer
 from ..functions.text import char_ngrams
+from ..session import checkpoint
 
 _EPS = 1e-10
 
@@ -215,8 +216,8 @@ class GapEncoder(SparkTransformer):
         N[k, bucket] = sum_r w[r, k] * x[r, bucket] / (wH)[r, bucket]
         and B[k] = sum_r w[r, k] via posexplode + groupBy — the
         collect is k x hash_dim scalars regardless of row count.
-        Lineage is truncated each iteration (localCheckpoint) so the
-        UDF chain doesn't re-execute from scratch."""
+        Lineage is truncated each iteration (session.checkpoint) so
+        the UDF chain doesn't re-execute from scratch."""
         n_iter = n_iter or max(5, self.max_iter // 10)
         k, d = self.n_components, self.hash_dim
         a, b, rho = self.gamma_shape_prior, self.gamma_scale_prior, self.rho
@@ -225,13 +226,12 @@ class GapEncoder(SparkTransformer):
             df.select(self.col).where(F.col(self.col).isNotNull()).distinct(),
             self.col,
         )
-        state = (
+        state = checkpoint(
             triples.groupBy(self.col)
             .agg(F.collect_list(F.struct("b", "tf")).alias("__sparse"))
             .withColumn(
                 "__w", F.array(*[F.lit(1.0 / k) for _ in range(k)])
             )
-            .localCheckpoint()
         )
 
         rng = np.random.default_rng(self.random_state)
@@ -279,9 +279,11 @@ class GapEncoder(SparkTransformer):
                     out.append([float(v) for v in c.ravel()])
                 return pd.Series(out)
 
-            state = state.withColumn(
-                "__w", e_step(F.col("__sparse"), F.col("__w"))
-            ).localCheckpoint()
+            state = checkpoint(
+                state.withColumn(
+                    "__w", e_step(F.col("__sparse"), F.col("__w"))
+                )
+            )
 
             # N[k, bucket]: posexplode the flattened contributions and
             # aggregate JVM-side; one shuffle of (bucket, topic) keys.

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 _TOKEN_SPLIT = "[^a-z0-9]+"
 
 
@@ -108,12 +110,10 @@ def pmi_collocations(
                 ),
             )
         )
-        return (
+        return checkpoint(
             scored.orderBy(
                 F.col("score_scaled").desc(), "w1", "w2"
-            )
-            .limit(top_k)
-            .localCheckpoint(eager=True)
+            ).limit(top_k)
         )
     finally:
         toks.unpersist()

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..session import checkpoint
 
 
 def tfidf_keywords(
@@ -246,11 +247,10 @@ def term_burstiness(
         / ((F.col("nd") - 1).cast(d38) * t38).cast("double"),
         6,
     )
-    out = (
+    out = checkpoint(
         stats.select("term", "doc_freq", "total_count", vmr.alias("vmr"))
         .orderBy(F.col("vmr").desc(), "term")
         .limit(top_k)
-        .localCheckpoint(eager=True)
     )
     toks.unpersist()
     return out

@@ -3,28 +3,47 @@ beyond-reference LLM-pipeline operator, SURVEY.md §2).
 
 CCNet (Wenzek et al., arXiv:1911.00359) ranks Common-Crawl documents
 by the perplexity of a language model trained on a trusted corpus and
-keeps the low-perplexity head. The same shape works with an add-alpha
-smoothed n-gram LM, and — crucially for 100 TB — both phases are pure
-relational algebra:
+keeps the low-perplexity head. Two smoothings share one relational
+shape — and, crucially for 100 TB, both phases are pure relational
+algebra:
 
 - **train**: explode documents into n-grams, ``groupBy`` counts. The
-  model IS a pair of DataFrames (n-gram counts + context counts); it
-  is never collected to the driver, so vocabulary size is unbounded.
+  model IS a set of DataFrames; it is never collected to the driver,
+  so vocabulary size is unbounded. Only a handful of scalars
+  (vocabulary size, discounts) reach the driver.
 - **score**: explode the target documents into n-grams, left-join the
   model counts (Spark auto-broadcasts a small model; a huge model
   degrades gracefully to a shuffle join on the n-gram key), then one
   ``groupBy(doc)`` for the mean negative log-likelihood.
 
-Smoothing: ``p(w | ctx) = (c(ctx·w) + a) / (c(ctx) + a·V)`` with
-``V`` = training vocabulary size — unseen n-grams/contexts degrade to
-``a / (c(ctx) + a·V)`` / ``1/V`` instead of zeroing out.
+Models:
 
-Float determinism (for the exact DuckDB oracle
-``lm_perplexity_filter``): each occurrence's negative log-prob is
-rounded to 6 decimals and summed as DECIMAL(28,6) — exact,
-associative, order-independent — then divided by the occurrence
-count; ``ln`` of an identical IEEE quotient agrees across engines at
-6 decimals. Tokenization is the RE2-replayable ``words_az09``.
+- :class:`NgramLM` (``train_ngram_lm``): add-alpha,
+  ``p(w | ctx) = (c(ctx·w) + a) / (c(ctx) + a·V)`` with ``V`` = the
+  training vocabulary size — unseen n-grams/contexts degrade to
+  ``a / (c(ctx) + a·V)`` / ``1/V`` instead of zeroing out.
+- :class:`KNNgramLM` (``train_kn_ngram``): interpolated Kneser-Ney of
+  any order ``n >= 3`` (KenLM's construction; CCNet scores with an
+  order-5 model): per-order absolute discounts from count-of-counts,
+  continuation counts for the lower orders, an optional top-order
+  min-count prune. Unseen words fall through to an interpolation
+  floor, never zero.
+- Frozen serving path: ``kn_to_frozen`` serializes a trained KN model
+  to committed literals and ``kn_from_frozen`` rebuilds it, so
+  scoring is one map-only pass with broadcast codebook-sized joins
+  and no training passes.
+
+``perplexity_filter`` flags the low-perplexity head under either
+model, ``ccnet_buckets`` cuts per-language perplexity terciles and
+``rho_select`` ranks documents by the excess loss of one model over
+another.
+
+Float determinism (for the exact DuckDB oracles): each occurrence's
+negative log-prob is rounded to 6 decimals and summed as
+DECIMAL(28,6) — exact, associative, order-independent — then divided
+by the occurrence count; ``ln`` of an identical IEEE quotient agrees
+across engines at 6 decimals. Tokenization is the RE2-replayable
+``words_az09``.
 """
 
 from __future__ import annotations
@@ -37,6 +56,82 @@ from pyspark.sql import functions as F
 from ..functions.text import words_az09
 
 
+def _words(text_col: str, words_col: str | None) -> Column:
+    """A document's word array. ``words_col`` (r13, guide §2.4): read
+    an already tokenized ``array<string>`` column instead of
+    re-running the ``words_az09`` regex split — callers that train
+    AND score over one corpus tokenize it once into a persisted
+    narrow frame and every pass reuses the arrays (identical tokens,
+    identical grams)."""
+    return F.col(words_col) if words_col is not None else words_az09(text_col)
+
+
+def _gram_col(text_col: str, g: int, words_col: str | None) -> Column:
+    """Generator column ``gram``: one row per g-gram string
+    ("w1 .. wg") of the document. ONE shingle array per row
+    (per-column slices are interpreted HOFs that cost ~g x rows each
+    — building the widest gram once and re-splitting the bounded
+    g-word string AFTER the explode measured 3x faster for g = 5).
+    Documents with fewer than g words explode to no rows."""
+    from ..functions.text import _shifted_shingles
+
+    return F.explode(
+        _shifted_shingles(_words(text_col, words_col), g, " ")
+    ).alias("gram")
+
+
+def _explode_grams(
+    df: DataFrame,
+    text_col: str,
+    id_cols: list[str],
+    g: int,
+    words_col: str | None = None,
+) -> DataFrame:
+    """``(.., gram)`` rows of ``df`` (see ``_gram_col``), after a
+    ``fan_out`` of the narrow (ids, words) projection: the KN passes
+    explode up to n shingle arrays per row."""
+    from ..session import fan_out
+
+    src = words_col if words_col is not None else text_col
+    return fan_out(df.select(*id_cols, F.col(src))).select(
+        *id_cols, _gram_col(text_col, g, words_col)
+    )
+
+
+def _vocab(
+    df: DataFrame, text_col: str, words_col: str | None
+) -> DataFrame:
+    """One-row frame, column ``a``: distinct training words."""
+    return df.select(F.explode(_words(text_col, words_col)).alias("w")).agg(
+        F.countDistinct("w").cast("long").alias("a")
+    )
+
+
+def _mean_nll(
+    df: DataFrame, occ: DataFrame, nll: Column, id_col: str
+) -> DataFrame:
+    """Per-document ``(id_col, n_ngrams, avg_nll)`` from occurrence
+    rows ``occ`` and their negative log-prob ``nll``: -ln rounded
+    6dp, exact DECIMAL(28,6) sum, divided by the occurrence count.
+    Every id of ``df`` comes back; one with no occurrences scores
+    ``n_ngrams`` 0 and a NULL ``avg_nll``."""
+    per_doc = (
+        occ.withColumn("nll_q", F.round(nll, 6).cast("decimal(28,6)"))
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_ngrams"),
+            (F.sum("nll_q").cast("double") / F.count(F.lit(1)))
+            .alias("avg_nll"),
+        )
+    )
+    ids = df.select(id_col).distinct()
+    return ids.join(per_doc, id_col, "left").select(
+        id_col,
+        F.coalesce(F.col("n_ngrams"), F.lit(0)).cast("long").alias("n_ngrams"),
+        F.col("avg_nll").cast("double").alias("avg_nll"),
+    )
+
+
 @dataclass
 class NgramLM:
     """A distributed n-gram LM: counts stay in DataFrames."""
@@ -47,38 +142,24 @@ class NgramLM:
     vocab_size: int
 
 
-def _gram_cols(
-    text_col: str, n: int, words_col: str | None = None
-) -> tuple[Column, Column]:
-    """(grams, ctxs) arrays for a document: ``grams[i]`` is the
-    space-joined window of n words starting at i, ``ctxs[i]`` its
-    n-1-word prefix ('' for unigrams). Reuses the shared
-    shifted-slice shingle builder (functions/text.py) — linear per
-    row, JVM-side. ``words_col`` (r13, guide §2.4): read an already
-    tokenized ``array<string>`` column instead of re-running the
-    ``words_az09`` regex split — callers that train AND score over
-    one corpus tokenize it once into a persisted narrow frame and
-    every pass reuses the arrays (identical tokens, identical
-    grams)."""
-    from ..functions.text import _shifted_shingles
-
-    words = (
-        F.col(words_col) if words_col is not None else words_az09(text_col)
+def _gram_ctx(
+    df: DataFrame,
+    text_col: str,
+    id_cols: list[str],
+    n: int,
+    words_col: str | None,
+) -> DataFrame:
+    """(.., gram, ctx) occurrence rows: ``ctx`` is the first n-1
+    words of ``gram`` ('' for unigrams). No ``fan_out``: the
+    add-alpha passes build one shingle array per row, and the
+    repartition added 3 jobs to ``lm_perplexity_filter``."""
+    ctx = (
+        F.lit("")
+        if n == 1
+        else F.array_join(F.slice(F.split(F.col("gram"), " "), 1, n - 1), " ")
     )
-    n_words = F.size(words)
-    width = n_words - (n - 1)
-    gram = _shifted_shingles(words, n, " ")
-    if n == 1:
-        ctx = F.transform(gram, lambda _: F.lit(""))
-    else:
-        # n-1-gram prefixes, truncated to align index-for-index with
-        # the n-grams (one fewer window exists at the tail)
-        ctx = F.slice(_shifted_shingles(words, n - 1, " "), 1, width)
-    empty = F.array().cast("array<string>")
-    has = n_words >= n
-    return (
-        F.when(has, gram).otherwise(empty),
-        F.when(has, ctx).otherwise(empty),
+    return df.select(*id_cols, _gram_col(text_col, n, words_col)).select(
+        *id_cols, "gram", ctx.alias("ctx")
     )
 
 
@@ -93,13 +174,10 @@ def train_ngram_lm(
 
     Two aggregations, map-side partially combined; the only driver
     action is the scalar vocabulary size. ``words_col``: consume a
-    pre-tokenized array column (see ``_gram_cols``)."""
+    pre-tokenized array column (see ``_words``)."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    grams, ctxs = _gram_cols(text_col, n, words_col)
-    pairs = df.select(
-        F.explode(F.arrays_zip(grams.alias("gram"), ctxs.alias("ctx"))).alias("p")
-    ).select(F.col("p.gram").alias("gram"), F.col("p.ctx").alias("ctx"))
+    pairs = _gram_ctx(df, text_col, [], n, words_col)
     # persist the model: scoring left-joins BOTH count frames, and
     # without this each join re-executes the training explode+groupBy
     # lineage from the source scan
@@ -109,14 +187,7 @@ def train_ngram_lm(
     ctx_counts = pairs.groupBy("ctx").agg(
         F.count(F.lit(1)).alias("ctx_c")
     ).persist()
-    vwords = (
-        F.col(words_col) if words_col is not None else words_az09(text_col)
-    )
-    vocab = (
-        df.select(F.explode(vwords).alias("w"))
-        .agg(F.countDistinct("w").alias("v"))
-        .collect()[0]["v"]
-    )
+    vocab = _vocab(df, text_col, words_col).collect()[0]["a"]
     return NgramLM(n=n, ngram_counts=ngram_counts, ctx_counts=ctx_counts,
                    vocab_size=int(vocab))
 
@@ -137,13 +208,9 @@ def score_ngram_perplexity(
     words score NULL). ``exp(avg_nll)`` is the perplexity — left to
     the caller, the monotone score joins/filters identically.
     ``words_col``: consume a pre-tokenized array column (see
-    ``_gram_cols``).
+    ``_words``).
     """
-    grams, ctxs = _gram_cols(text_col, lm.n, words_col)
-    occ = df.select(
-        F.col(id_col),
-        F.explode(F.arrays_zip(grams.alias("gram"), ctxs.alias("ctx"))).alias("p"),
-    ).select(id_col, F.col("p.gram").alias("gram"), F.col("p.ctx").alias("ctx"))
+    occ = _gram_ctx(df, text_col, [id_col], lm.n, words_col)
     joined = (
         occ.join(lm.ngram_counts, "gram", "left")
         .join(lm.ctx_counts, "ctx", "left")
@@ -154,23 +221,7 @@ def score_ngram_perplexity(
     nll = -F.log(
         (F.col("c") + F.lit(float(alpha))) / (F.col("ctx_c") + av)
     )
-    scored = joined.withColumn(
-        "nll_q", F.round(nll, 6).cast("decimal(28,6)")
-    )
-    per_doc = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_ngrams"),
-        (F.sum("nll_q").cast("double") / F.count(F.lit(1)))
-        .alias("avg_nll"),
-    )
-    ids = df.select(id_col).distinct()
-    return (
-        ids.join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_ngrams"), F.lit(0)).cast("long").alias("n_ngrams"),
-            F.col("avg_nll").cast("double").alias("avg_nll"),
-        )
-    )
+    return _mean_nll(df, joined, nll, id_col)
 
 
 def perplexity_filter(
@@ -181,17 +232,17 @@ def perplexity_filter(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """CCNet-style head selection: adds ``avg_nll`` and a ``keep``
-    flag (``avg_nll <= max_avg_nll``; unscoreable docs are dropped).
-    Pass a :class:`KNTrigramLM` (r10) or order-n :class:`KNNgramLM`
-    (r11) for Kneser-Ney smoothing; an :class:`NgramLM` scores
-    add-alpha as before."""
+    """CCNet-style head selection: ``df`` joined with its scores
+    (``n_ngrams``, ``avg_nll``) plus a ``keep`` flag
+    (``avg_nll <= max_avg_nll``). Documents too short to score keep
+    a NULL ``avg_nll`` and ``keep = false``.
+
+    The model picks the smoothing: a :class:`KNNgramLM` (from
+    ``train_kn_ngram`` or ``kn_from_frozen``) scores with
+    interpolated Kneser-Ney and ignores ``alpha``; an
+    :class:`NgramLM` scores add-``alpha``."""
     if isinstance(lm, KNNgramLM):
         scores = score_kn_ngram_perplexity(
-            df, lm, text_col=text_col, id_col=id_col
-        )
-    elif isinstance(lm, KNTrigramLM):
-        scores = score_kn_perplexity(
             df, lm, text_col=text_col, id_col=id_col
         )
     else:
@@ -205,334 +256,17 @@ def perplexity_filter(
 
 
 # ---------------------------------------------------------------------
-# Kneser-Ney interpolated trigram (r10, VERDICT r9 #2): the real
-# CCNet stack scores with a KenLM 5-gram; this is the same
-# interpolated-KN construction at order 3, kept fully relational:
-# every count table (trigram counts, context stats, continuation
-# counts) is a DataFrame — vocabulary stays unbounded — and the
-# absolute discounts D_k = n1/(n1 + 2 n2) come from one extra
-# count-of-counts groupBy per order, rounded to 6dp so both engines
-# share exact literals. Scoring is the proven discipline: exact
-# integer counts -> one fixed-parenthesization double expression ->
-# -ln rounded 6dp -> DECIMAL(28,6) sum (order-independent).
-
-
-@dataclass
-class KNTrigramLM:
-    """Interpolated Kneser-Ney trigram LM as DataFrames + scalars.
-
-    Frames (all persisted, all keyed by space-joined word strings):
-    - tri_counts:  (kn_ctx2, kn_w3, c3)        trigram counts
-    - ctx2_stats:  (kn_ctx2, c2ctx, n1p_ctx)   Σc3 / distinct w3
-    - bi_cont:     (kn_w2, kn_w3, nc)          N1+(• w2 w3)
-    - w2_stats:    (kn_w2, ncs, n_after)       N1+(• w2 •) / N1+(w2 •)
-    - uni_cont:    (kn_w, n1p)                 N1+(• w)
-    Scalars: t_types = N1+(• •) (total bigram types), u_types = rows
-    of uni_cont, vocab_size (+1 slot for unseen), discounts d1/d2/d3.
-    """
-
-    tri_counts: DataFrame
-    ctx2_stats: DataFrame
-    bi_cont: DataFrame
-    w2_stats: DataFrame
-    uni_cont: DataFrame
-    vocab_size: float
-    t_types: float
-    u_types: float
-    d1: float
-    d2: float
-    d3: float
-
-
-def _tri_occurrences(
-    df: DataFrame,
-    text_col: str,
-    id_cols: list[str],
-    words_col: str | None = None,
-) -> DataFrame:
-    """(.., kn_ctx2, kn_w2, kn_w3) trigram occurrence rows.
-    ``words_col``: consume a pre-tokenized array column (see
-    ``_gram_cols``)."""
-    from ..functions.text import _shifted_shingles
-    from ..session import fan_out
-
-    words = (
-        F.col(words_col) if words_col is not None else words_az09(text_col)
-    )
-    nw = F.size(words)
-    width = nw - 2
-    ctx2 = F.slice(_shifted_shingles(words, 2, " "), 1, width)
-    w2 = F.slice(words, 2, width)
-    w3 = F.slice(words, 3, width)
-    empty = F.array().cast("array<string>")
-    has = nw >= 3
-    return (
-        fan_out(
-            df.select(
-                *id_cols,
-                F.col(words_col if words_col is not None else text_col),
-            )
-        )
-        .select(
-            *id_cols,
-            F.explode(
-                F.arrays_zip(
-                    F.when(has, ctx2).otherwise(empty).alias("c"),
-                    F.when(has, w2).otherwise(empty).alias("m"),
-                    F.when(has, w3).otherwise(empty).alias("w"),
-                )
-            ).alias("p"),
-        )
-        .select(
-            *id_cols,
-            F.col("p.c").alias("kn_ctx2"),
-            F.col("p.m").alias("kn_w2"),
-            F.col("p.w").alias("kn_w3"),
-        )
-    )
-
-
-def _disc_scalar(n1: int, n2: int) -> float:
-    """Absolute discount n1/(n1 + 2 n2), clamped into [0.05, 0.95]
-    then 6dp-rounded (0.5 fallback for degenerate corpora). The
-    clamp is load-bearing: a corpus where no type has count 1 gives
-    n1 = 0 -> D = 0, which zeroes the unseen-word interpolation
-    floor and makes -ln blow up (observed at sf0.1); KenLM bounds
-    its discounts the same way."""
-    if n1 + 2 * n2 == 0:
-        return 0.5
-    return round(min(max(n1 / (n1 + 2.0 * n2), 0.05), 0.95), 6)
-
-
-def train_kn_trigram(
-    df: DataFrame,
-    text_col: str = "text",
-    *,
-    words_col: str | None = None,
-) -> KNTrigramLM:
-    """Train the interpolated-KN trigram model on the trusted corpus.
-
-    Driver state: six scalars. Everything else stays distributed —
-    two explode+groupBy passes (trigrams, bigram types) plus
-    codebook-free derived aggregations of the count frames.
-    ``words_col``: consume a pre-tokenized array column (see
-    ``_gram_cols``)."""
-    occ = _tri_occurrences(df, text_col, [], words_col)
-    tri_counts = (
-        occ.groupBy("kn_ctx2", "kn_w2", "kn_w3")
-        .agg(F.count(F.lit(1)).alias("c3"))
-        .persist()
-    )
-    ctx2_stats = (
-        tri_counts.groupBy("kn_ctx2")
-        .agg(
-            F.sum("c3").alias("c2ctx"),
-            F.count(F.lit(1)).alias("n1p_ctx"),
-        )
-        .persist()
-    )
-    bi_cont = (
-        tri_counts.groupBy("kn_w2", "kn_w3")
-        .agg(F.count(F.lit(1)).alias("nc"))
-        .persist()
-    )
-    w2_stats = (
-        bi_cont.groupBy("kn_w2")
-        .agg(F.sum("nc").alias("ncs"), F.count(F.lit(1)).alias("n_after"))
-        .persist()
-    )
-    # unigram continuation counts from DISTINCT bigram types
-    from ..session import fan_out
-
-    words = (
-        F.col(words_col) if words_col is not None else words_az09(text_col)
-    )
-    nw = F.size(words)
-    empty = F.array().cast("array<string>")
-    has = nw >= 2
-    bt = (
-        fan_out(
-            df.select(
-                F.col(words_col if words_col is not None else text_col)
-            )
-        )
-        .select(
-            F.explode(
-                F.arrays_zip(
-                    F.when(has, F.slice(words, 1, nw - 1))
-                    .otherwise(empty)
-                    .alias("a"),
-                    F.when(has, F.slice(words, 2, nw - 1))
-                    .otherwise(empty)
-                    .alias("b"),
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.a").alias("w1"), F.col("p.b").alias("wb"))
-        .distinct()
-    )
-    uni_cont = (
-        bt.groupBy(F.col("wb").alias("kn_w"))
-        .agg(F.count(F.lit(1)).alias("n1p"))
-        .persist()
-    )
-    # pass 1 materialized eagerly: in the fused scalar job below,
-    # the bi_cont and tri count-of-counts branches BOTH read
-    # tri_counts — left lazy, each concurrent branch would recompute
-    # the corpus explode+groupBy (the r10 lazy-persist lesson).
-    tri_counts.count()
-    # ONE fused driver action replaces the former five (t/u totals,
-    # vocabulary, and the three per-order count-of-counts each ran
-    # their own .first()): a union of one-row aggregates, each
-    # source frame read exactly once (same discipline as the
-    # order-n trainer's fused `cfc` collect). ~5 sequential
-    # job round-trips -> 1 (r12-opt, guide §1.2 'fewer passes').
-    def _cc(col):
-        return [
-            F.count(F.when(F.col(col) == 1, 1)).cast("long").alias("a"),
-            F.count(F.when(F.col(col) == 2, 1)).cast("long").alias("b"),
-        ]
-
-    zero = F.lit(0).cast("long")
-    scalars = (
-        uni_cont.agg(
-            *_cc("n1p"),
-            F.sum("n1p").cast("long").alias("t"),
-            F.count(F.lit(1)).cast("long").alias("u"),
-        )
-        .select(F.lit("uni").alias("kind"), "a", "b", "t", "u")
-        .unionAll(
-            bi_cont.agg(*_cc("nc")).select(
-                F.lit("bi").alias("kind"), "a", "b",
-                zero.alias("t"), zero.alias("u"),
-            )
-        )
-        .unionAll(
-            tri_counts.agg(*_cc("c3")).select(
-                F.lit("tri").alias("kind"), "a", "b",
-                zero.alias("t"), zero.alias("u"),
-            )
-        )
-        .unionAll(
-            df.select(
-                F.explode(
-                    F.col(words_col)
-                    if words_col is not None
-                    else words_az09(text_col)
-                ).alias("w")
-            )
-            .agg(F.countDistinct("w").cast("long").alias("a"))
-            .select(
-                F.lit("v").alias("kind"), "a", zero.alias("b"),
-                zero.alias("t"), zero.alias("u"),
-            )
-        )
-        .collect()
-    )
-    by = {r["kind"]: r for r in scalars}
-    t_types = float(by["uni"]["t"] or 0)
-    u_types = float(by["uni"]["u"] or 0)
-    if t_types <= 0:
-        raise ValueError(
-            "train_kn_trigram: corpus has no bigrams — cannot build "
-            "continuation counts"
-        )
-    vocab = by["v"]["a"] or 0
-    return KNTrigramLM(
-        tri_counts=tri_counts,
-        ctx2_stats=ctx2_stats,
-        bi_cont=bi_cont,
-        w2_stats=w2_stats,
-        uni_cont=uni_cont,
-        vocab_size=float(int(vocab) + 1),
-        t_types=t_types,
-        u_types=u_types,
-        d1=_disc_scalar(int(by["uni"]["a"]), int(by["uni"]["b"])),
-        d2=_disc_scalar(int(by["bi"]["a"]), int(by["bi"]["b"])),
-        d3=_disc_scalar(int(by["tri"]["a"]), int(by["tri"]["b"])),
-    )
-
-
-def score_kn_perplexity(
-    df: DataFrame,
-    lm: KNTrigramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document mean negative log-likelihood under the KN
-    trigram model: ``(id_col, n_ngrams, avg_nll)``; docs with fewer
-    than 3 words score NULL.
-
-    The probability expression is a FIXED parenthesization over
-    exact integer counts (the DuckDB oracle mirrors it verbatim):
-      p1 = greatest(n1p − D1, 0)/T + ((D1·U)/T)·(1/V)
-      p2 = ncs>0 ? greatest(nc − D2, 0)/ncs + ((D2·n_after)/ncs)·p1
-                 : p1
-      p3 = c2ctx>0 ? greatest(c3 − D3, 0)/c2ctx
-                     + ((D3·n1p_ctx)/c2ctx)·p2
-                   : p2
-    Unseen words/contexts fall through the interpolation floor
-    (never zero), so -ln is always finite."""
-    occ = _tri_occurrences(df, text_col, [id_col])
-    j = (
-        occ.join(
-            lm.tri_counts.select("kn_ctx2", "kn_w3", "c3"),
-            ["kn_ctx2", "kn_w3"],
-            "left",
-        )
-        .join(lm.ctx2_stats, "kn_ctx2", "left")
-        .join(lm.bi_cont, ["kn_w2", "kn_w3"], "left")
-        .join(lm.w2_stats, "kn_w2", "left")
-        .join(
-            lm.uni_cont.withColumnRenamed("kn_w", "kn_w3"), "kn_w3", "left"
-        )
-    )
-    d1, d2, d3 = F.lit(lm.d1), F.lit(lm.d2), F.lit(lm.d3)
-    t, u, v = F.lit(lm.t_types), F.lit(lm.u_types), F.lit(lm.vocab_size)
-    n1p = F.coalesce(F.col("n1p"), F.lit(0)).cast("double")
-    nc = F.coalesce(F.col("nc"), F.lit(0)).cast("double")
-    ncs = F.coalesce(F.col("ncs"), F.lit(0)).cast("double")
-    n_after = F.coalesce(F.col("n_after"), F.lit(0)).cast("double")
-    c3 = F.coalesce(F.col("c3"), F.lit(0)).cast("double")
-    c2ctx = F.coalesce(F.col("c2ctx"), F.lit(0)).cast("double")
-    n1p_ctx = F.coalesce(F.col("n1p_ctx"), F.lit(0)).cast("double")
-    p1 = F.greatest(n1p - d1, F.lit(0.0)) / t + ((d1 * u) / t) * (
-        F.lit(1.0) / v
-    )
-    p2 = F.when(
-        ncs > 0,
-        F.greatest(nc - d2, F.lit(0.0)) / ncs
-        + ((d2 * n_after) / ncs) * p1,
-    ).otherwise(p1)
-    p3 = F.when(
-        c2ctx > 0,
-        F.greatest(c3 - d3, F.lit(0.0)) / c2ctx
-        + ((d3 * n1p_ctx) / c2ctx) * p2,
-    ).otherwise(p2)
-    scored = j.withColumn("nll_q", F.round(-F.log(p3), 6).cast("decimal(28,6)"))
-    per_doc = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_ngrams"),
-        (F.sum("nll_q").cast("double") / F.count(F.lit(1))).alias("avg_nll"),
-    )
-    ids = df.select(id_col).distinct()
-    return ids.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce(F.col("n_ngrams"), F.lit(0)).cast("long").alias("n_ngrams"),
-        F.col("avg_nll").cast("double").alias("avg_nll"),
-    )
-
-
-# ---------------------------------------------------------------------
 # Order-n interpolated Kneser-Ney (r11, VERDICT r10 #3): real CCNet
-# scores with a KenLM 5-gram; this generalizes the r10 trigram to
-# any order with per-order count-of-counts discounts and a top-order
-# min-count prune so the largest count frame stays shuffle-friendly
-# at 100 TB. Same disciplines as order 3: every count table is a
-# DataFrame (vocabulary unbounded), continuation counts come from
-# DISTINCT (k+1)-gram types, discounts are 6dp scalars, and scoring
-# is one fixed-parenthesization chain over exact integer counts ->
-# -ln rounded 6dp -> DECIMAL(28,6) per-doc sums (exact SQL replay:
-# the GENERATED oracle `lm_perplexity_kn5`).
+# scores with a KenLM 5-gram; this is the same construction at any
+# order n >= 3 with per-order count-of-counts discounts and a
+# top-order min-count prune so the largest count frame stays
+# shuffle-friendly at 100 TB. Every count table is a DataFrame
+# (vocabulary unbounded), continuation counts come from DISTINCT
+# (k+1)-gram types, discounts are 6dp scalars, and scoring is one
+# fixed-parenthesization chain over exact integer counts -> -ln
+# rounded 6dp -> DECIMAL(28,6) per-doc sums (exact SQL replay: the
+# oracles `lm_perplexity_kn` at n=3 and the GENERATED
+# `lm_perplexity_kn5`).
 
 
 @dataclass
@@ -564,31 +298,16 @@ class KNNgramLM:
     prune: int
 
 
-def _explode_grams(
-    df: DataFrame,
-    text_col: str,
-    id_cols: list[str],
-    g: int,
-    words_col: str | None = None,
-) -> DataFrame:
-    """Explode the g-gram strings of each document: one ``gram``
-    column ("w1 .. wg"). ONE shingle array per row (the slices the
-    r10 trigram built per context column are interpreted HOFs that
-    cost ~g x rows each — building the widest gram once and
-    re-splitting the bounded g-word string AFTER the explode
-    measured 3x faster for g = 5). ``words_col``: consume a
-    pre-tokenized array column (see ``_gram_cols``)."""
-    from ..functions.text import _shifted_shingles
-    from ..session import fan_out
-
-    src = words_col if words_col is not None else text_col
-    words = (
-        F.col(words_col) if words_col is not None else words_az09(text_col)
-    )
-    return fan_out(df.select(*id_cols, F.col(src))).select(
-        *id_cols,
-        F.explode(_shifted_shingles(words, g, " ")).alias("gram"),
-    )
+def _discount(n1: int, n2: int) -> float:
+    """Absolute discount n1/(n1 + 2 n2), clamped into [0.05, 0.95]
+    then 6dp-rounded (0.5 fallback for degenerate corpora). The
+    clamp is load-bearing: a corpus where no type has count 1 gives
+    n1 = 0 -> D = 0, which zeroes the unseen-word interpolation
+    floor and makes -ln blow up (observed at sf0.1); KenLM bounds
+    its discounts the same way."""
+    if n1 + 2 * n2 == 0:
+        return 0.5
+    return round(min(max(n1 / (n1 + 2.0 * n2), 0.05), 0.95), 6)
 
 
 def _ngram_occurrences(
@@ -646,19 +365,22 @@ def train_kn_ngram(
     corpus. ``prune``: drop top-order n-grams with count <= prune
     BEFORE deriving the context stats (pruned grams fall through the
     interpolation to the continuation orders — never zero).
+    ``words_col``: consume a pre-tokenized array column (see
+    ``_words``).
 
     Distributed shape: THREE corpus passes — the top-order
     occurrence pass, one FUSED distinct-types pass covering every
     middle order g = 3..n-1 at once (the n-gram types reuse the
     cached ``top_full``), and the bigram-types pass — each an
     explode + map-side-combined groupBy; the per-order discounts
-    come from one union aggregate over the already-cached count
-    frames. Driver state is n+3 scalars. The cached frames are
-    materialized EAGERLY in dependency order (count() per corpus
-    pass): concurrent branches of a lazy persist each recompute the
-    upstream (measured 2x on this exact lineage, r10 memory), so
-    sequencing the three passes is what keeps training at three
-    passes."""
+    come from one union aggregate over the count frames. Driver
+    state is n+3 scalars. The top-order and middle-order frames are
+    materialized EAGERLY before their many consumers: concurrent
+    branches of a lazy persist each recompute the upstream
+    (measured 2x on this exact lineage, r10 memory). The bigram-types
+    frame gets no eager count: the scalar action below is its first
+    consumer, and counting it first cost 2 more jobs for the same
+    train time (order 3 and 5, sf0.1, 4 cores)."""
     if n < 3:
         raise ValueError(f"train_kn_ngram: n must be >= 3, got {n}")
     occ = _ngram_occurrences(df, text_col, [], n, words_col)
@@ -722,14 +444,13 @@ def train_kn_ngram(
             .agg(F.sum("nc").alias("ncs"), F.count(F.lit(1)).alias("n_after"))
             .persist()
         )
-    words = (
-        F.col(words_col) if words_col is not None else words_az09(text_col)
-    )
+    # unigram continuation counts from DISTINCT bigram types
+    from ..session import fan_out
+
+    words = _words(text_col, words_col)
     nw = F.size(words)
     empty = F.array().cast("array<string>")
     has = nw >= 2
-    from ..session import fan_out
-
     bt = (
         fan_out(
             df.select(
@@ -756,11 +477,8 @@ def train_kn_ngram(
         .agg(F.count(F.lit(1)).alias("n1p"))
         .persist()
     )
-    uni_cont.count()  # pass 3 materialized (sequential: an A/B of
-    # fusing the three pass materializations into one union job read
-    # 25.7s vs 15.5s here — concurrent heavy branches contend)
     # ONE action collects every scalar: per-order count-of-counts
-    # (over the cached frames), t/u continuation totals, and the
+    # (over the count frames), t/u continuation totals, and the
     # vocabulary size (the only uncached branch — a single
     # explode+distinct corpus scan, so no concurrent duplication)
     cfc = uni_cont.select(F.lit(1).alias("o"), F.col("n1p").alias("v"))
@@ -785,15 +503,7 @@ def train_kn_ngram(
             ).select(F.lit("tu").alias("kind"), F.lit(0).alias("o"), "a", "b")
         )
         .unionAll(
-            df.select(
-                F.explode(
-                    F.col(words_col)
-                    if words_col is not None
-                    else words_az09(text_col)
-                ).alias("w")
-            )
-            .agg(F.countDistinct("w").cast("long").alias("a"))
-            .select(
+            _vocab(df, text_col, words_col).select(
                 F.lit("v").alias("kind"),
                 F.lit(0).alias("o"),
                 "a",
@@ -802,14 +512,8 @@ def train_kn_ngram(
         )
         .collect()
     )
-
-    def _disc(n1: int, n2: int) -> float:
-        if n1 + 2 * n2 == 0:
-            return 0.5
-        return round(min(max(n1 / (n1 + 2.0 * n2), 0.05), 0.95), 6)
-
     discounts = {
-        int(r["o"]): _disc(int(r["a"]), int(r["b"]))
+        int(r["o"]): _discount(int(r["a"]), int(r["b"]))
         for r in scalars
         if r["kind"] == "cc"
     }
@@ -848,8 +552,8 @@ def score_kn_ngram_perplexity(
 ) -> DataFrame:
     """Per-document mean negative log-likelihood under the order-n
     KN model: ``(id_col, n_ngrams, avg_nll)``; docs with fewer than
-    n words score NULL. Fixed parenthesization per order (the
-    GENERATED DuckDB oracle mirrors it verbatim):
+    n words score NULL. Fixed parenthesization per order (the DuckDB
+    oracles mirror it verbatim):
 
       p1   = greatest(n1p - D1, 0)/T + ((D1*U)/T)*(1/V)
       p_k  = ncs_k>0 ? greatest(nc_k - D_k, 0)/ncs_k
@@ -857,8 +561,9 @@ def score_kn_ngram_perplexity(
       p_n  = c_ctx>0 ? greatest(c - D_n, 0)/c_ctx
                        + ((D_n*n1p_ctx)/c_ctx)*p_{n-1} : p_{n-1}
 
-    ``words_col``: consume a pre-tokenized array column (see
-    ``_gram_cols``).
+    Unseen words/contexts fall through to the interpolation floor
+    (never zero), so -ln is always finite. ``words_col``: consume a
+    pre-tokenized array column (see ``_words``).
     """
     n = lm.n
     occ = _ngram_occurrences(df, text_col, [id_col], n, words_col)
@@ -921,17 +626,7 @@ def score_kn_ngram_perplexity(
         F.greatest(c - dn, F.lit(0.0)) / c_ctx
         + ((dn * n1p_ctx) / c_ctx) * p,
     ).otherwise(p)
-    scored = j.withColumn("nll_q", F.round(-F.log(p), 6).cast("decimal(28,6)"))
-    per_doc = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_ngrams"),
-        (F.sum("nll_q").cast("double") / F.count(F.lit(1))).alias("avg_nll"),
-    )
-    ids = df.select(id_col).distinct()
-    return ids.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce(F.col("n_ngrams"), F.lit(0)).cast("long").alias("n_ngrams"),
-        F.col("avg_nll").cast("double").alias("avg_nll"),
-    )
+    return _mean_nll(df, j, -F.log(p), id_col)
 
 
 def ccnet_buckets(

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 
 def mutual_best_match(
     pairs: DataFrame,
@@ -87,10 +89,9 @@ def sorted_neighborhood_pairs(
     ).where(F.col(sort_key).isNotNull())
     # Pin bucket assignment (range sampling re-runs on recompute);
     # one narrow (id, key, bucket) frame, reused by every branch.
-    ranged = (
+    ranged = checkpoint(
         base.repartitionByRange(n, F.col("k"), F.col("id"))
         .withColumn("b", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     sizes = {
         r["b"]: r["c"]

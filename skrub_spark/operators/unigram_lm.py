@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import words_az09
-from ..session import fan_out
+from ..session import checkpoint, fan_out
 
 #: hard caps shared by trainer, encoder, oracle and tests — part of
 #: the operator's spec, not tunables (the oracle's DP is unrolled to
@@ -268,7 +268,7 @@ def train_unigram(
     HALF_UP. (The one residual float-order freedom is Spark's
     distributed ``sum(ec)`` partition-merge order; for a pinned
     replay use the frozen model via ``tools/train_frozen.py``.)"""
-    wc = (
+    wc = checkpoint(  # branch point: seed + every E-step
         fan_out(df.select(F.col(text_col)))
         .select(F.explode(words_az09(text_col)).alias("w0"))
         .select(F.substring("w0", 1, UNIGRAM_MAX_WORD_LEN).alias("w"))
@@ -276,7 +276,6 @@ def train_unigram(
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .orderBy(F.col("c").desc(), F.col("w").asc())
         .limit(int(max_words))
-        .localCheckpoint(eager=True)  # branch point: seed + every E-step
     )
     # ---- seed: substring occurrence mass, all lengths 1..k (one
     # nested-transform explode — substr with column args via SQL)

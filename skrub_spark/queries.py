@@ -17124,19 +17124,20 @@ def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lm_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kneser-Ney interpolated trigram perplexity (r10, VERDICT r9
-    #2, operators/lm_filter.py::train_kn_trigram) — the KenLM-shape
-    upgrade of the add-alpha CCNet filter: absolute discounting from
-    count-of-counts, continuation-count lower orders, all count
-    tables DataFrames. Scoring input is the corpus with a planted
-    out-of-vocabulary suffix (pure SQL concat, oracle replays it) so
-    every interpolation branch — seen trigram, bigram-continuation
-    backoff, unigram continuation, unseen-word floor — is exercised
-    and pinned. Exact oracle: DuckDB rebuilds the same count frames
-    and replays the fixed-parenthesization probability expression,
-    -ln rounded 6dp, DECIMAL(28,6) per-doc sums."""
+    #2, operators/lm_filter.py::train_kn_ngram at n=3, no prune) —
+    the KenLM-shape upgrade of the add-alpha CCNet filter: absolute
+    discounting from count-of-counts, continuation-count lower
+    orders, all count tables DataFrames. Scoring input is the corpus
+    with a planted out-of-vocabulary suffix (pure SQL concat, oracle
+    replays it) so every interpolation branch — seen trigram,
+    bigram-continuation backoff, unigram continuation, unseen-word
+    floor — is exercised and pinned. Exact oracle: DuckDB rebuilds
+    the same count frames and replays the fixed-parenthesization
+    probability expression, -ln rounded 6dp, DECIMAL(28,6) per-doc
+    sums; ``lm_perplexity_kn5`` pins the same trainer at order 5."""
     _prep(spark)
     from .functions.text import words_az09
-    from .operators.lm_filter import score_kn_perplexity, train_kn_trigram
+    from .operators.lm_filter import score_kn_ngram_perplexity, train_kn_ngram
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # r13 (guide §2.4): the trigram trainer makes three words_az09
@@ -17145,12 +17146,12 @@ def q_lm_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # own pass: the probe text differs). Identical tokens ->
     # identical counts. Cache: see skrub_spark.release.
     tok_train = docs.select(words_az09("text").alias("__words")).persist()
-    lm = train_kn_trigram(tok_train, words_col="__words")
+    lm = train_kn_ngram(tok_train, n=3, prune=0, words_col="__words")
     probe = docs.select(
         "doc_id",
         F.concat(F.col("text"), F.lit(" kneser ney zzqxj")).alias("text"),
     )
-    scored = score_kn_perplexity(probe, lm)
+    scored = score_kn_ngram_perplexity(probe, lm)
     return scored.select(
         "doc_id",
         "n_ngrams",

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 _NULL = "<null>"
 
 
@@ -47,17 +49,20 @@ def classification_report(
     # bare scoring query at sf0.1, r10). cells is at most (k+1)²
     # rows, so the eager checkpoint is codebook-sized.
     #
-    # API-boundary tradeoff (documented, r10 advice): eager=True
-    # executes the upstream AT CALL TIME, and localCheckpoint blocks
-    # are NOT replayable — on a cluster, losing the executor holding
-    # them fails downstream actions instead of recomputing (blocks are
-    # freed by skrub_spark.release). For a (k+1)²-row frame consumed
-    # immediately, that exposure window is negligible and the
-    # concurrent-branch dedup is worth it; callers needing lineage
-    # durability can persist()+count() the INPUT df themselves.
-    cells = df.groupBy(lab.alias("lab"), prd.alias("prd")).agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
+    # API-boundary tradeoff (documented, r10 advice): the checkpoint
+    # executes the upstream AT CALL TIME. Without a checkpoint dir it
+    # is a localCheckpoint, whose blocks are NOT replayable — on a
+    # cluster, losing the executor holding them fails downstream
+    # actions instead of recomputing (blocks are freed by
+    # skrub_spark.release); for a (k+1)²-row frame consumed
+    # immediately that exposure window is negligible. A session with
+    # a checkpoint dir set (sparkContext.setCheckpointDir) gets a
+    # fault-tolerant checkpoint written there instead.
+    cells = checkpoint(
+        df.groupBy(lab.alias("lab"), prd.alias("prd")).agg(
+            F.count(F.lit(1)).alias("c")
+        )
+    )
     nt = cells.groupBy(F.col("lab").alias("clazz")).agg(
         F.sum("c").alias("n_true")
     )
@@ -354,13 +359,11 @@ def isotonic_calibration(
         ).alias("bin"),
         F.col(label_col).cast("long").alias("y"),
     ).filter(F.col("bin").isNotNull() & (F.col("bin") >= 0))
-    bins = (
-        base.groupBy("bin")
-        .agg(
+    bins = checkpoint(  # bounded; feeds 3 self-joins
+        base.groupBy("bin").agg(
             F.count(F.lit(1)).cast("long").alias("w"),
             F.sum("y").cast("long").alias("s"),
         )
-        .localCheckpoint(eager=True)  # bounded; feeds 3 self-joins
     )
     wnd = Window.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

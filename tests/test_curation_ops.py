@@ -1,110 +1,16 @@
-"""Tests for the round-5 curation operators: LM perplexity filtering
-and boilerplate line removal."""
+"""Tests for the round-5 curation operators: boilerplate line removal,
+decontamination, shuffling and incremental/streaming dedup. The LM
+perplexity filter's tests are in ``test_lm_filter.py``."""
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import functions as F
 
 from skrub_spark.operators.boilerplate import remove_boilerplate_lines
-from skrub_spark.operators.lm_filter import (
-    score_ngram_perplexity,
-    perplexity_filter,
-    train_ngram_lm,
-)
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_ngram_lm_counts_and_vocab(spark):
-    df = _docs(spark, [(1, "a b a b"), (2, "a b c")])
-    lm = train_ngram_lm(df, n=2)
-    assert lm.vocab_size == 3
-    counts = {r["gram"]: r["c"] for r in lm.ngram_counts.collect()}
-    # doc1: "a b","b a","a b"; doc2: "a b","b c"
-    assert counts == {"a b": 3, "b a": 1, "b c": 1}
-    ctx = {r["ctx"]: r["ctx_c"] for r in lm.ctx_counts.collect()}
-    assert ctx == {"a": 3, "b": 2}
-
-
-def test_perplexity_matches_hand_computation(spark):
-    df = _docs(spark, [(1, "a b a b"), (2, "a b c")])
-    lm = train_ngram_lm(df, n=2)
-    out = {
-        r["doc_id"]: r
-        for r in score_ngram_perplexity(df, lm, alpha=1.0).collect()
-    }
-    # V=3, alpha=1. p(b|a) = (3+1)/(3+3), p(a|b) = (1+1)/(2+3),
-    # p(c|b) = (1+1)/(2+3).
-    def q(p):
-        return round(-math.log(p), 6)
-
-    exp1 = (q(4 / 6) + q(2 / 5) + q(4 / 6)) / 3
-    exp2 = (q(4 / 6) + q(2 / 5)) / 2
-    assert abs(out[1]["avg_nll"] - exp1) < 1e-9
-    assert abs(out[2]["avg_nll"] - exp2) < 1e-9
-    assert out[1]["n_ngrams"] == 3 and out[2]["n_ngrams"] == 2
-
-
-def test_perplexity_unseen_and_short_docs(spark):
-    train = _docs(spark, [(1, "a b a b")])
-    lm = train_ngram_lm(train, n=2)
-    score = _docs(spark, [(10, "z z"), (11, "a"), (12, "")])
-    out = {
-        r["doc_id"]: r for r in score_ngram_perplexity(score, lm).collect()
-    }
-    # unseen gram AND unseen context: p = 1/(0 + V) = 1/2 (V=2)
-    assert abs(out[10]["avg_nll"] - round(-math.log(1 / 2), 6)) < 1e-9
-    # fewer than n words: NULL score, zero ngrams — never dropped rows
-    assert out[11]["avg_nll"] is None and out[11]["n_ngrams"] == 0
-    assert out[12]["avg_nll"] is None
-
-
-def test_perplexity_filter_separates_in_domain(spark):
-    # train on in-domain text; an out-of-domain doc must score higher
-    train = _docs(spark, [(i, "the cat sat on the mat") for i in range(5)])
-    lm = train_ngram_lm(train, n=2)
-    mixed = _docs(
-        spark,
-        [(1, "the cat sat on the mat"), (2, "zq xw vv kk pp zz qq ww")],
-    )
-    out = {r["doc_id"]: r["avg_nll"] for r in
-           score_ngram_perplexity(mixed, lm).collect()}
-    assert out[1] < out[2]
-    kept = perplexity_filter(mixed, lm, max_avg_nll=(out[1] + out[2]) / 2)
-    flags = {r["doc_id"]: r["keep"] for r in kept.collect()}
-    assert flags == {1: True, 2: False}
-
-
-def test_trigram_lm(spark):
-    df = _docs(spark, [(1, "a b c d")])
-    lm = train_ngram_lm(df, n=3)
-    assert lm.vocab_size == 4
-    assert {r["gram"]: r["c"] for r in lm.ngram_counts.collect()} == {
-        "a b c": 1, "b c d": 1
-    }
-    assert {r["ctx"]: r["ctx_c"] for r in lm.ctx_counts.collect()} == {
-        "a b": 1, "b c": 1
-    }
-    out = score_ngram_perplexity(df, lm).collect()[0]
-    # both trigrams: p = (1+1)/(1+4) = 0.4
-    assert out["n_ngrams"] == 2
-    assert abs(out["avg_nll"] - round(-math.log(0.4), 6)) < 1e-9
-
-
-def test_unigram_lm(spark):
-    df = _docs(spark, [(1, "a a b")])
-    lm = train_ngram_lm(df, n=1)
-    assert lm.vocab_size == 2
-    counts = {r["gram"]: r["c"] for r in lm.ngram_counts.collect()}
-    assert counts == {"a": 2, "b": 1}
-    out = score_ngram_perplexity(df, lm).collect()[0]
-    # ctx = '' with ctx_c = 3: p(a) = 3/5, p(b) = 2/5
-    exp = (2 * round(-math.log(3 / 5), 6) + round(-math.log(2 / 5), 6)) / 3
-    assert abs(out["avg_nll"] - exp) < 1e-9
 
 
 def test_decontaminate_train(spark):

@@ -161,6 +161,7 @@ def test_connected_components_long_chain(spark):
 
 _CKPT_PAIRS = [(1, 2), (2, 3), (10, 11)]
 _CKPT_EDGES = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
+_CKPT_KEYS = [(1, "b"), (2, "a"), (3, "c"), (4, "a"), (5, None), (6, "d")]
 
 # Runs in a child interpreter: Spark cannot unset a checkpoint dir,
 # and with one set every later checkpoint in the shared test session
@@ -170,6 +171,7 @@ import json, sys
 from skrub_spark import get_session
 from skrub_spark.dedup.components import connected_components
 from skrub_spark.operators.graph import k_core
+from skrub_spark.operators.matching import sorted_neighborhood_pairs
 
 spark = get_session(
     app_name="reliable_ckpt", master="local[1]", shuffle_partitions=1,
@@ -179,9 +181,16 @@ spark.sparkContext.setLogLevel("ERROR")
 spark.sparkContext.setCheckpointDir(sys.argv[1])
 pairs = spark.createDataFrame(json.loads(sys.argv[2]), "id_a int, id_b int")
 edges = spark.createDataFrame(json.loads(sys.argv[3]), "src int, dst int")
+keys = spark.createDataFrame(json.loads(sys.argv[4]), "id int, k string")
 cc = connected_components(pairs, local_threshold=0).collect()
 core = k_core(edges, k=3).collect()
-print(json.dumps({"cc": sorted(map(list, cc)), "core": sorted(map(list, core))}))
+spark.sparkContext.setCheckpointDir(sys.argv[1] + "/sn")
+sn = sorted_neighborhood_pairs(keys, "id", "k", window=2, num_buckets=3).collect()
+print(json.dumps({
+    "cc": sorted(map(list, cc)),
+    "core": sorted(map(list, core)),
+    "sn": sorted(map(list, sn)),
+}))
 """
 
 
@@ -195,14 +204,18 @@ def test_reliable_checkpoint_matches_local(spark, tmp_path):
     import sys
 
     from skrub_spark.operators.graph import k_core
+    from skrub_spark.operators.matching import sorted_neighborhood_pairs
 
     pairs = spark.createDataFrame(_CKPT_PAIRS, "id_a int, id_b int")
     edges = spark.createDataFrame(_CKPT_EDGES, "src int, dst int")
+    keys = spark.createDataFrame(_CKPT_KEYS, "id int, k string")
+    sn = sorted_neighborhood_pairs(keys, "id", "k", window=2, num_buckets=3)
     local = {
         "cc": sorted(
             map(list, connected_components(pairs, local_threshold=0).collect())
         ),
         "core": sorted(map(list, k_core(edges, k=3).collect())),
+        "sn": sorted(map(list, sn.collect())),
     }
     ckpt = tmp_path / "ckpt"
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -221,6 +234,7 @@ def test_reliable_checkpoint_matches_local(spark, tmp_path):
             str(ckpt),
             json.dumps(_CKPT_PAIRS),
             json.dumps(_CKPT_EDGES),
+            json.dumps(_CKPT_KEYS),
         ],
         env=env,
         capture_output=True,
@@ -232,10 +246,16 @@ def test_reliable_checkpoint_matches_local(spark, tmp_path):
     assert reliable == local
     assert local["cc"] == [[1, 1], [2, 1], [3, 1], [10, 10], [11, 10]]
     assert local["core"] == [[1, 3], [2, 3], [3, 3], [4, 3]]
-    written = [
-        f for _, _, files in os.walk(ckpt) for f in files if f.startswith("part-")
+    # (k, id) order 2, 4, 1, 3, 6; the NULL key (id 5) has no place
+    assert local["sn"] == [
+        [1, 3, 1], [1, 6, 2], [2, 1, 2], [2, 4, 1], [3, 6, 1], [4, 1, 1],
+        [4, 3, 2],
     ]
-    assert written, "reliable path wrote no checkpoint files"
+    for d in (ckpt, ckpt / "sn"):
+        written = [
+            f for _, _, files in os.walk(d) for f in files if f.startswith("part-")
+        ]
+        assert written, f"reliable path wrote no checkpoint files under {d}"
 
 
 _WORKER_PATH_CHILD = """

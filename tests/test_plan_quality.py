@@ -903,13 +903,13 @@ def test_kn_scoring_no_python_in_hot_path(spark):
     operators anywhere in the scoring plan (the count frames join,
     the probability expression is pure Column arithmetic)."""
     from skrub_spark.operators.lm_filter import (
-        score_kn_perplexity, train_kn_trigram,
+        score_kn_ngram_perplexity, train_kn_ngram,
     )
     from skrub_spark.sources import load_table
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    lm = train_kn_trigram(docs, "text")
-    plan = plan_of(score_kn_perplexity(docs, lm))
+    lm = train_kn_ngram(docs, "text", n=3, prune=0)
+    plan = plan_of(score_kn_ngram_perplexity(docs, lm))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
 

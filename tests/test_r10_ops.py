@@ -211,122 +211,6 @@ def test_unigram_zero_word_docs(spark):
     assert out[2]["n_words"] == 1 and out[2]["n_pieces"] == 3
 
 
-# -------------------------------- Kneser-Ney trigram LM (r10 #2)
-def _kn_corpus(spark):
-    rows = [
-        ("the quick brown fox jumps over the lazy dog",),
-        ("the quick brown fox likes the lazy dog",),
-        ("a quick brown cat jumps over a lazy dog",),
-        ("the lazy dog sleeps while the quick fox runs",),
-    ] * 10
-    return spark.createDataFrame(rows, "text string").withColumn(
-        "doc_id", F.monotonically_increasing_id()
-    )
-
-
-def test_kn_trigram_probabilities_valid(spark):
-    from skrub_spark.operators.lm_filter import (
-        score_kn_perplexity, train_kn_trigram,
-    )
-
-    docs = _kn_corpus(spark)
-    lm = train_kn_trigram(docs, "text")
-    assert 0.0 < lm.d1 <= 0.95 and 0.0 < lm.d2 <= 0.95
-    assert 0.0 < lm.d3 <= 0.95
-    out = score_kn_perplexity(docs, lm).collect()
-    # every >=3-word doc scores a finite positive avg_nll
-    for r in out:
-        assert r["n_ngrams"] > 0
-        assert r["avg_nll"] is not None and 0.0 < r["avg_nll"] < 50.0
-
-
-def test_kn_in_domain_beats_gibberish(spark):
-    from skrub_spark.operators.lm_filter import (
-        score_kn_perplexity, train_kn_trigram,
-    )
-
-    docs = _kn_corpus(spark)
-    lm = train_kn_trigram(docs, "text")
-    probe = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "zork blap frum glorp xyzzy wibble snarf quux"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r["avg_nll"] for r in
-           score_kn_perplexity(probe, lm).collect()}
-    assert out[1] < out[2]
-
-
-def test_kn_beats_addalpha_bigram_in_domain(spark):
-    """The r9-verdict monotone contract: on in-domain text the KN
-    trigram must fit at least as well as the add-one bigram."""
-    from pyspark.sql import functions as F2
-    from skrub_spark.operators.lm_filter import (
-        score_kn_perplexity, score_ngram_perplexity,
-        train_kn_trigram, train_ngram_lm,
-    )
-
-    docs = _kn_corpus(spark)
-    kn = train_kn_trigram(docs, "text")
-    bi = train_ngram_lm(docs, "text", n=2)
-    kn_nll = (
-        score_kn_perplexity(docs, kn)
-        .agg(F2.avg("avg_nll"))
-        .first()[0]
-    )
-    bi_nll = (
-        score_ngram_perplexity(docs, bi, alpha=1.0)
-        .agg(F2.avg("avg_nll"))
-        .first()[0]
-    )
-    assert kn_nll <= bi_nll
-
-
-def test_kn_unseen_words_never_zero_prob(spark):
-    from skrub_spark.operators.lm_filter import (
-        score_kn_perplexity, train_kn_trigram,
-    )
-
-    docs = _kn_corpus(spark)
-    lm = train_kn_trigram(docs, "text")
-    probe = spark.createDataFrame(
-        [(1, "qqq www eee rrr ttt yyy")], "doc_id long, text string"
-    )
-    r = score_kn_perplexity(probe, lm).first()
-    assert r["avg_nll"] is not None  # would be NULL if -ln(0) hit
-    assert r["n_ngrams"] == 4
-
-
-def test_kn_perplexity_filter_dispatch(spark):
-    from skrub_spark.operators.lm_filter import (
-        perplexity_filter, train_kn_trigram,
-    )
-
-    docs = _kn_corpus(spark)
-    lm = train_kn_trigram(docs, "text")
-    out = perplexity_filter(docs, lm, max_avg_nll=10.0)
-    assert "keep" in out.columns and out.count() == docs.count()
-
-
-def test_kn_partitioning_invariant(spark):
-    from skrub_spark.operators.lm_filter import (
-        score_kn_perplexity, train_kn_trigram,
-    )
-
-    docs = _kn_corpus(spark)
-    lm = train_kn_trigram(docs, "text")
-    a = sorted(map(tuple, score_kn_perplexity(docs, lm).collect()))
-    b = sorted(
-        map(
-            tuple,
-            score_kn_perplexity(docs.repartition(13), lm).collect(),
-        )
-    )
-    assert a == b
-
-
 # ------------------------------------ corpus datasheet (r10 #4)
 def test_corpus_datasheet_sections_and_values(spark, sf_dir):
     from skrub_spark.report.datasheet import corpus_datasheet

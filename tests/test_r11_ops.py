@@ -1,5 +1,5 @@
 """Round-11 operator contracts: DoReMi-lite mixture reweighting,
-ALS frozen serving twin, order-n Kneser-Ney, delta-join IVM,
+ALS frozen serving twin, delta-join IVM,
 streaming late-data side output."""
 
 from __future__ import annotations
@@ -182,150 +182,6 @@ def test_als_frozen_partitioning_invariance(spark):
         for r in als_topk_frozen(seen.repartition(7), "u", "i").collect()
     )
     assert a == b
-
-
-# ---------------------------------------------------------------------------
-# Order-n Kneser-Ney
-# ---------------------------------------------------------------------------
-
-
-def _kn_docs(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-
-
-def test_kn_order3_matches_trigram(spark):
-    """The order-n generalization at n=3 must reproduce the r10
-    trigram scorer bit-for-bit (same counts, same discounts, same
-    probability chain)."""
-    from skrub_spark.operators.lm_filter import (
-        score_kn_ngram_perplexity,
-        score_kn_perplexity,
-        train_kn_ngram,
-        train_kn_trigram,
-    )
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "the quick brown fox sleeps under the old tree",
-        "a slow green turtle walks past the lazy dog",
-        "the quick red fox jumps over a sleepy cat",
-    ]
-    docs = _kn_docs(spark, texts)
-    lm3 = train_kn_trigram(docs, "text")
-    lmn = train_kn_ngram(docs, "text", n=3, prune=0)
-    assert (lm3.d1, lm3.d2, lm3.d3) == (
-        lmn.discounts[1],
-        lmn.discounts[2],
-        lmn.discounts[3],
-    )
-    assert (lm3.t_types, lm3.u_types, lm3.vocab_size) == (
-        lmn.t_types,
-        lmn.u_types,
-        lmn.vocab_size,
-    )
-    a = sorted(tuple(r) for r in score_kn_perplexity(docs, lm3).collect())
-    b = sorted(
-        tuple(r) for r in score_kn_ngram_perplexity(docs, lmn).collect()
-    )
-    assert a == b
-
-
-def test_kn5_beats_kn3_in_domain(spark):
-    """On a corpus with long repeated phrases, the 5-gram memorizes
-    more context than the trigram: mean in-domain avg_nll(kn5) <
-    avg_nll(kn3) — the reason CCNet ships a 5-gram KenLM."""
-    from pyspark.sql import functions as F
-
-    from skrub_spark.operators.lm_filter import (
-        score_kn_ngram_perplexity,
-        train_kn_ngram,
-    )
-
-    base = [
-        "alpha beta gamma delta epsilon zeta eta theta",
-        "one two three four five six seven eight nine",
-        "red orange yellow green blue indigo violet tone",
-    ]
-    texts = [t for t in base for _ in range(4)] + [
-        "alpha beta gamma delta nine eight seven violet",
-        "one two red orange epsilon zeta blue indigo",
-    ]
-    docs = _kn_docs(spark, texts)
-    lm5 = train_kn_ngram(docs, "text", n=5, prune=0)
-    lm3 = train_kn_ngram(docs, "text", n=3, prune=0)
-    m5 = (
-        score_kn_ngram_perplexity(docs, lm5)
-        .agg(F.avg("avg_nll"))
-        .first()[0]
-    )
-    m3 = (
-        score_kn_ngram_perplexity(docs, lm3)
-        .agg(F.avg("avg_nll"))
-        .first()[0]
-    )
-    assert m5 < m3
-
-
-def test_kn5_pruning_falls_through_finite(spark):
-    """Top-order pruning must only remove 5-gram mass (scores fall
-    through to continuation orders, never NULL/inf), and a prune
-    above every count empties the top order entirely."""
-    from skrub_spark.operators.lm_filter import (
-        score_kn_ngram_perplexity,
-        train_kn_ngram,
-    )
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog tonight",
-        "the quick brown fox jumps over the lazy dog again",
-        "a different sentence with mostly unique words here now",
-    ]
-    docs = _kn_docs(spark, texts)
-    lm0 = train_kn_ngram(docs, "text", n=5, prune=0)
-    lmX = train_kn_ngram(docs, "text", n=5, prune=10**6)
-    assert lmX.top_counts.count() == 0
-    assert lm0.top_counts.count() > 0
-    s0 = {
-        r["doc_id"]: r["avg_nll"]
-        for r in score_kn_ngram_perplexity(docs, lm0).collect()
-    }
-    sX = {
-        r["doc_id"]: r["avg_nll"]
-        for r in score_kn_ngram_perplexity(docs, lmX).collect()
-    }
-    assert all(v is not None for v in sX.values())
-    # memorized 5-grams gone -> in-domain docs score worse
-    assert sX[0] > s0[0]
-
-
-def test_kn5_oov_floor_finite(spark):
-    """A fully out-of-vocabulary probe document must still score a
-    finite avg_nll through the unseen-word floor."""
-    from skrub_spark.operators.lm_filter import (
-        score_kn_ngram_perplexity,
-        train_kn_ngram,
-    )
-
-    train = _kn_docs(
-        spark,
-        ["the quick brown fox jumps over the lazy dog every day"] * 3,
-    )
-    lm = train_kn_ngram(train, "text", n=5, prune=0)
-    probe = _kn_docs(spark, ["zz yy xx ww vv uu tt ss"])
-    r = score_kn_ngram_perplexity(probe, lm).collect()[0]
-    assert r["avg_nll"] is not None
-    import math
-
-    assert math.isfinite(r["avg_nll"]) and r["avg_nll"] > 0
-
-
-def test_kn_order_validation(spark):
-    from skrub_spark.operators.lm_filter import train_kn_ngram
-
-    with pytest.raises(ValueError, match="n must be"):
-        train_kn_ngram(_kn_docs(spark, ["a b c"]), "text", n=2)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Round-12 operator contracts: best-fit-decreasing sequence
 packing, checksum-validating PII, streaming decontamination gate,
-preference-pair construction, frozen KN serving twin."""
+preference-pair construction."""
 
 from __future__ import annotations
 
@@ -500,77 +500,6 @@ def test_preference_pairs_partitioning_invariant(spark):
         ).collect())
     )
     assert a == b
-
-
-# ---------------------------------------------------------------------------
-# Frozen KN serving twin
-# ---------------------------------------------------------------------------
-
-
-def test_kn_freeze_roundtrip_scoring_identical(spark):
-    """kn_from_frozen(kn_to_frozen(lm)) must score BIT-IDENTICALLY
-    to the live-trained model — the freeze is a serialization, not
-    an approximation."""
-    from skrub_spark.operators.lm_filter import (
-        kn_from_frozen,
-        kn_to_frozen,
-        score_kn_ngram_perplexity,
-        train_kn_ngram,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (i, "the quick brown fox jumps over the lazy dog "
-                "the quick brown cat sleeps")
-            for i in range(4)
-        ]
-        + [(9, "a very different sentence with other words entirely")],
-        "doc_id long, text string",
-    )
-    lm = train_kn_ngram(corpus, "text", n=3, prune=0)
-    frozen = kn_to_frozen(lm)
-    lm2 = kn_from_frozen(spark, frozen)
-    probe = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps"),
-            (2, "unseen zz words qq here pp"),
-            (3, "the quick brown unseen tail"),
-            (4, "xy"),  # too short -> NULL
-        ],
-        "doc_id long, text string",
-    )
-    a = sorted(
-        map(tuple, score_kn_ngram_perplexity(probe, lm).collect())
-    )
-    b = sorted(
-        map(tuple, score_kn_ngram_perplexity(probe, lm2).collect())
-    )
-    assert a == b
-    # the frozen dict survives a repr round-trip (the _frozen.py
-    # commit format)
-    import ast as _ast
-
-    assert _ast.literal_eval(repr(frozen)) == frozen
-
-
-def test_kn_frozen_model_committed_shape():
-    from skrub_spark._frozen import KN_MODEL as m
-
-    assert m["n"] == 3
-    assert set(m["discounts"]) == {1, 2, 3}
-    assert all(0.05 <= d <= 0.95 for d in m["discounts"].values())
-    assert len(m["top_counts"]) > 50
-    assert all(c > m["prune"] for _, _, c in m["top_counts"])
-    # self-consistency: top_ctx sums the pruned top_counts
-    import collections
-
-    by_ctx = collections.Counter()
-    tot = collections.Counter()
-    for ctx, w, c in m["top_counts"]:
-        by_ctx[ctx] += 1
-        tot[ctx] += c
-    for ctx, c_ctx, n1p in m["top_ctx"]:
-        assert tot[ctx] == c_ctx and by_ctx[ctx] == n1p
 
 
 # ---------------------------------------------------------------------------
@@ -1175,33 +1104,6 @@ def test_dp_histogram_properties(spark):
         dp_histogram(df, ["g"], epsilon=0.0)
     with _pt.raises(ValueError):
         dp_histogram(df, [], epsilon=1.0)
-
-
-def test_rho_select_hand(spark):
-    from skrub_spark.operators.lm_filter import rho_select
-
-    cur = spark.createDataFrame(
-        [(1, 5.0), (2, 3.0), (3, 4.0), (4, None), (6, 9.0)],
-        "doc_id long, avg_nll double",
-    )
-    ref = spark.createDataFrame(
-        [(1, 2.0), (2, 3.5), (3, 1.0), (4, 1.0), (5, 1.0)],
-        "doc_id long, avg_nll double",
-    )
-    out = rho_select(cur, ref, 2).collect()
-    # excesses: d1=3.0, d2=-0.5, d3=3.0; d4 null cur, d5/d6 missing
-    # one side -> excluded. tie 3.0 broken by doc_id asc.
-    assert [(r["doc_id"], r["rho"]) for r in out] == [
-        (1, 3.0),
-        (3, 3.0),
-    ]
-    assert out[0]["nll_model"] == 5.0 and out[0]["nll_ref"] == 2.0
-    # k larger than survivors -> all three
-    assert rho_select(cur, ref, 10).count() == 3
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        rho_select(cur, ref, 0)
 
 
 def test_rasch_prox_reference(spark):
