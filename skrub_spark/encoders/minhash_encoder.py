@@ -39,9 +39,11 @@ class MinHashEncoder(SparkTransformer):
 
     def _transform(self, df: DataFrame) -> DataFrame:
         lo, hi = self.ngram_range
-        grams = char_ngrams(F.col(self.col), lo)
+        # a null cell encodes like a string too short for any n-gram
+        text = F.coalesce(F.col(self.col), F.lit(""))
+        grams = char_ngrams(text, lo)
         for n in range(lo + 1, hi + 1):
-            grams = F.concat(grams, char_ngrams(F.col(self.col), n))
+            grams = F.concat(grams, char_ngrams(text, n))
         sig = minhash_from_grams(grams, self.n_components, hash=self.hash)
         keep = [c for c in df.columns if not (self.drop_original and c == self.col)]
         out = df.select(*keep, sig.alias("__sig"))

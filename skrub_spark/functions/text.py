@@ -43,7 +43,8 @@ def _shifted_shingles(items: Column, k: int, sep: str) -> Column:
     The naive ``transform(sequence(...), i -> f(items, i))`` form
     re-evaluates the ``items`` subexpression PER ELEMENT (O(n²) per
     row when items is a split()); shifted slices evaluate it k times
-    per row and the zip_with lambdas touch only elements."""
+    per row and the zip_with lambdas touch only elements. A null
+    ``items`` gives null; one shorter than ``k`` gives ``[]``."""
     n = F.size(items)
     width = n - (k - 1)
     out = F.slice(items, 1, width)
@@ -55,7 +56,9 @@ def _shifted_shingles(items: Column, k: int, sep: str) -> Column:
         out = F.call_function(
             "zip_with", out, F.slice(items, j + 1, width), join
         )
-    return F.when(n >= k, out).otherwise(F.array().cast("array<string>"))
+    return F.when(n >= k, out).when(
+        items.isNotNull(), F.array().cast("array<string>")
+    )
 
 
 # Per-document gram budget (r9, VERDICT r8 #4): at crawl scale a

@@ -119,7 +119,8 @@ def _pair_distance(left_cols, right_cols, strategy, kinds=None, scales=None):
             rg = F.array_distinct(char_ngrams(rc, 3))
             inter = F.size(F.array_intersect(lg, rg)).cast("double")
             union = F.size(F.array_union(lg, rg)).cast("double")
-            t = 1.0 - inter / F.greatest(union, F.lit(1.0))
+            # a null key has no grams: distance 1, as for disjoint grams
+            t = F.coalesce(1.0 - inter / F.greatest(union, F.lit(1.0)), F.lit(1.0))
         d = t if d is None else d + t
     if num_sq is not None:
         n = F.sqrt(num_sq)

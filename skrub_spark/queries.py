@@ -34,6 +34,7 @@ from .functions.text import language_id, quality_columns, tokens
 from .operators.agg_joiner import AggJoiner, MultiAggJoiner, aggregate_table
 from .operators.joiner import fuzzy_join
 from .operators.session_encoder import session_features
+from .session import checkpoint
 from .similarity.topk import topk_cosine
 from .sources import load_table
 from .encoders.squashing_scaler import SquashingScaler
@@ -81,6 +82,21 @@ def _fresh_tmp(prefix: str, max_age_s: int = 7200) -> str:
     except OSError:
         pass
     return os.path.join(base, prefix + uuid.uuid4().hex[:8])
+
+
+def _await_stream(q, min_batches: int) -> None:
+    """Wait for a started streaming query to finish: stop it and raise
+    ``TimeoutError`` after 300 s, and raise ``AssertionError`` when
+    fewer than ``min_batches`` micro-batches read data (queries that
+    exercise cross-batch state pass 2)."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError("streaming query did not finish in 300s")
+    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+    if n_batches < min_batches:
+        raise AssertionError(
+            f"expected >={min_batches} data micro-batches, got {n_batches}"
+        )
 
 
 def _dec(col):
@@ -980,14 +996,7 @@ def q_streaming_near_dup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     return near_dup_summary(spark.table(name), ids=docs)
 
 
@@ -2109,9 +2118,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
+    _await_stream(q, 0)
     return spark.table(name).select("doc_id", "lang", "source")
 
 
@@ -2191,14 +2198,7 @@ def q_streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     return spark.table(name).groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias(
@@ -2238,9 +2238,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
+    _await_stream(q, 0)
     return spark.table(name).select(
         "event_id", "user_id", "value", "user_events", "user_avg"
     )
@@ -2275,9 +2273,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
+    _await_stream(q, 0)
     return spark.table(name)
 
 
@@ -3686,9 +3682,7 @@ def q_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
+    _await_stream(q, 0)
     return spark.table(name).select(
         "doc_id", F.col("qs").alias("quality_score")
     )
@@ -4224,14 +4218,7 @@ def q_streaming_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     out = near_dup_summary(
         spark.table(name),
         ids=emb.select(F.col("vec_id").alias("doc_id")),
@@ -4520,14 +4507,7 @@ def q_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     return spark.table(name).select(
         "o_custkey", "o_orderkey", "o_totalprice", "applied"
     )
@@ -5224,18 +5204,11 @@ def q_streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
-    # localCheckpoint breaks the memory-sink lineage: joining two
+    _await_stream(q, 2)
+    # checkpoint breaks the memory-sink lineage: joining two
     # frames derived from the same in-memory sink alias trips
     # Spark's conflicting-reference resolution
-    pairs = spark.table(name).localCheckpoint(eager=True)
+    pairs = checkpoint(spark.table(name))
     agg = pairs.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -5445,15 +5418,8 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
-    return spark.table(name).localCheckpoint(eager=True).select(
+    _await_stream(q, 2)
+    return checkpoint(spark.table(name)).select(
         F.col("key").alias("user_id"), "count_at_alert"
     )
 
@@ -15868,15 +15834,8 @@ def q_streaming_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
-    return spark.table(name).localCheckpoint(eager=True).select(
+    _await_stream(q, 2)
+    return checkpoint(spark.table(name)).select(
         F.col("key").alias("event_type"),
         F.col("id").alias("event_id"),
         "value",
@@ -16869,14 +16828,7 @@ def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     return spark.table(name).select(
         "key", "id", "value", "s_pos6", "s_neg6", "alarm"
     )
@@ -17074,14 +17026,7 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = streaming_upsert_sink(
         stream, root, "o_custkey", "o_orderkey", "op", checkpoint=ckpt
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     # duplicate delivery: replaying batch 1 must be a no-op
     before = snapshot_versions(root, spark)
     applied = upsert_batch(
@@ -18924,14 +18869,7 @@ def q_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     mem = spark.table(name)
     agg = (
         mem.where(F.col("kind") == "agg")
@@ -20297,14 +20235,7 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_path=out,
         checkpoint_path=ckpt,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming query did not finish in 300s")
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    if n_batches < 2:
-        raise AssertionError(
-            f"expected >=2 data micro-batches, got {n_batches}"
-        )
+    _await_stream(q, 2)
     return spark.read.parquet(out).select(
         "doc_id", "kind", "n_shingles", "n_contaminated", "batch_id"
     )
@@ -21699,9 +21630,11 @@ ORACLES["competing_risks"] = """
 # Registry order is deliberate: the driver's correctness gate checks
 # only the first 50 entries, so WINDOW keeps a representative of every
 # operator family in SURVEY.md §2 there, exact-oracled where the
-# family has one. BATTERY holds the rest; tools/check_correctness.py
-# runs all of them. Rotating a query into the window is a move
-# between the two tuples.
+# family has one. BATTERY holds the rest. tools/check_correctness.py
+# runs all of them in one pass: per query one collect and one oracle
+# fetch, checked for column type families and strict values, and
+# recorded with a row sha256 and the query's Spark jobs. Rotating a
+# query into the window is a move between the two tuples.
 WINDOW = (
     "pricing_summary",
     "top_orders",

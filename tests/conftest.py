@@ -70,6 +70,24 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)`` runs ``fn()`` inside Spark job group
+    ``group`` and returns ``(fn(), jobs)``. The group is cleared even
+    when ``fn`` raises, so it never leaks into later tests."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

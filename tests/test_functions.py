@@ -79,8 +79,8 @@ def test_text_helpers_match_python_reference(spark):
     """tokens, word_shingles (k = 2, 3), char_ngrams, lines and
     words_az09 against Python references on null, empty,
     whitespace-only, multi-space and unicode strings. A null string
-    gives null tokens/lines/words but empty shingle and n-gram
-    arrays (their size guard reads a null size as "too short")."""
+    gives null for every helper; a string with too few tokens or
+    characters gives empty shingle and n-gram arrays."""
     df = spark.createDataFrame(list(enumerate(_TEXT_CASES)), "id int, t string")
     cols = {
         "toks": tokens("t"),
@@ -98,9 +98,9 @@ def test_text_helpers_match_python_reference(spark):
         low = None if s is None else s.lower()
         want = {
             "toks": _tokens_ref(s),
-            "sh2": _shingles_ref(_tokens_ref(low) or [], 2, " "),
-            "sh3": _shingles_ref(_tokens_ref(low) or [], 3, " "),
-            "ng3": _shingles_ref(list(low or ""), 3, ""),
+            "sh2": None if s is None else _shingles_ref(_tokens_ref(low), 2, " "),
+            "sh3": None if s is None else _shingles_ref(_tokens_ref(low), 3, " "),
+            "ng3": None if s is None else _shingles_ref(list(low), 3, ""),
             "lines": None if s is None else [
                 ln.strip(" ") for ln in s.split("\n") if ln.strip(" ")
             ],

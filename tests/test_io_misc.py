@@ -26,21 +26,15 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
     assert "PartitionFilters: [" in plan
 
 
-def test_load_table_infers_each_file_schema_once(spark, tmp_path):
+def test_load_table_infers_each_file_schema_once(spark, tmp_path, count_jobs):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
-    sc = spark.sparkContext
 
     def load(group):
-        sc.setJobGroup(group, "count jobs")
-        try:
-            df = load_table(spark, str(tmp_path), "t")
-            return df, len(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setJobGroup(None, None)
+        return count_jobs(group, lambda: load_table(spark, str(tmp_path), "t"))
 
     first, _ = load("load_first")
     second, jobs = load("load_second")

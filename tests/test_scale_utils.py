@@ -122,21 +122,16 @@ def test_fuzzy_join_auto_strategy(spark):
     assert big.count() == 1  # every left row survives the LSH path
 
 
-def test_column_associations_single_job(spark):
+def test_column_associations_single_job(spark, count_jobs):
     """VERDICT r1: one exploded groupBy for ALL pairs — the job count
     must not grow with the number of column pairs."""
     from skrub_spark import column_associations
 
     rows = [(i % 3, (i % 3) * 10, i % 2, float(i % 5), i % 7) for i in range(60)]
     df = spark.createDataFrame(rows, "a int, b int, c int, d double, e int")
-    sc = spark.sparkContext
 
     def jobs_for(frame, group):
-        sc.setJobGroup(group, "count jobs")
-        res = column_associations(frame).collect()
-        n = len(sc.statusTracker().getJobIdsForGroup(group))
-        sc.setJobGroup(None, None)
-        return res, n
+        return count_jobs(group, lambda: column_associations(frame).collect())
 
     out, n10 = jobs_for(df, "assoc_10_pairs")          # 5 cols = 10 pairs
     _, n3 = jobs_for(df.select("a", "b", "c"), "assoc_3_pairs")  # 3 pairs

@@ -105,28 +105,18 @@ def test_table_vectorizer_specific_transformers(spark):
     assert "seg_0" in out.columns and "seg_AUTO" not in out.columns
 
 
-def _fit_jobs(spark, tv, df, group):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "count jobs")
-    try:
-        tv.fit(df)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup(None, None)
-
-
 @pytest.mark.parametrize("clean", [True, False])
-def test_table_vectorizer_fit_jobs_flat_in_one_hot_columns(spark, clean):
+def test_table_vectorizer_fit_jobs_flat_in_one_hot_columns(spark, clean, count_jobs):
     """Every one-hot vocabulary comes from one agg: the fit's job count
     must not grow with the number of one-hot columns."""
     rows = [(i, *[f"v{(i + k) % 3}" for k in range(6)]) for i in range(30)]
     df = spark.createDataFrame(
         rows, "id int, " + ", ".join(f"s{k} string" for k in range(6))
     )
-    one = _fit_jobs(
-        spark, TableVectorizer(clean=clean), df.select("id", "s0"), f"tv1_{clean}"
+    _, one = count_jobs(
+        f"tv1_{clean}", lambda: TableVectorizer(clean=clean).fit(df.select("id", "s0"))
     )
-    six = _fit_jobs(spark, TableVectorizer(clean=clean), df, f"tv6_{clean}")
+    _, six = count_jobs(f"tv6_{clean}", lambda: TableVectorizer(clean=clean).fit(df))
     assert six <= one, f"{six} fit jobs for 6 one-hot columns vs {one} for 1"
 
 

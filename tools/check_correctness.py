@@ -1,72 +1,196 @@
-"""Local stand-in for the driver's t2 correctness gate.
+"""The oracle battery: the local stand-in for the driver's correctness
+gate, and the one runner for values, type families, row hashes and jobs.
 
-Runs every ``queries()`` entry on Spark at sf0.01, runs the matching
-``oracle_sql()`` in DuckDB over the same parquet, and compares
-row count, column names, and order-insensitive values (sorted rows,
-columns sorted by name). Exits nonzero on any mismatch.
+Each ``queries()`` entry is built and collected once on Spark inside a
+job group, and its ``oracle_sql()`` is fetched once from DuckDB over
+the same parquet. The checks, in order, name a failure's status:
+
+- ``spark_error``, then ``duckdb_error``;
+- ``columns``: the name set, and per column the Spark type family
+  against the Arrow type family. This is the only check that sees a
+  mismatch on a zero-row or all-null column;
+- ``rowcount``;
+- ``values``: sorted rows, columns sorted by name, under
+  :func:`strict_canon`, which compares ``(type, repr)`` as a value-hash
+  does: ``3`` is not ``3.0``, and a HUGEINT ``Decimal`` is not an ``int``.
+
+Every record, rows-only ones included, carries ``sha256`` (of the
+sorted canonical rows) and ``jobs`` (the Spark jobs that building and
+collecting the query ran). The run prints the job total and exits
+nonzero on any failure.
+
+Usage::
+
+    python tools/check_correctness.py [sf_dir] [query_list] [json_out]
+    python tools/check_correctness.py diff A.json B.json
+
+``query_list`` is comma-separated (empty: every query). With
+``SPARK_GRAFT_VANILLA=1`` the run uses a plain ``SparkSession`` with
+stock defaults, as the driver does, so every query must prepare its
+own session state. ``diff`` runs no Spark: it lists every query whose
+``status``, ``rows`` or ``sha256`` differs between two ``json_out``
+files and exits nonzero if there is one. A ``jobs`` difference is
+reported without failing, because a query's job count can depend on
+what ran before it in the session.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import math
+import decimal
+import hashlib
+import json
 import os
 import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = (
-    sys.argv[2].split(",") if len(sys.argv) > 2 and sys.argv[2] else None
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
 )
-# optional third arg: path to dump a per-query JSON record (the
-# committed CORRECTNESS_full_rN.json artifact for positions 51+,
-# which the driver's 50-entry window never reaches)
-JSON_OUT = sys.argv[3] if len(sys.argv) > 3 else None
 
 
-def canon(v):
+def family(t: str) -> str:
+    """Collapse a type name to a comparison family."""
+    t = t.lower()
+    if any(k in t for k in ("int", "long", "short", "byte")) and "interval" not in t:
+        return "int"
+    if any(k in t for k in ("float", "double", "halffloat")):
+        return "float"
+    if "decimal" in t:
+        return "decimal"
+    if "bool" in t:
+        return "bool"
+    if any(k in t for k in ("string", "varchar", "large_string", "utf8")):
+        return "str"
+    if "timestamp" in t:
+        return "timestamp"
+    if "date" in t:
+        return "date"
+    if any(k in t for k in ("list", "array")):
+        return "list"
+    return t
+
+
+def strict_canon(v):
+    """(type_tag, canonical_repr) — representation-sensitive."""
     if v is None:
-        return None
+        return ("null", "")
     if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, (int,)):
-        return int(v)
+        return ("bool", str(v))
+    if isinstance(v, int):
+        return ("int", str(v))
     if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # collapse -0.0 vs 0.0
-        return v + 0.0
+        # repr is bit-faithful for doubles; collapse -0.0 only
+        return ("float", repr(v + 0.0))
     if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
+        return ("ts", v.replace(tzinfo=None).isoformat())
     if isinstance(v, dt.date):
-        return v.isoformat()
+        return ("date", v.isoformat())
     if isinstance(v, (list, tuple)):
-        return tuple(canon(x) for x in v)
+        return ("list", tuple(strict_canon(x) for x in v))
+    if isinstance(v, decimal.Decimal):
+        return ("decimal", str(v))
+    if isinstance(v, bytes):
+        return ("bytes", v.hex())
+    return (type(v).__name__, str(v))
+
+
+def canon_rows(rows, cols) -> list[tuple]:
+    """Row dicts as sorted tuples of :func:`strict_canon` values, with
+    the columns ``cols`` in name order."""
+    cols = sorted(cols)
+    return sorted(tuple(strict_canon(r[c]) for c in cols) for r in rows)
+
+
+def row_hash(rows: list[tuple]) -> str:
+    """sha256 of :func:`canon_rows` output."""
+    return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+
+def compare(stypes: dict, srows: list, dtypes: dict, drows: list):
+    """The first failed check as ``(status, message)``, or ``None``.
+
+    ``stypes`` and ``dtypes`` map each column to its Spark and Arrow
+    type name; ``srows`` and ``drows`` are :func:`canon_rows` output."""
+    if sorted(stypes) != sorted(dtypes):
+        return "columns", f"columns {sorted(stypes)} != {sorted(dtypes)}"
+    bad = [
+        f"{c}: spark={stypes[c]} duckdb={dtypes[c]}"
+        for c in sorted(stypes)
+        if family(stypes[c]) != family(dtypes[c])
+    ]
+    if bad:
+        return "columns", "type families differ: " + "; ".join(bad)
+    if len(srows) != len(drows):
+        return "rowcount", f"rowcount spark={len(srows)} duckdb={len(drows)}"
+    pairs = [(a, b) for a, b in zip(srows, drows) if a != b]
+    if pairs:
+        a, b = pairs[0]
+        return "values", (
+            f"values differ ({len(pairs)}/{len(srows)} rows)\n"
+            f"  spark : {a}\n  duckdb: {b}"
+        )
+    return None
+
+
+def collect(spark, name: str, fn, sf_dir: str):
+    """Build and collect one query inside job group ``name``, then free
+    its staged blocks. Returns ``(types, row dicts, error, jobs)``."""
+    from skrub_spark import release
+
+    sc = spark.sparkContext
+    sc.setJobGroup(name, "oracle battery")
     try:
-        import decimal
+        sdf = fn(spark, sf_dir)
+        out = dict(sdf.dtypes), [r.asDict() for r in sdf.collect()], None
+    except Exception as e:  # noqa: BLE001
+        out = None, None, e
+    jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+    sc.setJobGroup(None, None)
+    # a failed query's staged blocks must not leak into the next
+    release(spark)
+    return (*out, jobs)
 
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-    except ImportError:
-        pass
-    return v
+
+def diff(a_path: str, b_path: str) -> int:
+    """Print what differs between two ``json_out`` records; 1 when a
+    ``status``, ``rows`` or ``sha256`` differs, else 0."""
+    a, b = (json.load(open(p))["results"] for p in (a_path, b_path))
+    n_bad = 0
+    for name in sorted(a.keys() | b.keys()):
+        ra, rb = a.get(name, {}), b.get(name, {})
+        keys = [k for k in ("status", "rows", "sha256") if ra.get(k) != rb.get(k)]
+        if keys:
+            n_bad += 1
+            print(f"DIFF {name}: " + ", ".join(
+                f"{k} {ra.get(k)} -> {rb.get(k)}" for k in keys
+            ))
+        if ra.get("jobs") != rb.get("jobs"):
+            print(f"jobs {name}: {ra.get('jobs')} -> {rb.get('jobs')}")
+    totals = [sum(r.get("jobs") or 0 for r in x.values()) for x in (a, b)]
+    print(f"\n{len(a)} vs {len(b)} queries, jobs {totals[0]} -> {totals[1]}")
+    print(f"{n_bad} differ" if n_bad else "no differences")
+    return 1 if n_bad else 0
 
 
-def main():
-    import os
+def main(argv: list[str]) -> int:
+    if argv[:1] == ["diff"]:
+        if len(argv) != 3:
+            print("usage: check_correctness.py diff A.json B.json")
+            return 2
+        return diff(argv[1], argv[2])
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    only = set(argv[1].split(",")) if len(argv) > 1 and argv[1] else None
+    json_out = argv[2] if len(argv) > 2 else None
 
+    sys.path.insert(0, ROOT)
     import duckdb
 
     import __spark_entry__ as entrymod
-    from skrub_spark import release
 
     if os.environ.get("SPARK_GRAFT_VANILLA"):
-        # mimic the DRIVER's environment: a plain SparkSession with
-        # stock defaults (200 shuffle partitions, no engine conf) —
-        # every query must self-prepare via _prep()
         from pyspark.sql import SparkSession
 
         spark = SparkSession.builder.master("local[8]").getOrCreate()
@@ -77,103 +201,63 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = []
+    failures = sorted(only - qs.keys()) if only else []
+    for name in failures:
+        print(f"FAIL {name}: unknown query")
     records = {}
-
-    def fail(name, status, msg):
-        # status names the failed check: spark_error, duckdb_error,
-        # columns, rowcount or values
-        failures.append(name)
-        records[name] = {"status": status, "err": msg[:500]}
-        print(f"FAIL {name}: {msg}")
-
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR)
-            srows = sdf.collect()
-            scols = list(sdf.columns)
-            elapsed = time.time() - t0
-        except Exception as e:  # noqa: BLE001
-            fail(name, "spark_error", f"spark error: {e}")
-            continue
-        finally:
-            # a failed query's staged blocks must not leak into the next
-            release(spark)
-        if name not in oracles:
-            records[name] = {
-                "status": "rows_only", "rows": len(srows),
-                "sec": round(elapsed, 2),
-            }
-            print(f"ok?  {name}: rows-only ({len(srows)} rows, {elapsed:.1f}s)")
-            if len(srows) == 0:
-                print(f"     WARNING {name}: 0 rows")
-            continue
-        try:
-            ddf = con.execute(oracles[name]).fetch_arrow_table()
-        except Exception as e:  # noqa: BLE001
-            fail(name, "duckdb_error", f"duckdb error: {e}")
-            continue
-        dcols = ddf.column_names
-        if sorted(scols) != sorted(dcols):
-            fail(name, "columns", f"columns {sorted(scols)} != {sorted(dcols)}")
-            continue
-        drows = ddf.to_pylist()
-        if len(srows) != len(drows):
-            fail(
-                name, "rowcount",
-                f"rowcount spark={len(srows)} duckdb={len(drows)}",
-            )
-            continue
-        cols = sorted(scols)
-
-        def sort_key(t):
-            return tuple((v is None, str(type(v)), v if v is not None else 0) for v in t)
-
-        sset = sorted(
-            (tuple(canon(r[c]) for c in cols) for r in (row.asDict() for row in srows)),
-            key=sort_key,
-        )
-        dset = sorted((tuple(canon(r[c]) for c in cols) for r in drows), key=sort_key)
-        if sset != dset:
-            ndiff = sum(1 for a, b in zip(sset, dset) if a != b)
-            fail(name, "values", f"values differ ({ndiff}/{len(sset)} rows)")
-            for a, b in list(zip(sset, dset))[:200]:
-                if a != b:
-                    print(f"  spark : {a}")
-                    print(f"  duckdb: {b}")
-                    break
+        stypes, rows, err, jobs = collect(spark, name, fn, sf_dir)
+        rec = records[name] = {"jobs": jobs, "sec": round(time.time() - t0, 2)}
+        verdict = None
+        if err is not None:
+            verdict = "spark_error", f"spark error: {err}"
         else:
-            records[name] = {
-                "status": "pass", "rows": len(srows), "sec": round(elapsed, 2),
-            }
-            print(f"PASS {name} ({len(srows)} rows, {elapsed:.1f}s)")
-    if JSON_OUT:
-        import json
-
-        with open(JSON_OUT, "w") as f:
+            srows = canon_rows(rows, stypes)
+            rec.update(rows=len(srows), sha256=row_hash(srows))
+            if name in oracles:
+                try:
+                    tbl = con.execute(oracles[name]).fetch_arrow_table()
+                except Exception as e:  # noqa: BLE001
+                    verdict = "duckdb_error", f"duckdb error: {e}"
+                else:
+                    verdict = compare(
+                        stypes, srows,
+                        {f.name: str(f.type) for f in tbl.schema},
+                        canon_rows(tbl.to_pylist(), tbl.column_names),
+                    )
+        if verdict is not None:
+            failures.append(name)
+            rec.update(status=verdict[0], err=verdict[1][:500])
+            print(f"FAIL {name}: {verdict[1]}")
+        elif name in oracles:
+            rec["status"] = "pass"
+            print(f"PASS {name} ({rec['rows']} rows, {jobs} jobs, {rec['sec']}s)")
+        else:
+            rec["status"] = "rows_only"
+            print(f"ok?  {name}: rows-only ({rec['rows']} rows, {jobs} jobs, {rec['sec']}s)")
+            if not rec["rows"]:
+                print(f"     WARNING {name}: 0 rows")
+    if json_out:
+        with open(json_out, "w") as f:
             json.dump(
-                {"sf_dir": SF_DIR, "results": records}, f, indent=1,
+                {"sf_dir": sf_dir, "results": records}, f, indent=1,
                 sort_keys=True,
             )
-    print()
+    print(f"\njobs: {sum(r['jobs'] for r in records.values())}")
     if failures:
         print("FAILURES:", failures)
-        sys.exit(1)
+        return 1
     print("all green")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))
