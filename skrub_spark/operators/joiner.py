@@ -341,8 +341,13 @@ def fuzzy_join(
     # hash aggregate gets map-side partial aggregation — per-partition
     # the candidate set collapses to one row per left row before the
     # shuffle, where a window would sort-shuffle every candidate pair.
+    # A null distance (a null key on either side) must lose: min()
+    # orders a null first, so one null-key right row would win every
+    # left row's argmin and leave it unmatched. The leading is-null
+    # flag sorts it last; a filter on the distance would be pushed into
+    # the cross join's condition and evaluate every distance twice.
     struct_fields = (
-        [F.col(_DIST).alias("__d")]
+        [F.col(_DIST).isNull().alias("__null"), F.col(_DIST).alias("__d")]
         + [F.col(c).alias(f"__t{i}") for i, c in enumerate(tiebreak)]
         + [F.col(_RIGHT_ID).alias("__rid")]
     )

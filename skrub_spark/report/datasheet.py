@@ -10,8 +10,10 @@ value)`` — the exact-oracle core — plus a rendered HTML card
 (:func:`datasheet_html`, smoke-tested only, the TableReport
 precedent).
 
-Sections (each ONE bounded aggregation over the corpus scan; the
-whole datasheet is a fixed number of passes, never per-metric
+Sections (``corpus``, ``dedup`` and ``contamination`` read one
+persisted one-row ``totals`` aggregate; the mixes, the histogram and
+the drift statistics read one persisted GROUPING SETS aggregate, so
+the whole datasheet is a fixed number of passes, never per-metric
 jobs):
 
 - ``corpus``    — n_docs, n_tokens, total_chars, avg_chars,
@@ -40,7 +42,13 @@ from pyspark.sql import functions as F
 
 from ..functions.text import words_az09, word_shingles
 
-_SCHEMA = "section string, metric string, value double"
+# The grouping-sets pass groups by one of these columns at a time;
+# grouping_id() sets bit (len - 1 - i) for every column i it rolls up.
+_KEYS = ("lang", "source", "b")
+_GID = {
+    k: sum(1 << (len(_KEYS) - 1 - i) for i, c in enumerate(_KEYS) if c != k)
+    for k in _KEYS
+}
 
 
 def corpus_datasheet(
@@ -56,7 +64,8 @@ def corpus_datasheet(
     """The datasheet's numeric core: ``(section, metric, value)``
     rows (value is a double — exact counts or 6dp ratios).
 
-    The persisted tokenized base frame backs the returned frame; see
+    The persisted tokenized base frame and the two persisted
+    aggregates back the returned frame; see
     :func:`skrub_spark.release` for the cache contract."""
     from pyspark import StorageLevel
 
@@ -73,6 +82,15 @@ def corpus_datasheet(
         F.length(text_col).cast("long").alias("nch"),
         F.size(words_az09(text_col)).cast("long").alias("ntok"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    is_eval = (F.col("id") % eval_modulus) == 0
+    half_a = (F.col("id") % 2) == 0
+
+    def n_if(cond):
+        # a NULL doc_id is in neither split nor either half
+        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
+
+    # Both small aggregates are persisted: each feeds several union
+    # branches, and AQE re-executes a shared aggregate once per branch.
     totals = base.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("ntok").cast("long").alias("toks"),
@@ -81,70 +99,45 @@ def corpus_datasheet(
         F.countDistinct("source").cast("long").alias("ns"),
         F.countDistinct("text").cast("long").alias("nd"),
         F.max("nch").cast("long").alias("maxch"),
-    )
+        n_if(is_eval).alias("ne"),
+        n_if(~is_eval).alias("nt"),
+        n_if(half_a).alias("na"),
+        n_if(~half_a).alias("nb"),
+    ).persist()
     bt = F.broadcast(totals)
-
-    lit = F.lit
-    corpus = totals.selectExpr(
-        "stack(6, "
-        "'n_docs', cast(n as double), "
-        "'n_tokens', cast(toks as double), "
-        "'total_chars', cast(chars as double), "
-        "'avg_chars', round(cast(chars as double) / cast(n as double), 6), "
-        "'n_langs', cast(nl as double), "
-        "'n_sources', cast(ns as double)"
-        ") AS (metric, value)"
-    ).select(lit("corpus").alias("section"), "metric", "value")
-
-    def mix(col: str, section: str) -> DataFrame:
-        return (
-            base.groupBy(col)
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .crossJoin(bt)
-            .select(
-                lit(section).alias("section"),
-                F.coalesce(F.col(col), lit("<null>")).alias("metric"),
-                F.round(
-                    F.col("c").cast("double") / F.col("n").cast("double"), 6
-                ).alias("value"),
-            )
-        )
-
-    # equal-width 10-bin length histogram; bin rule shared with the
-    # PSI drift section and the SQL oracle
+    # one row per lang, per source and per length bin: the document
+    # count and its split between the doc_id-parity halves. The
+    # equal-width 10-bin length rule is shared with the SQL oracle.
     binc = F.least(
-        F.floor(
-            F.col("nch") * 10 / (F.col("maxch") + 1)
-        ).cast("int"),
-        lit(9),
+        F.floor(F.col("nch") * 10 / (F.col("maxch") + 1)).cast("int"),
+        F.lit(9),
     )
-    len_hist = (
+    g = (
         base.crossJoin(bt)
-        .groupBy(binc.alias("b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .select(
-            lit("len_hist").alias("section"),
-            F.concat(lit("bin_"), F.col("b").cast("string")).alias(
-                "metric"
-            ),
-            F.col("c").cast("double").alias("value"),
+        .select("id", "lang", "source", binc.alias("b"))
+        .groupingSets([[k] for k in _KEYS], *_KEYS)
+        .agg(
+            F.grouping_id().alias("gid"),
+            F.count(F.lit(1)).cast("long").alias("c"),
+            n_if(half_a).alias("ca"),
+            n_if(~half_a).alias("cb"),
         )
+        .persist()
     )
-
-    dedup = totals.select(
-        lit("dedup").alias("section"),
-        lit("exact_dup_rate").alias("metric"),
-        F.round(
-            (F.col("n") - F.col("nd")).cast("double")
-            / F.col("n").cast("double"),
-            6,
-        ).alias("value"),
+    lang, source, b = (_GID[k] for k in _KEYS)
+    shares = g.crossJoin(bt).selectExpr(
+        f"CASE gid WHEN {lang} THEN 'lang_mix' "
+        f"WHEN {source} THEN 'source_mix' ELSE 'len_hist' END AS section",
+        f"CASE gid WHEN {lang} THEN coalesce(lang, '<null>') "
+        f"WHEN {source} THEN coalesce(source, '<null>') "
+        "ELSE concat('bin_', CAST(b AS STRING)) END AS metric",
+        f"CASE gid WHEN {b} THEN CAST(c AS DOUBLE) "
+        "ELSE round(CAST(c AS DOUBLE) / CAST(n AS DOUBLE), 6) END AS value",
     )
 
     # ---- contamination: train docs sharing an 8-gram with the
     # deterministic eval split. Distinct grams on both sides; the
     # candidate join ships only gram-matched rows (semi join).
-    is_eval = (F.col("id") % eval_modulus) == 0
     grams = base.select(
         "id",
         is_eval.alias("ev"),
@@ -159,142 +152,64 @@ def corpus_datasheet(
         .select("id")
         .distinct()
     )
-    cont_counts = cont_ids.agg(
+    scalars = cont_ids.agg(
         F.count(F.lit(1)).cast("long").alias("nc")
-    )
-    split_counts = base.agg(
-        F.sum(F.when(is_eval, 1).otherwise(0)).cast("long").alias("ne"),
-        F.sum(F.when(~is_eval, 1).otherwise(0)).cast("long").alias("nt"),
-    )
-    contamination = (
-        cont_counts.crossJoin(F.broadcast(split_counts))
-        .selectExpr(
-            "stack(3, "
-            "'n_eval_docs', cast(ne as double), "
-            "'n_train_docs', cast(nt as double), "
-            "'contaminated_rate', "
-            "round(cast(nc as double) / cast(greatest(nt, 1) as double), 6)"
-            ") AS (metric, value)"
-        )
-        .select(lit("contamination").alias("section"), "metric", "value")
+    ).crossJoin(bt).selectExpr(
+        "stack(10, "
+        "'corpus', 'n_docs', CAST(n AS DOUBLE), "
+        "'corpus', 'n_tokens', CAST(toks AS DOUBLE), "
+        "'corpus', 'total_chars', CAST(chars AS DOUBLE), "
+        "'corpus', 'avg_chars', "
+        "round(CAST(chars AS DOUBLE) / CAST(n AS DOUBLE), 6), "
+        "'corpus', 'n_langs', CAST(nl AS DOUBLE), "
+        "'corpus', 'n_sources', CAST(ns AS DOUBLE), "
+        "'dedup', 'exact_dup_rate', "
+        "round(CAST(n - nd AS DOUBLE) / CAST(n AS DOUBLE), 6), "
+        "'contamination', 'n_eval_docs', CAST(ne AS DOUBLE), "
+        "'contamination', 'n_train_docs', CAST(nt AS DOUBLE), "
+        "'contamination', 'contaminated_rate', "
+        "round(CAST(nc AS DOUBLE) / CAST(greatest(nt, 1) AS DOUBLE), 6)"
+        ") AS (section, metric, value)"
     )
 
-    # ---- drift between doc_id-parity halves
-    half = (F.col("id") % 2 == 0).alias("ha")
-    hl = (
-        base.crossJoin(bt)
-        .groupBy(half, binc.alias("b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    hsum = hl.groupBy("ha").agg(F.sum("c").cast("long").alias("hn"))
-    wide = (
-        hl.groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("ha"), F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("ca"),
-            F.sum(F.when(~F.col("ha"), F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("cb"),
-        )
-        .crossJoin(
-            F.broadcast(
-                # coalesce: an empty doc-id-parity half must yield 0, not
-                # NULL, so the PSI stays finite and matches the oracle's
-                # zero-filled wide rows (same guard as the chi2 section)
-                hsum.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("ha"), F.col("hn"))), F.lit(0)
-                    )
-                    .cast("long")
-                    .alias("na"),
-                    F.coalesce(
-                        F.sum(F.when(~F.col("ha"), F.col("hn"))), F.lit(0)
-                    )
-                    .cast("long")
-                    .alias("nb"),
-                )
+    def drift(gid: int, metric: str, term: str, *cols: str) -> DataFrame:
+        """Sum over one grouping set's keys of a drift ``term`` of the
+        half counts ``ca``/``cb`` and half totals ``na``/``nb``: each
+        term rounded 6dp, then DECIMAL-summed (order-independent)."""
+        return (
+            g.where(F.col("gid") == gid)
+            .crossJoin(bt)
+            .selectExpr("ca", "cb", "na", "nb", *cols)
+            .selectExpr(f"CAST(round({term}, 6) AS DECIMAL(18,6)) AS t")
+            .selectExpr(
+                "'drift' AS section",
+                f"'{metric}' AS metric",
+                "round(CAST(sum(t) AS DOUBLE), 6) AS value",
             )
         )
-    )
-    # Laplace-smoothed shares (k=10 bins); each PSI term rounded 6dp
-    # then decimal-summed — order-independent
-    pa = (F.col("ca").cast("double") + 0.5) / (
-        F.col("na").cast("double") + 5.0
-    )
-    pb = (F.col("cb").cast("double") + 0.5) / (
-        F.col("nb").cast("double") + 5.0
-    )
-    psi = (
-        wide.select(
-            F.round((pa - pb) * F.log(pa / pb), 6)
-            .cast("decimal(18,6)")
-            .alias("t")
-        )
-        .agg(F.sum("t").cast("double").alias("value"))
-        .select(
-            lit("drift").alias("section"),
-            lit("psi_length").alias("metric"),
-            F.round("value", 6).alias("value"),
-        )
-    )
-    # χ² over the lang mix between halves: expected = half_n × pooled
-    lc = base.groupBy(half, F.col("lang").alias("lg")).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    lw = (
-        lc.groupBy("lg")
-        .agg(
-            F.sum(F.when(F.col("ha"), F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("ca"),
-            F.sum(F.when(~F.col("ha"), F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("cb"),
-        )
-        .crossJoin(bt)
-    )
-    tots2 = lw.agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-    )
-    lw2 = lw.crossJoin(F.broadcast(tots2))
-    pool = (F.col("ca") + F.col("cb")).cast("double") / (
-        F.col("na") + F.col("nb")
-    ).cast("double")
-    ea = F.col("na").cast("double") * pool
-    eb = F.col("nb").cast("double") * pool
-    term = F.when(
-        (ea > 0) & (eb > 0),
-        (F.col("ca").cast("double") - ea)
-        * (F.col("ca").cast("double") - ea)
-        / ea
-        + (F.col("cb").cast("double") - eb)
-        * (F.col("cb").cast("double") - eb)
-        / eb,
-    ).otherwise(F.lit(0.0))  # a fully-empty half has no chi2 mass
-    chi2 = (
-        lw2.select(F.round(term, 6).cast("decimal(18,6)").alias("t"))
-        .agg(F.sum("t").cast("double").alias("value"))
-        .select(
-            lit("drift").alias("section"),
-            lit("chi2_lang").alias("metric"),
-            F.round("value", 6).alias("value"),
-        )
-    )
 
-    out = corpus
-    for part in (
-        mix("lang", "lang_mix"),
-        mix("source", "source_mix"),
-        len_hist,
-        dedup,
-        contamination,
-        psi,
-        chi2,
-    ):
-        out = out.unionByName(part)
-    return out
+    # PSI over the length bins with Laplace-smoothed shares (k=10
+    # bins); χ² over the lang mix, expected = half_n × pooled share
+    # (a fully-empty half has no χ² mass)
+    psi = drift(
+        b,
+        "psi_length",
+        "(pa - pb) * ln(pa / pb)",
+        "(CAST(ca AS DOUBLE) + 0.5) / (CAST(na AS DOUBLE) + 5.0) AS pa",
+        "(CAST(cb AS DOUBLE) + 0.5) / (CAST(nb AS DOUBLE) + 5.0) AS pb",
+    )
+    pool = "(CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))"
+    chi2 = drift(
+        lang,
+        "chi2_lang",
+        "CASE WHEN ea > 0 AND eb > 0 THEN "
+        "(CAST(ca AS DOUBLE) - ea) * (CAST(ca AS DOUBLE) - ea) / ea"
+        " + (CAST(cb AS DOUBLE) - eb) * (CAST(cb AS DOUBLE) - eb) / eb "
+        "ELSE 0.0 END",
+        f"CAST(na AS DOUBLE) * {pool} AS ea",
+        f"CAST(nb AS DOUBLE) * {pool} AS eb",
+    )
+    return scalars.unionByName(shares).unionByName(psi).unionByName(chi2)
 
 
 def datasheet_html(rows: list, title: str = "Corpus datasheet") -> str:
@@ -302,10 +217,7 @@ def datasheet_html(rows: list, title: str = "Corpus datasheet") -> str:
     value) tuples) as a self-contained HTML card. Presentation only
     — the numeric core is the oracle-checked artifact."""
     by_sec: dict[str, list[tuple[str, float]]] = {}
-    for r in rows:
-        s, m, v = (r["section"], r["metric"], r["value"]) if hasattr(
-            r, "__getitem__"
-        ) and not isinstance(r, tuple) else (r[0], r[1], r[2])
+    for s, m, v in rows:
         by_sec.setdefault(s, []).append((m, v))
     parts = [
         "<!doctype html><html><head><meta charset='utf-8'>",

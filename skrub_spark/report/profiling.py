@@ -19,10 +19,14 @@ Both profiles are exact counting aggregations:
   distinct combinations and the count of rows living in duplicated
   keys (the join-fanout mass).
 
-Every candidate runs as its own column-pruned scan+agg and the
-per-candidate summaries (one row each) union — candidates are
-schema-bounded (a curated list, never data-sized), so the union is
-tiny and the scans parallelize. Battery oracles ``fd_profile`` /
+``fd_profile`` runs every candidate as its own column-pruned
+scan+agg and unions the per-candidate summaries (one row each):
+each candidate counts distinct values of a different rhs column, so
+one shared pass would expand every row once per candidate.
+``candidate_keys`` counts all candidate sets in ONE GROUPING SETS
+pass and summarizes the per-key counts by ``grouping_id()``.
+Candidates are schema-bounded (a curated list, never data-sized), so
+the summaries are tiny. Battery oracles ``fd_profile`` /
 ``candidate_keys`` replay the counting verbatim.
 """
 
@@ -78,25 +82,41 @@ def candidate_keys(
     comma-joined set, ``n_dup_rows`` the rows whose key value
     occurs more than once (the join-fanout mass). NULL-containing
     keys group by their NULL tuple (set semantics)."""
-    outs = []
-    for cols in candidates:
-        per_key = (
-            df.select([F.col(c) for c in cols])
-            .groupBy(*cols)
-            .agg(F.count(F.lit(1)).cast("long").alias("__n"))
-        )
-        outs.append(
-            per_key.agg(
-                F.lit(",".join(cols)).alias("cols"),
-                F.sum("__n").cast("long").alias("n_rows"),
-                F.count(F.lit(1)).cast("long").alias("n_distinct"),
-                F.sum(F.when(F.col("__n") > 1, F.col("__n")).otherwise(0))
-                .cast("long")
-                .alias("n_dup_rows"),
-            )
-        )
-    u = reduce(lambda x, y: x.unionByName(y), outs)
-    return u.withColumn("is_key", F.col("n_dup_rows") == 0)
+    cols = list(dict.fromkeys(c for cand in candidates for c in cand))
+    # grouping_id() sets bit (len - 1 - i) for every column i a set
+    # rolls up
+    gids = [
+        sum(1 << (len(cols) - 1 - i) for i, c in enumerate(cols)
+            if c not in cand)
+        for cand in candidates
+    ]
+    # one grouping set per distinct column set: a repeated set would
+    # count its rows twice under the same grouping_id()
+    sets = list({g: cand for g, cand in zip(gids, candidates)}.values())
+    per_key = df.groupingSets(sets, *cols).agg(
+        F.grouping_id().alias("gid"),
+        F.count(F.lit(1)).cast("long").alias("__n"),
+    )
+    per_set = per_key.groupBy("gid").agg(
+        F.sum("__n").cast("long").alias("n_rows"),
+        F.count(F.lit(1)).cast("long").alias("n_distinct"),
+        F.sum(F.when(F.col("__n") > 1, F.col("__n")).otherwise(0))
+        .cast("long")
+        .alias("n_dup_rows"),
+    )
+    # the listed candidates drive the join, so empty input still gives
+    # one row per candidate, with the empty aggregate's values
+    listed = df.sparkSession.createDataFrame(
+        [(g, ",".join(cand)) for g, cand in zip(gids, candidates)],
+        "gid long, cols string",
+    )
+    return listed.join(per_set, "gid", "left").select(
+        "cols",
+        "n_rows",
+        F.coalesce("n_distinct", F.lit(0)).alias("n_distinct"),
+        "n_dup_rows",
+        (F.col("n_dup_rows") == 0).alias("is_key"),
+    )
 
 
 def join_fanout_report(

@@ -430,6 +430,19 @@ def test_fuzzy_join_second_neighbor_single_candidate(spark):
     assert out["skrub_Joiner_rescaled_distance"] == out["skrub_Joiner_distance"]
 
 
+def test_fuzzy_join_null_right_key_matches_no_row(spark):
+    """A null right key has a null distance to every left row: it is no
+    candidate, so the other right rows still match."""
+    left = spark.createDataFrame([(1, "alpha"), (2, "beta")], "id int, k string")
+    rows = [(10, "alpha"), (20, "bet")]
+    for right_rows in (rows, rows + [(30, None)]):
+        right = spark.createDataFrame(right_rows, "rid int, name string")
+        out = fuzzy_join(
+            left, right, left_on="k", right_on="name", strategy="levenshtein"
+        ).collect()
+        assert {r["id"]: r["rid"] for r in out} == {1: 10, 2: 20}
+
+
 def test_ann_index_partition_pruned_probe(spark, tmp_path):
     """The written index is parquet partitioned by (table, bucket);
     a probe must scan ONLY matching partitions (PartitionFilters),

@@ -211,50 +211,6 @@ def test_unigram_zero_word_docs(spark):
     assert out[2]["n_words"] == 1 and out[2]["n_pieces"] == 3
 
 
-# ------------------------------------ corpus datasheet (r10 #4)
-def test_corpus_datasheet_sections_and_values(spark, sf_dir):
-    from skrub_spark.report.datasheet import corpus_datasheet
-    from skrub_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    rows = corpus_datasheet(docs).collect()
-    by = {(r["section"], r["metric"]): r["value"] for r in rows}
-    n = by[("corpus", "n_docs")]
-    assert n == docs.count()
-    # shares sum to ~1 per mix section
-    for sec in ("lang_mix", "source_mix"):
-        s = sum(v for (se, _), v in by.items() if se == sec)
-        assert abs(s - 1.0) < 1e-3
-    # histogram counts sum to n_docs
-    s = sum(v for (se, _), v in by.items() if se == "len_hist")
-    assert s == n
-    assert 0.0 <= by[("dedup", "exact_dup_rate")] <= 1.0
-    assert 0.0 <= by[("contamination", "contaminated_rate")] <= 1.0
-    assert by[("drift", "psi_length")] is not None
-    assert by[("drift", "chi2_lang")] >= 0.0
-
-
-def test_corpus_datasheet_html_smoke(spark, sf_dir):
-    from skrub_spark.report.datasheet import (
-        corpus_datasheet, datasheet_html,
-    )
-    from skrub_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    rows = corpus_datasheet(docs).collect()
-    html = datasheet_html(rows, title="sf docs datasheet")
-    assert html.startswith("<!doctype html>")
-    for frag in (
-        "<h1>sf docs datasheet</h1>",
-        "<h2>corpus</h2>",
-        "<h2>drift</h2>",
-        "n_docs",
-        "exact_dup_rate",
-        "</html>",
-    ):
-        assert frag in html
-
-
 # --------------------------- exactly-once upsert sink (r10 #5)
 def test_upsert_batch_idempotent_replay(spark, tmp_path):
     from skrub_spark.sources.snapshots import (

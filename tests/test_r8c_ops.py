@@ -1,6 +1,6 @@
 """Tests for the third-session round-8 additions (survival curves,
 Gini concentration, Theil-Sen robust trend, skyline, A/B tests,
-FD profiling, BFS distances, n-gram novelty, unpivot, RFM)."""
+BFS distances, n-gram novelty, unpivot, RFM)."""
 
 import pytest
 
@@ -188,44 +188,6 @@ def test_ab_proportion_test_degenerate_null(spark):
     df = spark.createDataFrame(rows, "v string, u long, c int")
     r = ab_proportion_test(df, "u", "v", "c").collect()[0]
     assert r["z"] is None and r["chi2"] is None
-
-
-# ------------------------------------------------------- FD profiling
-
-
-def test_fd_profile_holds_and_violations(spark):
-    from skrub_spark.report.profiling import fd_profile
-
-    rows = [
-        (1, "x", "p"),
-        (2, "x", "p"),
-        (3, "y", "q"),
-        (4, "y", "r"),   # y -> two rhs values: violation
-        (5, "z", None),  # NULL rhs counts as a value
-    ]
-    df = spark.createDataFrame(rows, "id long, l string, r string")
-    out = {x["lhs"] + "->" + x["rhs"]: x for x in fd_profile(
-        df, [("l", "r"), ("id", "l")]
-    ).collect()}
-    fd = out["l->r"]
-    assert fd["n_groups"] == 3
-    assert fd["n_violating"] == 1 and not fd["holds"]
-    assert fd["max_rhs_per_group"] == 2
-    assert out["id->l"]["holds"]
-
-
-def test_candidate_keys_detects_dups(spark):
-    from skrub_spark.report.profiling import candidate_keys
-
-    rows = [(1, "a"), (2, "a"), (3, "b")]
-    df = spark.createDataFrame(rows, "id long, g string")
-    out = {r["cols"]: r for r in candidate_keys(
-        df, [["id"], ["g"], ["id", "g"]]
-    ).collect()}
-    assert out["id"]["is_key"] and out["id"]["n_dup_rows"] == 0
-    assert not out["g"]["is_key"]
-    assert out["g"]["n_dup_rows"] == 2  # the two 'a' rows
-    assert out["id,g"]["is_key"]
 
 
 # ------------------------------------------------------ BFS distances
