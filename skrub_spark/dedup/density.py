@@ -21,13 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60
 from ..functions.text import MAX_GRAMS_PER_DOC, distinct_shingles, word_shingles
-
-
-def _h64(col, salt: str):
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 15), 16, 10
-    ).cast("long")
 
 
 def duplication_density(
@@ -55,7 +50,7 @@ def duplication_density(
         id_col,
         F.size("grams").alias("ng"),
         F.explode("grams").alias("g"),
-    ).select(id_col, "ng", _h64(F.col("g"), salt).alias("h"))
+    ).select(id_col, "ng", h60(F.col("g"), salt).alias("h"))
     dfh = e.groupBy("h").agg(F.count(F.lit(1)).alias("nd"))
     per = (
         e.join(dfh, "h")
@@ -123,14 +118,14 @@ def ngram_novelty(
         id_col,
         F.size("grams").alias("ng"),
         F.explode("grams").alias("g"),
-    ).select(id_col, "ng", _h64(F.col("g"), salt).alias("h"))
+    ).select(id_col, "ng", h60(F.col("g"), salt).alias("h"))
     ref = (
         reference.select(
             F.explode(distinct_shingles(
                 word_shingles(F.col(text_col), k), max_grams_per_doc
             )).alias("g")
         )
-        .select(_h64(F.col("g"), salt).alias("h"))
+        .select(h60(F.col("g"), salt).alias("h"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )

@@ -4,8 +4,9 @@ Physical plan (flat, scale-first — no giant nested expressions):
 
 1. explode distinct word-shingles → (id, gram) rows
 2. one groupBy(id) computes all n_components min-hashes as plain
-   ``min(xxhash64(gram, seed_k))`` aggregates (map-side partial agg,
-   whole-stage codegen keeps the 64 mins in registers)
+   ``min(h1 + k * h2)`` aggregates, double-hashed from two 31-bit
+   ``xxhash64`` values per gram (map-side partial agg, whole-stage
+   codegen keeps the 64 mins in registers)
 3. band key b = variadic ``xxhash64(min_{b*r} .. min_{b*r+r-1}, b)``
 4. :func:`~.pairs.bucket_pairs` on (band_idx, band_key) → candidate
    pairs; the bucket-size cap guards boilerplate buckets going quadratic
@@ -204,13 +205,13 @@ def minhash_buckets(
             f"n_components ({n_components}) must be divisible by "
             f"n_bands ({n_bands})"
         )
-    from ..functions.hashing import _MERSENNE_P, md5_band_keys
+    from ..functions.hashing import _MERSENNE_P, md5_band_keys, md5_half
     from ..functions.text import word_shingles
 
     rows_per_band = n_components // n_bands
-    # Same signature math as minhash_from_grams(hash='md5') — double
-    # hashing h_k = (h1 + k*h2) mod 2^31-1 over ONE md5 per distinct
-    # gram — but computed BATCH-shaped: explode + n_components min()
+    # Same signature math as minhash_from_grams — double hashing
+    # h_k = (h1 + k*h2) mod 2^31-1 over ONE md5 per distinct gram —
+    # but computed BATCH-shaped: explode + n_components min()
     # aggregates stay inside whole-stage codegen with map-side
     # partial aggregation (the shuffle carries (id, h1, h2) rows,
     # combined to n_docs x n_components longs before the wire). The
@@ -227,12 +228,8 @@ def minhash_buckets(
     ).withColumn("__m", F.md5("__g"))
     h = grams.select(
         id_col,
-        F.pmod(F.conv(F.substring("__m", 1, 15), 16, 10).cast("long"), p).alias(
-            "__h1"
-        ),
-        F.pmod(F.conv(F.substring("__m", 16, 15), 16, 10).cast("long"), p).alias(
-            "__h2"
-        ),
+        F.pmod(md5_half("__m", 0), p).alias("__h1"),
+        F.pmod(md5_half("__m", 1), p).alias("__h2"),
     )
     # parsed expr strings for the n_components min-aggregates and
     # the signature array (same py4j-chatter rationale as the

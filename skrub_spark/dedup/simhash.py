@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hamming64
+from ..functions.hashing import h60, hamming64
 from ..functions.text import word_shingles
 from .pairs import bucket_pairs
 
@@ -28,22 +28,14 @@ def simhash_table(
     content_col: str,
     id_col: str,
     shingle_k: int = 2,
-    hash: str = "md5",
 ) -> DataFrame:
     """(id, simhash) via the flat explode/aggregate plan.
 
-    ``hash='md5'`` (default) derives a 60-bit gram hash from md5 —
-    bit-identical across engines, so the DuckDB oracle replays the
+    Each gram hashes to its 60-bit md5 hash (``functions.hashing.h60``)
+    — bit-identical across engines, so the DuckDB oracle replays the
     exact fingerprints (bits 60-63 are then always 0, a negligible
-    loss of discrimination). ``hash='xxhash'`` uses the full-width
-    Spark-only xxhash64."""
-    if hash == "xxhash":
-        gram_hash = F.xxhash64("gram")
-    else:
-        # 15 hex chars = 60 bits -> positive long, engine-portable.
-        gram_hash = F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast(
-            "long"
-        )
+    loss of discrimination)."""
+    gram_hash = h60("gram")
     par = df.sparkSession.sparkContext.defaultParallelism
     grams = (
         df.select(F.col(id_col).alias("id"), F.col(content_col).alias("__t"))
@@ -86,12 +78,11 @@ def dedup_simhash_pairs(
     max_hamming: int = 3,
     n_chunks: int = 4,
     shingle_k: int = 2,
-    hash: str = "md5",
 ) -> DataFrame:
     """Pairs (id_a < id_b) with simhash hamming distance <= max_hamming.
     Exact for max_hamming <= n_chunks - 1."""
     bits_per_chunk = 64 // n_chunks
-    base = simhash_table(df, content_col, id_col, shingle_k, hash=hash)
+    base = simhash_table(df, content_col, id_col, shingle_k)
     chunks = base.select(
         "id",
         "simhash",

@@ -30,17 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60
 from ..functions.text import word_shingles
 from ..session import fan_out
 from .pairs import bucket_pairs
 
 _WINNOW_SALT = "wn9|"
-
-
-def _h60(col, salt: str):
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 15), 16, 10
-    ).cast("long")
 
 
 def winnow_fingerprints(
@@ -67,7 +62,7 @@ def winnow_fingerprints(
         .select(
             id_col,
             (F.col("__p0") + 1).alias("pos"),
-            _h60(F.col("__g"), salt).alias("h"),
+            h60(F.col("__g"), salt).alias("h"),
         )
     )
     # per-window (rightmost) minimum over the bounded per-doc frame:

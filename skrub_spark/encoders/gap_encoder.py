@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..base import SparkTransformer
+from ..functions.hashing import h60
 from ..functions.text import char_ngrams
 from ..session import checkpoint
 
@@ -401,16 +402,6 @@ class GapEncoder(SparkTransformer):
 _GAP_SALT = "gap1|"
 
 
-def _md5_bucket(col, salt: str, d: int):
-    """Engine-portable bucket (the sampling._hash_bucket rule)."""
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 15), 16, 10
-        ).cast("long"),
-        F.lit(int(d)),
-    ).cast("int")
-
-
 def fit_gap_frozen(
     df: DataFrame,
     value_col: str,
@@ -445,7 +436,9 @@ def fit_gap_frozen(
             F.col(value_col).alias("v"),
             F.explode(char_ngrams(F.col(value_col), n)).alias("g"),
         )
-        .select("v", _md5_bucket(F.col("g"), salt, hash_dim).alias("b"))
+        .select(
+            "v", F.pmod(h60("g", salt), F.lit(int(hash_dim))).cast("int").alias("b")
+        )
         .groupBy("v", "b")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
         .collect()
@@ -531,7 +524,7 @@ def gap_topics_frozen(
             F.explode(char_ngrams(F.col(value_col), model["n"])).alias("g"),
         )
         .select(
-            "__k", _md5_bucket(F.col("g"), model["salt"], d).alias("b")
+            "__k", F.pmod(h60("g", model["salt"]), F.lit(d)).cast("int").alias("b")
         )
         .groupBy("__k", "b")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))

@@ -23,13 +23,11 @@ class MinHashEncoder(SparkTransformer):
         n_components: int = 30,
         ngram_range: tuple[int, int] = (2, 4),
         drop_original: bool = True,
-        hash: str = "md5",
     ):
         self.col = col
         self.n_components = n_components
         self.ngram_range = ngram_range
         self.drop_original = drop_original
-        self.hash = hash
 
     def _fit(self, df: DataFrame, y=None):
         pass
@@ -44,7 +42,7 @@ class MinHashEncoder(SparkTransformer):
         grams = char_ngrams(text, lo)
         for n in range(lo + 1, hi + 1):
             grams = F.concat(grams, char_ngrams(text, n))
-        sig = minhash_from_grams(grams, self.n_components, hash=self.hash)
+        sig = minhash_from_grams(grams, self.n_components)
         keep = [c for c in df.columns if not (self.drop_original and c == self.col)]
         out = df.select(*keep, sig.alias("__sig"))
         comps = [

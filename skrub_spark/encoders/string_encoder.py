@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..base import SparkTransformer
+from ..functions.hashing import h60
 from ..functions.text import char_ngrams
 
 _RID = "__sk_row_id"
@@ -91,12 +92,8 @@ class StringEncoder(SparkTransformer):
 
     def _bucket_expr(self):
         if self.hash == "md5":
-            # engine-portable: DuckDB replays it as
-            # ('0x' || substr(md5(g),1,15))::BIGINT % hash_dim
-            return F.pmod(
-                F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("long"),
-                F.lit(self.hash_dim),
-            ).cast("int")
+            # engine-portable: the 60-bit md5 hash mod hash_dim
+            return F.pmod(h60("g"), F.lit(self.hash_dim)).cast("int")
         return F.pmod(F.xxhash64("g"), F.lit(self.hash_dim)).cast("int")
 
     def _bucket_counts(self, df: DataFrame) -> DataFrame:

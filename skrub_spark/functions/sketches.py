@@ -32,13 +32,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.sampling import _FINE_BUCKETS, _hash_bucket
+from ..operators.sampling import _FINE_BUCKETS
+from .hashing import h60, h60_at, hash_bucket, null_safe
 
 
 def sketch_member(value: Column, rate: int, salt: str = "") -> Column:
     """True iff ``value`` belongs to the 1/rate hash-threshold
     sketch — the map-only survivor predicate."""
-    return _hash_bucket(value, salt, int(rate)) == 0
+    return hash_bucket(value, salt, int(rate)) == 0
 
 
 def quantile_sketch(
@@ -73,7 +74,7 @@ def quantile_sketch(
     kept = df
     if frac < 1.0:
         kept = df.filter(
-            _hash_bucket(k, salt, _FINE_BUCKETS)
+            hash_bucket(k, salt, _FINE_BUCKETS)
             < int(round(frac * _FINE_BUCKETS))
         )
     kept = kept.select(*by, v.alias("__v"), k.alias("__k"))
@@ -103,23 +104,7 @@ def _cm_bucket(value: Column, d: Column, width: int, salt: str) -> Column:
     (salt, d, 0x1f, value) mod width — the same engine-portable md5
     rule as every sampler here, so estimates replay exactly in SQL.
     NULLs hash via the sampler sentinel."""
-    s = F.coalesce(value.cast("string"), F.lit("\x00<null>"))
-    return F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(salt), d.cast("string"), F.lit("\x1f"), s
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(int(width)),
-    )
+    return F.pmod(h60_at(value, d, salt), F.lit(int(width)))
 
 
 def countmin_sketch(
@@ -264,10 +249,7 @@ def hll_registers(
         raise ValueError("hll_registers: p must be in [4, 16]")
     v = F.col(value) if isinstance(value, str) else value
     by = list(by or [])
-    s = F.coalesce(v.cast("string"), F.lit("\x00<null>"))
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), s)), 1, 15), 16, 10
-    ).cast("long")
+    h = h60(null_safe(v), salt)
     w_bits = _HLL_BITS - p
     w = h.bitwiseAND(F.lit((1 << w_bits) - 1))
     rho = F.when(w == 0, F.lit(w_bits + 1)).otherwise(

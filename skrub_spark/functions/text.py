@@ -236,7 +236,6 @@ def rolling_fingerprint(
     col: Column | str,
     k: int = 8,
     mod: int = (1 << 31) - 1,
-    hash: str = "md5",
 ) -> Column:
     """Document fingerprint: polynomial rolling hash over k-word
     shingle hashes, order-sensitive (Rabin-Karp style), as bigint.
@@ -245,23 +244,15 @@ def rolling_fingerprint(
     intermediate product stays well inside a 64-bit long under ANSI
     arithmetic (acc < 2^31, B < 2^20 → product < 2^51).
 
-    ``hash='md5'`` (default) derives the shingle hash from the first
-    60 bits of md5 — md5 is bit-identical across engines, so the
-    fingerprint is reproducible outside Spark (the DuckDB oracle
-    replays it exactly). ``hash='xxhash'`` uses xxhash64, ~2× faster
-    but Spark-specific.
+    The shingle hash is its 60-bit md5 hash (``functions.hashing.h60``)
+    — md5 is bit-identical across engines, so the fingerprint is
+    reproducible outside Spark (the DuckDB oracle replays it exactly).
     """
+    from .hashing import h60
+
     sh = word_shingles(col, k)
     B = F.lit(1000003)
-    if hash == "xxhash":
-        h = lambda s: F.pmod(F.xxhash64(s), F.lit(mod))  # noqa: E731
-    else:
-        # 15 hex chars = 60 bits -> always a positive long.
-        h = lambda s: F.pmod(  # noqa: E731
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-            F.lit(mod),
-        )
-    hashed = F.transform(sh, h)
+    hashed = F.transform(sh, lambda s: F.pmod(h60(s), F.lit(mod)))
     return F.aggregate(
         hashed,
         F.lit(0).cast("long"),

@@ -10,12 +10,11 @@ Codec status:
   numpy filter inversion, ``multimodal/png.py``) and baseline JPEG
   (numpy Huffman + exact basis-matrix IDCT, any chroma subsampling,
   restart markers, ``multimodal/jpeg.py``) for images, PCM WAV
-  (stdlib ``wave``) for audio — ``use_stub=False`` on those paths
-  does a genuine decode and emits real pixel/sample statistics;
-  payloads that aren't decodable (including progressive/arithmetic
-  JPEG) get ``decode_ok=False`` + null stats (never a crash
-  mid-job). Real nearest-neighbor resize + PNG re-encode for
-  decodable payloads.
+  (stdlib ``wave``) for audio — every codec pass does a genuine
+  decode and emits real pixel/sample statistics; payloads that
+  aren't decodable (including progressive/arithmetic JPEG) get
+  ``decode_ok=False`` + null stats (never a crash mid-job). Real
+  nearest-neighbor resize + PNG re-encode for decodable payloads.
 - Video: REAL demuxer for AVI (RIFF chunk walk with per-stream
   binding, ``multimodal/avi.py``) covering uncompressed-DIB and
   MJPEG streams (MJPEG frames decode through the repo's own
@@ -27,13 +26,11 @@ Codec status:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -50,27 +47,6 @@ IMAGE_SCHEMA = StructType(
         StructField("height", IntegerType()),
     ]
 )
-
-
-def _stub_features(payload: bytes, n_features: int) -> list[float]:
-    """Deterministic fake feature vector: counter-extended SHA-256 so
-    any n_features is covered (a single 32-byte digest only yields 16
-    uint16s — slicing it silently truncated n_features > 16)."""
-    base = payload or b""
-    buf = hashlib.sha256(base).digest()  # block 0 == the old digest,
-    ctr = 1                              # so n_features <= 16 is unchanged
-    while len(buf) < n_features * 2:
-        buf += hashlib.sha256(base + ctr.to_bytes(4, "big")).digest()
-        ctr += 1
-    vec = np.frombuffer(buf[: n_features * 2], dtype=np.uint16)
-    return [float(v) / 65535.0 for v in vec]
-
-
-def _stub_pixels(payload: bytes, w: int, h: int) -> np.ndarray:
-    """Deterministic fake decode: seeded by payload digest."""
-    seed = int.from_bytes(hashlib.sha256(payload or b"").digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
 def decode_bmp(payload: bytes) -> np.ndarray | None:
@@ -231,16 +207,12 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int] | None:
         return None
 
 
-def decode_images(
-    df: DataFrame,
-    payload_col: str = "payload",
-    width: int = 32,
-    height: int = 32,
-    use_stub: bool = True,
-) -> DataFrame:
-    """binary payload -> decoded pixel stats row (mapInPandas).
+def decode_images(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """binary payload -> decoded pixel stats row (mapInPandas): BMP,
+    PNG, GIF or baseline JPEG through :func:`decode_image`.
 
-    Output adds: decode_ok boolean, px_mean double, px_std double.
+    Output adds: decode_ok boolean, px_mean double, px_std double
+    (null stats for an undecodable payload).
     """
     from pyspark.sql.types import BooleanType, DoubleType
 
@@ -257,19 +229,12 @@ def decode_images(
         for pdf in batches:
             oks, means, stds = [], [], []
             for payload in pdf[payload_col]:
-                if use_stub:
-                    px = _stub_pixels(payload, width, height)
-                    oks.append(payload is not None)
-                else:
-                    # REAL decode path: BMP (pure numpy) or PNG
-                    # (zlib+numpy). JPEG would slot in here behind an
-                    # import-try of PIL; absent in this container.
-                    px = decode_image(bytes(payload) if payload is not None else None)
-                    oks.append(px is not None)
-                    if px is None:
-                        means.append(None)
-                        stds.append(None)
-                        continue
+                px = decode_image(bytes(payload) if payload is not None else None)
+                oks.append(px is not None)
+                if px is None:
+                    means.append(None)
+                    stds.append(None)
+                    continue
                 means.append(float(px.mean()))
                 stds.append(float(px.std()))
             pdf = pdf.assign(decode_ok=oks, px_mean=means, px_std=stds)
@@ -287,18 +252,12 @@ AUDIO_SCHEMA = StructType(
 )
 
 
-def decode_audio(
-    df: DataFrame,
-    payload_col: str = "payload",
-    use_stub: bool = False,
-) -> DataFrame:
+def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """binary payload -> decoded audio stats (mapInPandas).
 
-    ``use_stub=False`` (default) REALLY decodes PCM-16 WAV payloads
-    (stdlib wave module — no external libs): duration, RMS, peak and
-    zero-crossing rate from the actual samples. Non-WAV payloads get
-    decode_ok=False. ``use_stub=True`` emits deterministic fakes for
-    synthetic payloads.
+    Decodes WAV payloads through :func:`decode_wav` (no external
+    libs): duration, RMS, peak and zero-crossing rate from the actual
+    samples. Other payloads get decode_ok=False.
     """
     from pyspark.sql.types import BooleanType, DoubleType
 
@@ -318,16 +277,7 @@ def decode_audio(
             cols = {k: [] for k in
                     ("decode_ok", "duration_s", "rms", "peak", "zero_crossing_rate")}
             for payload in pdf[payload_col]:
-                if use_stub:
-                    seed = int.from_bytes(
-                        hashlib.sha256(payload or b"").digest()[:4], "big"
-                    )
-                    rng = np.random.default_rng(seed)
-                    samples = (rng.standard_normal(1600) * 8192).astype("<i2")
-                    rate = 16000
-                    dec = (samples, rate)
-                else:
-                    dec = decode_wav(payload)
+                dec = decode_wav(payload)
                 if dec is None:
                     cols["decode_ok"].append(False)
                     for k in ("duration_s", "rms", "peak", "zero_crossing_rate"):
@@ -443,14 +393,10 @@ def extract_audio_features(
     df: DataFrame,
     payload_col: str = "payload",
     n_features: int = 16,
-    use_stub: bool = False,
 ) -> DataFrame:
-    """payload -> spectral feature vector via mapInPandas.
-
-    ``use_stub=False`` (default): REAL path — decode PCM WAV and
-    compute log band-energy features from windowed FFT frames (pure
-    numpy); non-WAV payloads get null features. ``use_stub=True``:
-    digest-derived deterministic fake."""
+    """payload -> spectral feature vector via mapInPandas: decode the
+    WAV and compute log band-energy features from windowed FFT frames
+    (pure numpy); non-WAV payloads get null features."""
     from pyspark.sql.types import ArrayType, DoubleType
 
     out_schema = StructType(
@@ -461,9 +407,6 @@ def extract_audio_features(
         for pdf in batches:
             feats = []
             for payload in pdf[payload_col]:
-                if use_stub:
-                    feats.append(_stub_features(payload, n_features))
-                    continue
                 dec = decode_wav(payload)
                 feats.append(
                     None if dec is None else _band_features(dec[0], n_features)
@@ -474,23 +417,15 @@ def extract_audio_features(
 
 
 def resize_images(
-    df: DataFrame, payload_col: str = "payload", size: tuple[int, int] = (64, 64),
-    use_stub: bool = True,
+    df: DataFrame, payload_col: str = "payload", size: tuple[int, int] = (64, 64)
 ) -> DataFrame:
-    """Image resize.
-
-    ``use_stub=False``: REAL path — decode each payload (BMP/PNG),
-    nearest-neighbor resample in numpy (index arithmetic, no interp
-    lib), re-encode as PNG; undecodable payloads pass through with
-    null payload and width/height unchanged. Arrow-batched
-    mapInPandas, like every codec pass.
-    ``use_stub=True``: metadata-only passthrough (payload untouched).
+    """Image resize: decode each payload, nearest-neighbor resample in
+    numpy (index arithmetic, no interp lib), re-encode as PNG;
+    undecodable payloads pass through with null payload and
+    width/height unchanged. Arrow-batched mapInPandas, like every
+    codec pass.
     """
     w_new, h_new = int(size[0]), int(size[1])
-    if use_stub:
-        return df.withColumn("width", F.lit(w_new)).withColumn(
-            "height", F.lit(h_new)
-        )
     from .png import encode_png
 
     out_schema = df.schema
@@ -546,18 +481,13 @@ def extract_image_features(
     df: DataFrame,
     payload_col: str = "payload",
     n_features: int = 16,
-    use_stub: bool = True,
 ) -> DataFrame:
     """payload -> fixed-size feature vector via mapInPandas (the
-    shape a vision-model embedding job takes on Spark).
-
-    ``use_stub=False``: REAL path — decode the payload (BMP/PNG/
-    JPEG) and pool a grayscale g x g grid into ``n_features`` values
-    in [0, 1]; near-identical pixels give near-identical vectors, so
-    the output feeds straight into the embedding dedup/ANN stack.
-    Undecodable payloads get null features. ``use_stub=True``:
-    deterministic digest-derived fake (payload-sensitive, not
-    pixel-sensitive).
+    shape a vision-model embedding job takes on Spark): decode the
+    payload and pool a grayscale g x g grid into ``n_features``
+    values in [0, 1]; near-identical pixels give near-identical
+    vectors, so the output feeds straight into the embedding
+    dedup/ANN stack. Undecodable payloads get null features.
     """
     from pyspark.sql.types import ArrayType, DoubleType
 
@@ -569,9 +499,6 @@ def extract_image_features(
         for pdf in batches:
             feats = []
             for payload in pdf[payload_col]:
-                if use_stub:
-                    feats.append(_stub_features(payload, n_features))
-                    continue
                 px = decode_image(
                     bytes(payload) if payload is not None else None
                 )
@@ -585,33 +512,19 @@ def frame_sample_videos(
     df: DataFrame,
     payload_col: str = "payload",
     n_frames: int = 4,
-    use_stub: bool = True,
 ) -> DataFrame:
     """video payload -> exploded per-frame rows.
 
-    ``use_stub=False``: REAL path for uncompressed-DIB and MJPEG AVI
-    payloads (``multimodal/avi.py`` — RIFF demux with per-stream
-    binding; MJPEG frames decode via ``multimodal/jpeg.py``, no
-    ffmpeg): sample up to ``n_frames`` evenly-spaced frames, emit
-    each as a BMP-encoded ``frame_payload`` (feeds straight back into
+    Decodes uncompressed-DIB and MJPEG AVI payloads
+    (``multimodal/avi.py`` — RIFF demux with per-stream binding;
+    MJPEG frames decode via ``multimodal/jpeg.py``, no ffmpeg):
+    sample up to ``n_frames`` evenly-spaced frames, emit each as a
+    BMP-encoded ``frame_payload`` (feeds straight back into
     decode_images / extract_image_features) plus its true
     ``frame_px_mean``. Undecodable payloads (other compressed codecs
     — that's where ffmpeg would slot in) emit a single row with null
     frame fields.
-    ``use_stub=True``: deterministic digest rows, payload untouched.
     """
-    if use_stub:
-        frames = F.sequence(F.lit(0), F.lit(n_frames - 1))
-        return df.withColumn("frame_idx", F.explode(frames)).withColumn(
-            "frame_payload",
-            F.sha2(
-                F.concat(
-                    F.col(payload_col).cast("string"),
-                    F.col("frame_idx").cast("string"),
-                ),
-                256,
-            ).cast("binary"),
-        )
     from pyspark.sql.types import BinaryType, DoubleType
 
     from .avi import decode_avi_frames

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60
 from ..session import checkpoint
 
 _TOKEN_SPLIT = "[^a-z0-9]+"
@@ -178,24 +179,15 @@ def skipgram_pairs(
         (F.sqrt(f / F.lit(t)) + F.lit(1.0)) * (F.lit(t) / f),
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit(seed),
-                        F.col("__d").cast("string"),
-                        F.col("__pos").cast("string"),
-                        F.col("__w"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        .cast("double")
+        h60(
+            F.concat_ws(
+                ":",
+                F.lit(seed),
+                F.col("__d").cast("string"),
+                F.col("__pos").cast("string"),
+                F.col("__w"),
+            )
+        ).cast("double")
         / F.lit(1152921504606846976.0)
     )
     kept = (

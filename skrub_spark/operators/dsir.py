@@ -48,8 +48,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_bucket
 from .quality_classifier import _unit_fold, bucket_sql, units
-from .sampling import _FINE_BUCKETS, _hash_bucket
+from .sampling import _FINE_BUCKETS
 
 _DEFAULT_SALT = "dsir|"
 
@@ -134,7 +135,7 @@ def gumbel_key(
     ``ln`` drift dies in the 6dp round). Sampling the top-k of these
     keys IS sampling k docs without replacement ∝ exp(logw)."""
     u = (
-        _hash_bucket(key, salt, _FINE_BUCKETS).cast("double")
+        hash_bucket(key, salt, _FINE_BUCKETS).cast("double")
         + F.lit(0.5)
     ) / F.lit(float(_FINE_BUCKETS))
     g = F.round(-F.log(-F.log(u)), 6)

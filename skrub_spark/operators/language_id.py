@@ -10,9 +10,9 @@ same Spark-first recipe as
 :mod:`~skrub_spark.operators.quality_classifier`:
 
 - :func:`hashed_char_features` — hashed char n-gram counts (default
-  trigrams). The bucket hash is the ENGINE-PORTABLE md5 rule
-  (``conv(substring(md5(salt||gram),1,15),16,10) mod n_features``)
-  so a SQL oracle replays every bucket exactly.
+  trigrams). The bucket is the ENGINE-PORTABLE 60-bit md5 hash of
+  ``salt||gram`` (``functions.hashing.h60``) mod n_features, so a
+  SQL oracle replays every bucket exactly.
 - :func:`fit_language_id` — distributed MLlib MULTINOMIAL logistic
   regression over per-doc tf vectors (features assembled JVM-side).
   Fit runs on a labeled sample — bounded, never the full corpus.

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_bucket
+
 
 def pack_training_chunks(
     df: DataFrame,
@@ -157,12 +159,7 @@ def bfd_pack(
     if int(n_shards) < 1:
         raise ValueError("n_shards must be >= 1")
     cap = int(capacity)
-    key = F.coalesce(F.col(id_col).cast("string"), F.lit("\x00<null>"))
-    shard = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), key)), 1, 15), 16, 10)
-        .cast("long"),
-        F.lit(int(n_shards)),
-    ).cast("long")
+    shard = hash_bucket(F.col(id_col), salt, int(n_shards)).cast("long")
     ln = F.col(len_col).cast("long")
     base = df.withColumn(shard_col, shard).withColumn(
         "__neg", F.when(ln < 0, F.lit(1)).otherwise(F.lit(0))

@@ -10,10 +10,10 @@ module provides that loop Spark-first:
 
 - :func:`hashed_text_features` — hashed unigram+bigram counts. The
   unit rule (lowercased whitespace tokens plus word bigrams) and the
-  bucket hash, the ENGINE-PORTABLE md5 rule shared with the samplers
-  (``conv(substring(md5(salt||unit),1,15),16,10) mod n_features``),
-  are defined once here for fitting and scoring, and DSIR uses the
-  same two; a SQL oracle replays every bucket exactly.
+  bucket hash, the ENGINE-PORTABLE 60-bit md5 hash of ``salt||unit``
+  shared with the samplers (``functions.hashing.h60``) mod
+  n_features, are defined once here for fitting and scoring, and
+  DSIR uses the same two; a SQL oracle replays every bucket exactly.
 - :func:`fit_quality_classifier` — distributed MLlib
   LogisticRegression over per-doc tf vectors (features are built
   JVM-side: map_from_entries + a dense transform; no Python in the
@@ -41,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import sql_string, tokens, word_shingles
+from ..functions.hashing import h60_sql
+from ..functions.text import tokens, word_shingles
 
 _DEFAULT_SALT = "qc1|"
 
@@ -57,14 +58,9 @@ def units(col: Column, bigrams: bool) -> Column:
 
 def bucket_sql(unit: str, n_features: int, salt: str = _DEFAULT_SALT) -> str:
     """SQL for the stable, engine-portable feature bucket of the SQL
-    expression ``unit`` in [0, n_features): 60 md5 bits -> mod
-    n_features (same construction as ``sampling._hash_bucket``;
-    DuckDB replays it as ``('0x' || substr(md5(salt || u), 1, 15))
-    ::BIGINT % n``)."""
-    return (
-        f"pmod(CAST(conv(substring(md5(concat({sql_string(salt)}, {unit})),"
-        f" 1, 15), 16, 10) AS BIGINT), {int(n_features)})"
-    )
+    expression ``unit`` in [0, n_features): its salted 60-bit hash
+    (``functions.hashing.h60_sql``) mod n_features."""
+    return f"pmod({h60_sql(unit, salt)}, {int(n_features)})"
 
 
 def _unit_fold(

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60
+
 
 def _content_salt(salt_from: list[str], n_salts: int) -> Column:
     """Content-addressed salt in [0, n_salts): the portable 60-bit
@@ -19,10 +21,7 @@ def _content_salt(salt_from: list[str], n_salts: int) -> Column:
     key = F.concat_ws(
         "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in salt_from]
     )
-    return F.pmod(
-        F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long"),
-        F.lit(int(n_salts)),
-    ).cast("int")
+    return F.pmod(h60(key), F.lit(int(n_salts))).cast("int")
 
 
 def salted_groupby_agg(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_bucket, null_safe
+
 _BUCKETS = 10_000
 # sample_to_targets needs finer resolution than the 1/10000 the other
 # samplers use: with 10^4 buckets, any target below count/10^4 floors
@@ -26,28 +28,12 @@ _BUCKETS = 10_000
 _FINE_BUCKETS = 100_000_000
 
 
-def _hash_bucket(key: Column, salt: str, buckets: int = _BUCKETS) -> Column:
-    """Stable bucket in [0, buckets): 60 md5 bits -> mod buckets.
-
-    A NULL key hashes via a sentinel instead of propagating NULL —
-    md5(concat(salt, NULL)) is NULL and a NULL bucket comparison
-    would silently DROP the row from every sampler (ADVICE r5); with
-    the sentinel, null-keyed rows sample like any other value."""
-    s = F.coalesce(key.cast("string"), F.lit("\x00<null>"))
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), s)), 1, 15), 16, 10
-        ).cast("long"),
-        F.lit(buckets),
-    )
-
-
 def deterministic_sample(
     df: DataFrame, key: str | Column, frac: float, salt: str = ""
 ) -> DataFrame:
     """Rows whose key hashes below ``frac`` — a stable ~frac sample."""
     key = F.col(key) if isinstance(key, str) else key
-    return df.filter(_hash_bucket(key, salt) < int(round(frac * _BUCKETS)))
+    return df.filter(hash_bucket(key, salt, _BUCKETS) < int(round(frac * _BUCKETS)))
 
 
 def hash_split(
@@ -61,7 +47,7 @@ def hash_split(
     same side, always; downstream fit/transform asymmetry (DataOps
     eval_mode) relies on exactly this stability."""
     key = F.col(key) if isinstance(key, str) else key
-    is_test = _hash_bucket(key, salt) < int(round(test_frac * _BUCKETS))
+    is_test = hash_bucket(key, salt, _BUCKETS) < int(round(test_frac * _BUCKETS))
     return df.withColumn(
         split_col, F.when(is_test, F.lit("test")).otherwise(F.lit("train"))
     )
@@ -113,7 +99,7 @@ def sample_to_targets(
         df.join(F.broadcast(counts), strata_col, "inner")
         .withColumn("__tgt", tgt)
         .filter(F.col("__tgt").isNotNull())
-        .filter(_hash_bucket(key, salt, fine) < thresh)
+        .filter(hash_bucket(key, salt, fine) < thresh)
         .drop("__n", "__tgt")
     )
 
@@ -135,7 +121,7 @@ def stratified_sample(
         thresh = F.when(
             F.col(strata_col) == s, F.lit(int(round(f * _BUCKETS)))
         ).otherwise(thresh)
-    return df.filter(_hash_bucket(key, salt) < thresh)
+    return df.filter(hash_bucket(key, salt, _BUCKETS) < thresh)
 
 
 def sample_weighted(
@@ -168,7 +154,7 @@ def sample_weighted(
             F.lit(0.0), w.cast("double") * F.lit(float(scale)) * fine
         ),
     ).cast("long")
-    return df.filter(_hash_bucket(key, salt, fine) < thresh)
+    return df.filter(hash_bucket(key, salt, fine) < thresh)
 
 
 def temperature_mixture(
@@ -233,7 +219,7 @@ def temperature_mixture(
             strata_col,
             "inner",
         )
-        .filter(_hash_bucket(key, salt, fine) < thresh)
+        .filter(hash_bucket(key, salt, fine) < thresh)
         .drop("__n", "__tgt")
     )
 
@@ -539,7 +525,7 @@ def reservoir_sample(
     if int(k) < 0:
         raise ValueError("reservoir_sample: k must be >= 0")
     kc = F.col(key) if isinstance(key, str) else key
-    s = F.coalesce(kc.cast("string"), F.lit("\x00<null>"))
+    s = null_safe(kc)
     h = F.md5(F.concat(F.lit(salt), s))
     return (
         df.withColumn("__h", h)
@@ -575,7 +561,7 @@ def weighted_reservoir_sample(
     if int(k) < 0:
         raise ValueError("weighted_reservoir_sample: k must be >= 0")
     kc = F.col(key) if isinstance(key, str) else key
-    s = F.coalesce(kc.cast("string"), F.lit("\x00<null>"))
+    s = null_safe(kc)
     h52 = F.pmod(
         F.conv(F.substring(F.md5(F.concat(F.lit(salt), s)), 1, 13), 16, 10)
         .cast("long"),

@@ -2298,7 +2298,7 @@ def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal pipeline with the REAL codec path: synthesize a
     24-bit BMP (doc_id%3==0), a sub-filtered PNG (%3==1) or a
     baseline JPEG (%3==2) per document, pixels seeded by doc_id;
-    then decode_images(use_stub=False) actually parses the container
+    then decode_images actually parses the container
     bytes in the Arrow-batched mapInPandas pass and emits true pixel
     stats. (Payload synthesis isn't SQL-expressible: rows-only.)"""
     _prep(spark)
@@ -2336,7 +2336,7 @@ def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_payload = docs.mapInPandas(
         make_payloads, "doc_id bigint, payload binary"
     )
-    out = decode_images(with_payload, use_stub=False)
+    out = decode_images(with_payload)
     return out.select(
         "doc_id",
         "decode_ok",
@@ -2402,9 +2402,7 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_payload = docs.mapInPandas(
         make_payloads, "doc_id bigint, payload binary"
     )
-    feats = extract_image_features(
-        with_payload, n_features=36, use_stub=False
-    )
+    feats = extract_image_features(with_payload, n_features=36)
     mean = F.aggregate("features", F.lit(0.0), lambda a, x: a + x) / F.lit(36.0)
     centered = feats.select(
         "doc_id", F.transform("features", lambda x: x - mean).alias("f")
@@ -2540,7 +2538,7 @@ def q_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_payload = docs.mapInPandas(
         make_payloads, "doc_id bigint, payload binary"
     )
-    sampled = frame_sample_videos(with_payload, n_frames=3, use_stub=False)
+    sampled = frame_sample_videos(with_payload, n_frames=3)
     return (
         sampled.groupBy("doc_id")
         .agg(
@@ -3812,7 +3810,7 @@ def _linkage_sides(spark: SparkSession, sf_dir: str):
     balance shifts) — the 'messy second source' every linkage demo
     needs, built content-addressed so the DuckDB oracle replays the
     identical noisy table and every downstream decision is exact."""
-    from .operators.sampling import _hash_bucket
+    from .functions.hashing import hash_bucket
 
     cust = load_table(spark, sf_dir, "customer")
     left = cust.select(
@@ -3823,10 +3821,10 @@ def _linkage_sides(spark: SparkSession, sf_dir: str):
         F.col("c_acctbal").alias("l_bal"),
     )
     key = F.col("c_custkey")
-    h_name = _hash_bucket(key, "rl8|", 10)
-    h_nat = _hash_bucket(key, "rln|", 7)
-    h_seg = _hash_bucket(key, "rls|", 5)
-    h_bal = _hash_bucket(key, "rlb|", 3)
+    h_name = hash_bucket(key, "rl8|", 10)
+    h_nat = hash_bucket(key, "rln|", 7)
+    h_seg = hash_bucket(key, "rls|", 5)
+    h_bal = hash_bucket(key, "rlb|", 3)
     pert_name = (
         F.when(h_name <= 2, F.expr("substring(c_name, 1, length(c_name) - 1)"))
         .when(

@@ -31,6 +31,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60_at
+
 # Poisson(1) CDF thresholds in the 60-bit md5 space: weight = number
 # of thresholds <= u. floor() keeps them integers; the same literals
 # feed the SQL oracle.
@@ -45,18 +47,7 @@ POISSON1_THRESHOLDS = [int(c * (1 << 60)) for c in _POIS1_CDF[:-1]]
 
 def poisson_weight(key: Column, b: Column, salt: str = "") -> Column:
     """Deterministic Poisson(1) draw for (row key, replicate b)."""
-    s = F.coalesce(key.cast("string"), F.lit("\x00<null>"))
-    u = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(salt), b.cast("string"), F.lit("\x1f"), s)
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u = h60_at(key, b, salt)
     w = F.lit(0)
     for t in POISSON1_THRESHOLDS:
         w = w + (u >= F.lit(t)).cast("int")

@@ -29,13 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _bucket(key: Column, salt: str, mod: int = 100) -> Column:
-    return F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), key.cast("string"))), 1, 15), 16, 10)
-        .cast("long"),
-        F.lit(mod),
-    )
+from ..functions.hashing import h60
 
 
 def conformal_mean_intervals(
@@ -68,7 +62,7 @@ def conformal_mean_intervals(
         v.cast("decimal(18,6)").alias("__y"),
         k.cast("string").alias("__k"),
     ).filter(F.col("__y").isNotNull())
-    b = _bucket(F.col("__k"), salt)
+    b = F.pmod(h60(F.col("__k").cast("string"), salt), F.lit(100))
     base = base.withColumn(
         "__split",
         F.when(b < test_pct, F.lit("test"))

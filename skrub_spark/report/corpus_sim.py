@@ -16,8 +16,8 @@ never a global sort), and the pair expansion is a broadcast
 self-join of the group list — O(G²) pairs, so G is meant to be
 sources/snapshots (tens), not documents.
 
-Hashing uses the engine-portable md5→BIGINT rule
-(``conv(substr(md5(x),1,15),16,10)``), the same "content-addressed
+Hashing uses the engine-portable 60-bit md5 rule
+(``functions.hashing.h60``), the same "content-addressed
 randomness" contract as the samplers — so the sketch, the estimate
 and the tie-breaks replay bit-identically in DuckDB (battery
 oracle ``source_similarity``).
@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60
 from ..functions.text import tokens
-
-
-def _h64(col, salt: str):
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 15), 16, 10
-    ).cast("long")
 
 
 def kmv_similarity_matrix(
@@ -53,7 +48,7 @@ def kmv_similarity_matrix(
     toks = (
         df.select(g.alias("g"), F.explode(tokens(F.col(text_col))).alias("t"))
         .distinct()
-        .select("g", _h64(F.col("t"), salt).alias("h"))
+        .select("g", h60(F.col("t"), salt).alias("h"))
         .distinct()
     )
     wg = Window.partitionBy("g").orderBy(F.col("h").asc())

@@ -160,11 +160,11 @@ def corpus_datasheet(
         "'corpus', 'n_tokens', CAST(toks AS DOUBLE), "
         "'corpus', 'total_chars', CAST(chars AS DOUBLE), "
         "'corpus', 'avg_chars', "
-        "round(CAST(chars AS DOUBLE) / CAST(n AS DOUBLE), 6), "
+        "round(CAST(chars AS DOUBLE) / CAST(greatest(n, 1) AS DOUBLE), 6), "
         "'corpus', 'n_langs', CAST(nl AS DOUBLE), "
         "'corpus', 'n_sources', CAST(ns AS DOUBLE), "
         "'dedup', 'exact_dup_rate', "
-        "round(CAST(n - nd AS DOUBLE) / CAST(n AS DOUBLE), 6), "
+        "round(CAST(n - nd AS DOUBLE) / CAST(greatest(n, 1) AS DOUBLE), 6), "
         "'contamination', 'n_eval_docs', CAST(ne AS DOUBLE), "
         "'contamination', 'n_train_docs', CAST(nt AS DOUBLE), "
         "'contamination', 'contaminated_rate', "

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60
+
 _D = "decimal(18,6)"
 _D38 = "decimal(38,12)"
 
@@ -345,16 +347,7 @@ def jackknife_ratio_se(
     num = F.col(numerator) if isinstance(numerator, str) else numerator
     den = F.col(denominator) if isinstance(denominator, str) else denominator
     k = F.col(key) if isinstance(key, str) else key
-    bucket = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), k.cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(int(n_buckets)),
-    )
+    bucket = F.pmod(h60(k.cast("string"), salt), F.lit(int(n_buckets)))
     base = df.select(
         bucket.alias("g"),
         num.cast(_D).alias("x"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .permutation import _u60
+from ..functions.hashing import h60_at
 
 
 def permutation_group_deviation(
@@ -113,7 +113,7 @@ def permutation_group_deviation(
             "__k",
             F.explode(F.expr(f"sequence(1, {int(n_perm)})")).alias("b"),
         )
-        .withColumn("u", _u60(F.col("__k"), F.col("b"), salt))
+        .withColumn("u", h60_at(F.col("__k"), F.col("b"), salt))
         .withColumn(
             "un", F.col("u").cast(d0) * F.lit(n_all).cast(d0)
         )

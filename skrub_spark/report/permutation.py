@@ -25,20 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _u60(key: Column, b: Column, salt: str) -> Column:
-    s = F.coalesce(key.cast("string"), F.lit("\x00<null>"))
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(salt), b.cast("string"), F.lit("\x1f"), s)
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+from ..functions.hashing import h60_at
 
 
 def permutation_test_means(
@@ -126,7 +113,7 @@ def permutation_test_means(
             "n",
             F.explode(F.expr(f"sequence(1, {int(n_perm)})")).alias("b"),
         )
-        .withColumn("u", _u60(F.col("__k"), F.col("b"), salt))
+        .withColumn("u", h60_at(F.col("__k"), F.col("b"), salt))
         .withColumn(
             "is_a",
             (

@@ -38,6 +38,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60, null_safe
+
 
 def k_anonymity_report(
     df: DataFrame,
@@ -149,9 +151,7 @@ def t_closeness_report(
 
     _DI = "decimal(38,0)"
     qn = list(quasi_cols)
-    s = F.coalesce(
-        F.col(sensitive_col).cast("string"), F.lit("\x00<null>")
-    )
+    s = null_safe(F.col(sensitive_col))
     from pyspark.sql import Window
 
     cells0 = df.groupBy(
@@ -265,12 +265,9 @@ def dp_histogram(
     key = F.concat_ws(
         "\x1f",
         F.lit(seed),
-        *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00<null>"))
-            for c in group_cols
-        ],
+        *[null_safe(F.col(c)) for c in group_cols],
     )
-    h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+    h = h60(key)
     u = (
         (F.pmod(h, F.lit(_M53)).cast("double") + F.lit(0.5))
         / F.lit(float(_M53))

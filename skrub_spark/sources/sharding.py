@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_half, null_safe
+
 
 def shuffle_order(
     df: DataFrame,
@@ -48,18 +50,10 @@ def shuffle_order(
     """
     from pyspark.sql import Window
 
-    # NULL keys hash via a sentinel: md5(concat(salt, NULL)) is NULL,
-    # which would land the row in a NULL shard with a NULL position
-    # (ADVICE r5 — same guard as sampling._hash_bucket)
-    h = F.md5(
-        F.concat(
-            F.lit(salt),
-            F.coalesce(F.col(key).cast("string"), F.lit("\x00<null>")),
-        )
-    )
-    bucket = F.pmod(
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long"), F.lit(n_shards)
-    )
+    # NULL keys hash via the sentinel: md5(concat(salt, NULL)) is
+    # NULL, which would land the row in a NULL shard with a NULL position
+    h = F.md5(F.concat(F.lit(salt), null_safe(F.col(key))))
+    bucket = F.pmod(md5_half(h), F.lit(n_shards))
     out = df.withColumn("__h", h).withColumn("shard", bucket.cast("long"))
     win = Window.partitionBy("shard").orderBy("__h", key)
     return out.withColumn(

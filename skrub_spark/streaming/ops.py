@@ -337,9 +337,7 @@ def streaming_near_dedup(
             "__grams", word_shingles(F.col(text_col), shingle_k)
         )
         .filter(F.size("__grams") >= 1)
-        .withColumn(
-            "__sig", minhash_from_grams(F.col("__grams"), n_components, hash="md5")
-        )
+        .withColumn("__sig", minhash_from_grams(F.col("__grams"), n_components))
         .select(
             F.col(id_col).alias("doc_id"),
             F.posexplode(band_keys).alias("band_idx", "band_key"),

@@ -100,6 +100,33 @@ def test_corpus_datasheet_hand_corpus_pinned(spark):
     ]
 
 
+def test_corpus_datasheet_empty_corpus(spark):
+    """A zero-row corpus gives its rows instead of dividing by n = 0:
+    the ratios read 0 (or null where their numerator is a null sum),
+    the mixes and the histogram have no rows."""
+    from skrub_spark.report.datasheet import corpus_datasheet
+
+    df = spark.createDataFrame(
+        [], "doc_id long, lang string, source string, text string"
+    )
+    got = sorted(tuple(r) for r in corpus_datasheet(df).collect())
+    release(spark)
+    assert got == [
+        ("contamination", "contaminated_rate", 0.0),
+        ("contamination", "n_eval_docs", None),
+        ("contamination", "n_train_docs", None),
+        ("corpus", "avg_chars", None),
+        ("corpus", "n_docs", 0.0),
+        ("corpus", "n_langs", 0.0),
+        ("corpus", "n_sources", 0.0),
+        ("corpus", "n_tokens", None),
+        ("corpus", "total_chars", None),
+        ("dedup", "exact_dup_rate", 0.0),
+        ("drift", "chi2_lang", None),
+        ("drift", "psi_length", None),
+    ]
+
+
 def test_corpus_datasheet_job_count(spark, sf_dir, count_jobs):
     """The sections share two persisted aggregates; an extra action or
     aggregate branch adds jobs and fails this pin."""

@@ -9,10 +9,15 @@ from pyspark.sql import functions as F
 
 from skrub_spark.functions.datetime import datetime_feature_columns
 from skrub_spark.functions.hashing import (
+    NULL_KEY,
+    h60,
+    h60_sql,
     hamming64,
+    hash_bucket,
     minhash_band_keys,
     minhash_from_grams,
     minhash_signature,
+    null_safe,
     simhash64,
 )
 from skrub_spark.functions.text import (
@@ -197,6 +202,36 @@ def test_minhash_from_grams_matches_md5_reference(spark):
             assert got[i] == (None if g is None else _md5_minhash_ref(g, n))
     assert got[3] == [(1 << 31) - 1] * 16
     assert got[4] is None
+
+
+def _h60_ref(salt, x):
+    return int(hashlib.md5((salt + x).encode()).hexdigest()[:15], 16)
+
+
+def test_h60_matches_md5_reference(spark):
+    """The Column and SQL forms of the hash rule against a hashlib
+    replay of the first 15 hex digits of md5(salt + x), on null, empty
+    and non-ASCII values and a salt with a quote and a backslash; no
+    salt hashes x itself. A NULL key through the sentinel, and so
+    through hash_bucket, hashes like the string "\\x00<null>"."""
+    assert NULL_KEY == "\x00<null>"
+    cases = [None, "", "a", "hello world", "Ünïcödé CAFÉ 日本語", NULL_KEY]
+    df = spark.createDataFrame(list(enumerate(cases)), "id int, x string")
+    for salt in (None, "", "qc1|", "it's a \\ salt'"):
+        ref = salt or ""
+        rows = df.select(
+            "id",
+            h60("x", salt).alias("col"),
+            F.expr(h60_sql("x", salt)).alias("sql"),
+            h60(null_safe(F.col("x")), salt).alias("safe"),
+            hash_bucket(F.col("x"), ref, 97).alias("bucket"),
+        ).collect()
+        for r in rows:
+            x = cases[r["id"]]
+            want = None if x is None else _h60_ref(ref, x)
+            assert r["col"] == want and r["sql"] == want
+            safe = _h60_ref(ref, NULL_KEY if x is None else x)
+            assert r["safe"] == safe and r["bucket"] == safe % 97
 
 
 def test_minhash_band_keys(spark):

@@ -117,7 +117,7 @@ def test_extract_image_features_real_path(spark):
     )
     out = {
         r["id"]: r["features"]
-        for r in extract_image_features(df, n_features=16, use_stub=False).collect()
+        for r in extract_image_features(df, n_features=16).collect()
     }
     assert out[4] is None
     a, b, c = (np.array(out[i]) for i in (1, 2, 3))
@@ -126,7 +126,7 @@ def test_extract_image_features_real_path(spark):
 
 
 def test_decode_image_dispatch_jpeg(spark):
-    """decode_images(use_stub=False) handles a JPEG payload through
+    """decode_images handles a JPEG payload through
     the same Arrow-batched pass as BMP/PNG."""
     from skrub_spark.multimodal import decode_images
 
@@ -135,7 +135,7 @@ def test_decode_image_dispatch_jpeg(spark):
         [(1, bytearray(encode_jpeg(img, quality=100)))],
         "id int, payload binary",
     )
-    row = decode_images(df, use_stub=False).first()
+    row = decode_images(df).first()
     assert row["decode_ok"]
     assert abs(row["px_mean"] - float(img.mean())) < 2.0
 
@@ -154,7 +154,7 @@ def test_frame_sample_videos_real_avi(spark):
         [(1, bytearray(encode_avi(frames))), (2, bytearray(b"junk"))],
         "id int, payload binary",
     )
-    out = frame_sample_videos(df, n_frames=4, use_stub=False)
+    out = frame_sample_videos(df, n_frames=4)
     rows = out.collect()
     vid = sorted(
         (r for r in rows if r["id"] == 1), key=lambda r: r["frame_idx"]
@@ -168,8 +168,7 @@ def test_frame_sample_videos_real_avi(spark):
     redec = decode_images(
         out.filter(out.frame_idx.isNotNull()).select(
             "id", "frame_idx", out.frame_payload.alias("payload")
-        ),
-        use_stub=False,
+        )
     ).collect()
     assert len(redec) == 4 and all(r["decode_ok"] for r in redec)
 
@@ -196,7 +195,7 @@ def test_frame_sample_videos_mjpeg_avi(spark):
         [(1, bytearray(mjpg)), (2, bytearray(h264))],
         "id int, payload binary",
     )
-    rows = frame_sample_videos(df, n_frames=3, use_stub=False).collect()
+    rows = frame_sample_videos(df, n_frames=3).collect()
     vid = sorted((r for r in rows if r["id"] == 1), key=lambda r: r["frame_idx"])
     assert [r["frame_idx"] for r in vid] == [0, 2, 4]
     for r in vid:
@@ -264,18 +263,3 @@ def test_avi_multistream_binding():
     assert out is not None and len(out) == 2
     assert all((a == b).all() for a, b in zip(out, frames))
 
-
-def test_stub_features_wide():
-    """Stub feature vectors honor n_features > 16 (counter-extended
-    digest; ADVICE r4: a single SHA-256 digest silently truncated to
-    16) and stay unchanged for n_features <= 16."""
-    import hashlib
-
-    from skrub_spark.multimodal.columns import _stub_features
-
-    v32 = _stub_features(b"abc", 32)
-    assert len(v32) == 32 and len(set(v32)) > 16
-    v16 = _stub_features(b"abc", 16)
-    old = np.frombuffer(hashlib.sha256(b"abc").digest(), dtype=np.uint16)
-    assert v16 == [float(x) / 65535.0 for x in old]
-    assert v32[:16] == v16

@@ -56,7 +56,7 @@ def test_decode_images_mixed_containers(spark):
         (3, bytearray(b"junk bytes")),
     ]
     df = spark.createDataFrame(rows, "id int, payload binary")
-    out = {r["id"]: r for r in decode_images(df, use_stub=False).collect()}
+    out = {r["id"]: r for r in decode_images(df).collect()}
     assert out[1]["decode_ok"] and out[2]["decode_ok"]
     assert not out[3]["decode_ok"] and out[3]["px_mean"] is None
     assert abs(out[1]["px_mean"] - float(px1.mean())) < 1e-9
@@ -75,7 +75,7 @@ def test_resize_images_real_path(spark):
         [(1, bytearray(encode_bmp(px)), 12, 16), (2, bytearray(b"junk"), 0, 0)],
         "id int, payload binary, width int, height int",
     )
-    out = {r["id"]: r for r in resize_images(df, size=(6, 8), use_stub=False).collect()}
+    out = {r["id"]: r for r in resize_images(df, size=(6, 8)).collect()}
     assert out[1]["width"] == 6 and out[1]["height"] == 8
     dec = decode_png(bytes(out[1]["payload"]))
     yi = (np.arange(8) * 16) // 8
@@ -84,7 +84,5 @@ def test_resize_images_real_path(spark):
     # junk payload passes through as null, no crash
     assert out[2]["payload"] is None
     # resized payloads feed straight back into the decode pass
-    redec = decode_images(
-        resize_images(df, size=(6, 8), use_stub=False), use_stub=False
-    ).collect()
+    redec = decode_images(resize_images(df, size=(6, 8))).collect()
     assert {r["id"]: r["decode_ok"] for r in redec} == {1: True, 2: False}

@@ -230,24 +230,6 @@ def test_interpolation_join_classification_multiclass(spark):
     assert got == {0: "a", 1: "b", 2: "c"}
 
 
-def test_multimodal_stubs(spark):
-    from skrub_spark.multimodal import decode_images, extract_image_features
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"imgdata1"), "image/png", 8, 8),
-         (2, bytearray(b"imgdata2"), "image/png", 8, 8)],
-        "id int, payload binary, mime string, width int, height int",
-    )
-    out = decode_images(df).collect()
-    assert all(r["decode_ok"] for r in out)
-    assert out[0]["px_mean"] != out[1]["px_mean"]  # payload-dependent
-    # deterministic across runs
-    again = decode_images(df).collect()
-    assert [r["px_mean"] for r in again] == [r["px_mean"] for r in out]
-    feats = extract_image_features(df, n_features=4).collect()
-    assert len(feats[0]["features"]) == 4
-
-
 def test_streaming_session_windows(spark, tmp_path):
     from skrub_spark.streaming import streaming_session_counts
 
@@ -625,7 +607,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 
 def test_real_bmp_decode_roundtrip(spark):
-    """decode_images(use_stub=False) REALLY decodes 24-bit BMP: the
+    """decode_images REALLY decodes 24-bit BMP: the
     pixel stats match the source array exactly; junk payloads get
     decode_ok=False instead of crashing the job."""
     import numpy as np
@@ -642,7 +624,7 @@ def test_real_bmp_decode_roundtrip(spark):
          (2, bytearray(b"not a bmp"), "image/bmp", 0, 0)],
         "id int, payload binary, mime string, width int, height int",
     )
-    rows = {r["id"]: r for r in decode_images(df, use_stub=False).collect()}
+    rows = {r["id"]: r for r in decode_images(df).collect()}
     assert rows[1]["decode_ok"] and not rows[2]["decode_ok"]
     assert rows[1]["px_mean"] == pytest.approx(float(px.mean()))
     assert rows[1]["px_std"] == pytest.approx(float(px.std()))

@@ -261,14 +261,14 @@ def test_language_id_frozen_beats_heuristic(spark, sf_dir):
         plant_lang_phrase,
         score_language,
     )
-    from skrub_spark.operators.sampling import _hash_bucket
+    from skrub_spark.functions.hashing import hash_bucket
     from skrub_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
     held = plant_lang_phrase(docs).filter(
-        _hash_bucket(F.col("doc_id"), "lidsplit") >= 8000
+        hash_bucket(F.col("doc_id"), "lidsplit", 10_000) >= 8000
     )
     acc_learned = score_language(held, LID_MODEL).agg(
         F.avg((F.col("lang_pred") == F.col("lang")).cast("double"))

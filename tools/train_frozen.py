@@ -243,14 +243,14 @@ def train_lid(spark, sf_dir):
         plant_lang_phrase,
         score_language,
     )
-    from skrub_spark.operators.sampling import _hash_bucket
+    from skrub_spark.functions.hashing import hash_bucket
     from skrub_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
     planted = plant_lang_phrase(docs)
-    split = _hash_bucket(F.col("doc_id"), "lidsplit")
+    split = hash_bucket(F.col("doc_id"), "lidsplit", 10_000)
     model = fit_language_id(planted.filter(split < 8000), "lang")
     model["weights"] = [
         [round(w, 6) for w in row] for row in model["weights"]
