@@ -9,10 +9,6 @@ import threading
 _DEFAULTS = {
     # cardinality threshold used by TableVectorizer when not given
     "cardinality_threshold": 40,
-    # broadcast-size hint (bytes) for agg-join aux tables
-    "broadcast_threshold": 64 * 1024 * 1024,
-    # default shuffle partitions hint applied by get_session
-    "shuffle_partitions": None,
     # float display (parity with skrub's display options; unused in
     # computation)
     "float_precision": 3,

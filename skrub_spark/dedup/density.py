@@ -6,23 +6,43 @@ template / mirror content even when no single near-dup pair
 crosses a similarity threshold, and the fraction feeds
 `sample_weighted` exactly like the quality scores.
 
-Shape at 100 TB: distinct word-shingles per doc (map-only), hashed
-to 8-byte keys via the engine-portable md5 rule (the shuffle
-carries hashes, never shingle strings), ONE map-side-combined
-document-frequency reduce, one join back, one per-doc count — the
-same inverted-index discipline as the contamination operators
-(``dedup/contamination.py``), pointed inward at the corpus itself.
-Every count is exact, so the DuckDB oracle replays each fraction
-bit-identically (battery query ``duplication_density``).
+Shape at 100 TB: both operators run the shingle-overlap kernel
+(``dedup/overlap.py``, shared with the contamination operators and
+the streaming gate): distinct word-shingles per doc (map-only),
+hashed to 8-byte ``xxhash64`` keys (the shuffle carries hashes, never
+shingle strings), one membership left join against a key index and
+one per-doc count. Density's index is the corpus's own keys with
+document frequency >= ``min_docs`` (ONE map-side-combined reduce —
+the contamination skew guard pointed the other way); novelty's is
+the reference corpus's distinct keys. Every count is exact, so the
+DuckDB oracles replay each fraction bit-identically (battery queries
+``duplication_density`` and ``ngram_novelty``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import h60
-from ..functions.text import MAX_GRAMS_PER_DOC, distinct_shingles, word_shingles
+from ..functions.text import MAX_GRAMS_PER_DOC
+from .overlap import count_hits, doc_gram_keys, key_index
+
+
+def _per_doc(
+    scored: DataFrame, id_col: str, count_col: str, frac_col: str,
+    count: Column,
+) -> DataFrame:
+    """``(id_col, n_shingles, count_col, frac_col)`` with ``frac_col =
+    count / n_shingles`` at 6dp, NULL for a shingle-less doc."""
+    n = F.col("n_shingles")
+    return scored.select(
+        F.col("id").alias(id_col),
+        n,
+        count.alias(count_col),
+        F.when(
+            n > 0, F.round(count.cast("double") / n.cast("double"), 6)
+        ).alias(frac_col),
+    )
 
 
 def duplication_density(
@@ -31,7 +51,6 @@ def duplication_density(
     id_col: str = "doc_id",
     k: int = 3,
     min_docs: int = 2,
-    salt: str = "dd8",
     max_grams_per_doc: int | None = MAX_GRAMS_PER_DOC,
 ) -> DataFrame:
     """One row per document: ``(id_col, n_shingles, n_dup,
@@ -40,42 +59,9 @@ def duplication_density(
     documents corpus-wide and ``dup_fraction = n_dup /
     n_shingles`` (NULL for shingle-less documents, which still
     appear with zeros)."""
-    sh = docs.select(
-        F.col(id_col),
-        distinct_shingles(
-            word_shingles(F.col(text_col), k), max_grams_per_doc
-        ).alias("grams"),
-    )
-    e = sh.select(
-        id_col,
-        F.size("grams").alias("ng"),
-        F.explode("grams").alias("g"),
-    ).select(id_col, "ng", h60(F.col("g"), salt).alias("h"))
-    dfh = e.groupBy("h").agg(F.count(F.lit(1)).alias("nd"))
-    per = (
-        e.join(dfh, "h")
-        .groupBy(id_col)
-        .agg(
-            F.max("ng").cast("long").alias("n_shingles"),
-            F.sum(
-                (F.col("nd") >= F.lit(int(min_docs))).cast("long")
-            )
-            .cast("long")
-            .alias("n_dup"),
-        )
-    )
-    out = docs.select(id_col).join(per, id_col, "left")
-    n = F.coalesce("n_shingles", F.lit(0)).cast("long")
-    nd = F.coalesce("n_dup", F.lit(0)).cast("long")
-    return out.select(
-        id_col,
-        n.alias("n_shingles"),
-        nd.alias("n_dup"),
-        F.when(
-            n > 0,
-            F.round(nd.cast("double") / n.cast("double"), 6),
-        ).alias("dup_fraction"),
-    )
+    keys = doc_gram_keys(docs, text_col, id_col, k, max_grams_per_doc)
+    scored = count_hits(keys, key_index(keys, min_docs=min_docs))
+    return _per_doc(scored, id_col, "n_dup", "dup_fraction", F.col("n_hit"))
 
 
 def ngram_novelty(
@@ -84,7 +70,6 @@ def ngram_novelty(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    salt: str = "nv8",
     max_grams_per_doc: int | None = MAX_GRAMS_PER_DOC,
 ) -> DataFrame:
     """Per-target-document novelty vs a reference corpus: ``(id,
@@ -99,55 +84,17 @@ def ngram_novelty(
     crawl snapshot adds anything beyond the last one, and the
     per-document form of the contamination check
     (``dedup/contamination.py`` flags ANY overlap; this measures
-    HOW MUCH is new).
-
-    Shape at 100 TB: both sides reduce to DISTINCT 8-byte md5
-    shingle keys (the shuffle never carries shingle strings);
-    novelty is ONE left anti-style membership join (left join +
-    null test) against the reference's distinct-key set plus one
-    per-doc counting reduce. Exact counts — the DuckDB oracle
-    (battery query ``ngram_novelty``) replays every fraction.
+    HOW MUCH is new): ``n_novel = n_shingles - n_hit`` against the
+    reference's distinct keys.
     """
-    sh = target.select(
-        F.col(id_col),
-        distinct_shingles(
-            word_shingles(F.col(text_col), k), max_grams_per_doc
-        ).alias("grams"),
+    # the index needs no ids: ``reference`` may have no ``id_col``
+    ref = doc_gram_keys(
+        reference.select(F.lit(None).alias(id_col), text_col),
+        text_col, id_col, k, max_grams_per_doc,
     )
-    e = sh.select(
-        id_col,
-        F.size("grams").alias("ng"),
-        F.explode("grams").alias("g"),
-    ).select(id_col, "ng", h60(F.col("g"), salt).alias("h"))
-    ref = (
-        reference.select(
-            F.explode(distinct_shingles(
-                word_shingles(F.col(text_col), k), max_grams_per_doc
-            )).alias("g")
-        )
-        .select(h60(F.col("g"), salt).alias("h"))
-        .distinct()
-        .withColumn("__hit", F.lit(1))
+    scored = count_hits(
+        doc_gram_keys(target, text_col, id_col, k, max_grams_per_doc),
+        key_index(ref),
     )
-    per = (
-        e.join(ref, "h", "left")
-        .groupBy(id_col)
-        .agg(
-            F.max("ng").cast("long").alias("n_shingles"),
-            F.sum(F.col("__hit").isNull().cast("long"))
-            .cast("long")
-            .alias("n_novel"),
-        )
-    )
-    out = target.select(id_col).join(per, id_col, "left")
-    n = F.coalesce("n_shingles", F.lit(0)).cast("long")
-    nv = F.coalesce("n_novel", F.lit(0)).cast("long")
-    return out.select(
-        id_col,
-        n.alias("n_shingles"),
-        nv.alias("n_novel"),
-        F.when(
-            n > 0,
-            F.round(nv.cast("double") / n.cast("double"), 6),
-        ).alias("novelty"),
-    )
+    novel = F.col("n_shingles") - F.col("n_hit")
+    return _per_doc(scored, id_col, "n_novel", "novelty", novel)

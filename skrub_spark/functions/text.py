@@ -12,6 +12,8 @@ inside select/filter and whole-stage codegen fuses them.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -270,14 +272,24 @@ def lines(col: Column | str) -> Column:
     )
 
 
+_AZ09_SPLIT = r"[^a-z0-9]+"
+
+
 def words_az09(col: Column | str) -> Column:
     """Lowercased [a-z0-9]+ word tokens as array<string> — the split
     regex is RE2-compatible so a DuckDB oracle can replay it
-    exactly."""
+    exactly. The one word tokenizer of the lexical operators (BM25,
+    phrase search, gazetteer, keywords, collocations)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.call_function(
-        "filter", F.split(F.lower(c), r"[^a-z0-9]+"), F.expr(_NONEMPTY)
+        "filter", F.split(F.lower(c), _AZ09_SPLIT), F.expr(_NONEMPTY)
     )
+
+
+def words_az09_py(s: str) -> list[str]:
+    """:func:`words_az09` on the driver, for query strings and
+    dictionary entries."""
+    return [t for t in re.split(_AZ09_SPLIT, s.lower()) if t]
 
 
 _PII_PATTERNS = (

@@ -29,17 +29,10 @@ Scale design:
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def bm25_tokens(col: Column) -> Column:
-    """Lowercased alphanumeric terms (empty strings removed)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
+from ..functions.text import words_az09, words_az09_py
 
 
 def bm25_scores(
@@ -62,7 +55,7 @@ def bm25_scores(
         raise ValueError("empty query")
 
     toks = docs.select(
-        F.col(id_col), bm25_tokens(F.col(text_col)).alias("__toks")
+        F.col(id_col), words_az09(text_col).alias("__toks")
     )
     lens = toks.select(id_col, F.size("__toks").alias("dl"))
     # scalar corpus stats: one aggregate pass, broadcast back
@@ -137,7 +130,7 @@ def build_bm25_index(
     (scores never depend on it). Build cost is ONE (id, term)
     groupBy over the corpus; done once, searched many."""
     toks = docs.select(
-        F.col(id_col), bm25_tokens(F.col(text_col)).alias("__toks")
+        F.col(id_col), words_az09(text_col).alias("__toks")
     )
     lens = toks.select(id_col, F.size("__toks").alias("dl"))
     stats = lens.agg(
@@ -192,9 +185,7 @@ def bm25_search_indexed(
     term filter + shared scoring core run over that slice. Results
     are identical to the direct `bm25_topk` (same exact-decimal
     arithmetic)."""
-    terms = sorted(
-        {t for t in re.split(r"[^a-z0-9]+", query.lower()) if t}
-    )
+    terms = sorted(set(words_az09_py(query)))
     if not terms:
         raise ValueError("empty query")
     post = spark.read.parquet(f"{path}/postings")
@@ -229,7 +220,7 @@ def bm25_topk(
     b: float = 0.75,
 ) -> DataFrame:
     """Top-k by (score DESC, id ASC) — planned as TakeOrdered."""
-    terms = [t for t in re.split(r"[^a-z0-9]+", query.lower()) if t]
+    terms = words_az09_py(query)
     scored = bm25_scores(
         docs, terms, text_col=text_col, id_col=id_col, k1=k1, b=b
     )
@@ -263,14 +254,12 @@ def phrase_search(
     map-side-combined groupBy yields counts. Battery oracle
     ``phrase_hits`` replays it with a window-lead construction —
     two independent formulations agreeing is the point."""
-    terms = [
-        t for t in re.split(r"[^a-z0-9]+", phrase.lower()) if t != ""
-    ]
+    terms = words_az09_py(phrase)
     if not terms:
         raise ValueError("phrase_search: phrase has no tokens")
     toks = docs.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(bm25_tokens(F.col(text_col))).alias("pos", "term"),
+        F.posexplode(words_az09(text_col)).alias("pos", "term"),
     ).filter(F.col("term").isin(terms))
     starts = toks.filter(F.col("term") == terms[0]).select("__id", "pos")
     for i, t in enumerate(terms[1:], start=1):

@@ -24,16 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60
+from ..functions.text import words_az09
 from ..session import checkpoint
-
-_TOKEN_SPLIT = "[^a-z0-9]+"
-
-
-def _token_array(col):
-    return F.filter(
-        F.split(F.lower(col), _TOKEN_SPLIT), lambda t: t != ""
-    )
-
 
 def pmi_collocations(
     df: DataFrame,
@@ -50,7 +42,7 @@ def pmi_collocations(
     is deterministic. ``min_count`` filters rare bigrams (PMI's
     classic low-frequency pathology: a hapax pair maxes the score).
     """
-    toks = df.select(_token_array(F.col(text_col)).alias("ts")).where(
+    toks = df.select(words_az09(text_col).alias("ts")).where(
         F.size("ts") > 0
     )
     toks = toks.persist()
@@ -164,7 +156,7 @@ def skipgram_pairs(
     w_sz = int(window)
     toks = df.select(
         F.col(id_col).alias("__d"),
-        F.posexplode(_token_array(F.col(text_col))).alias(
+        F.posexplode(words_az09(text_col)).alias(
             "__pos", "__w"
         ),
     )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .bm25 import bm25_tokens
+from ..functions.text import words_az09, words_az09_py
 
 
 def gazetteer_match(
@@ -55,10 +55,8 @@ def gazetteer_match(
     DataFrame dictionary of millions of rows — swap the broadcast
     for a shuffle join on term."""
     ent_rows = []
-    import re as _re
-
     for e in entities:
-        toks = [t for t in _re.split(r"[^a-z0-9]+", e.lower()) if t]
+        toks = words_az09_py(e)
         if not toks:
             raise ValueError(f"gazetteer_match: entity {e!r} has no tokens")
         ent_rows.extend((e, i, t, len(toks)) for i, t in enumerate(toks))
@@ -69,7 +67,7 @@ def gazetteer_match(
     vocab = ent.select(F.col("tok").alias("term")).distinct()
     toks = docs.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(bm25_tokens(F.col(text_col))).alias("pos", "term"),
+        F.posexplode(words_az09(text_col)).alias("pos", "term"),
     ).join(broadcast(vocab), "term")
     starts = toks.join(
         broadcast(ent.filter(F.col("i") == 0).select("entity", "n_toks", "tok")),

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import tokens, words_az09
 from ..session import checkpoint
 
 
@@ -218,10 +218,7 @@ def term_burstiness(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-            lambda t: t != "",
-        ).alias("ts"),
+        words_az09(text_col).alias("ts"),
     ).where(F.size("ts") > 0)
     toks = toks.persist()
     n_docs = toks.select(F.count(F.lit(1)).cast("long").alias("nd"))
@@ -287,12 +284,7 @@ def fightin_words(
     """
     toks = df.select(
         (F.col(group_col) == F.lit(group_a)).alias("in_a"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda t: t != "",
-            )
-        ).alias("term"),
+        F.explode(words_az09(text_col)).alias("term"),
     )
     counts = toks.groupBy("term").agg(
         F.sum(F.col("in_a").cast("long")).cast("long").alias("ya"),

@@ -16,8 +16,11 @@ fact scan drops non-candidates with a pure-codegen Column test
 
 Exactness: Bloom filters have no false negatives, and the final
 exact join removes false positives — the result is bit-identical to
-the unfiltered join for every ``how``. (Same argument as
-``decontaminate_train``'s prefilter, dedup/contamination.py.)
+the unfiltered join for every ``how``. The filter pays only when the
+exact join it shrinks is a shuffle of the fact side; in front of a
+join that already runs map-side against a broadcast build (the
+shingle-overlap kernel, ``dedup/overlap.py``) it only repeats the
+probe, so the contamination operators carry none.
 
 Reference parity: skrub has no distributed join reduction (its
 joins are in-memory pandas/polars, skrub/_joiner.py); this is a

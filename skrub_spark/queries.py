@@ -743,14 +743,10 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents sharing ANY 13-gram with the eval sources are removed;
     the planted cross-source near-dups must vanish and everything
     else survive. Exact oracle: DuckDB replays shingling and the
-    no-shared-gram survival rule. The r7 Bloom pre-filter
-    (VERDICT r6 #9, `bloom=True`) is bit-identical (pinned in
-    tests/test_plan_quality.py) but runs PLAIN here: this fixture's
-    eval side is 10% of the corpus, so the bitset-build jobs cost
-    more than the join they shrink — Bloom pays when the index side
-    is orders of magnitude smaller than the scored side (a real
-    eval benchmark vs a 100 TB crawl), not at this ratio. Honest
-    A/B at sf0.1 warm: plain 1.3s, bloom 2.6s."""
+    no-shared-gram survival rule. Spark side: the shingle-overlap
+    kernel (dedup/overlap.py — one left join of the train docs'
+    gram hashes against the eval side's, one per-doc count) and one
+    semi-join back to the train rows."""
     _prep(spark)
     from .dedup.contamination import decontaminate_train
 
@@ -5229,7 +5225,8 @@ def q_duplication_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate/mirror signal when no single pair crosses a
     near-dup threshold): fraction of each doc's distinct 3-word
     shingles appearing in ≥2 documents. Inverted-index shape on
-    8-byte md5 keys; exact counts."""
+    8-byte xxhash64 keys (the shingle-overlap kernel,
+    dedup/overlap.py); exact counts."""
     _prep(spark)
     from .dedup.density import duplication_density
 
@@ -5794,8 +5791,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup/density.py::ngram_novelty — does the new snapshot add
     anything? the per-document HOW-MUCH form of the contamination
     check): fraction of each target doc's distinct 3-word shingles
-    absent from the src0-src3 reference slice; 8-byte md5 keys,
-    one membership join, exact counts."""
+    absent from the src0-src3 reference slice; 8-byte xxhash64
+    keys, one membership join (the shingle-overlap kernel,
+    dedup/overlap.py), exact counts."""
     _prep(spark)
     from .dedup.density import ngram_novelty
 
@@ -20189,9 +20187,11 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of `decontaminate_train`): documents split into even/odd
     batch files stream through a foreachBatch gate holding the eval
     set (doc_id % 7 == 0) as broadcast state — persisted distinct
-    gram hashes + Bloom bitset built ONCE before the stream starts.
-    Docs sharing any 8-gram with the eval corpus divert to the
-    quarantine side output, the rest pass through clean; eval docs
+    gram hashes built ONCE before the stream starts, probed per
+    batch by the batch operator's shingle-overlap kernel
+    (dedup/overlap.py). Docs sharing any 8-gram with the eval
+    corpus divert to the quarantine side output, the rest pass
+    through clean; eval docs
     streaming through quarantine themselves (their grams are the
     state). The oracle replays the gram decision and the literal
     batch split."""

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..dedup.overlap import count_hits, doc_gram_keys, key_index
+from ..functions.text import MAX_GRAMS_PER_DOC
 from ..functions.timeutils import epoch_us
 
 
@@ -1107,8 +1109,7 @@ def streaming_decontaminate(
     max_contamination: float = 0.0,
     out_path: str,
     checkpoint_path: str | None = None,
-    bloom: bool = True,
-    max_grams_per_doc: int | None = None,
+    max_grams_per_doc: int | None = MAX_GRAMS_PER_DOC,
 ):
     """Streaming decontamination gate (r12 — the streaming twin of
     `dedup/contamination.py::decontaminate_train`): every arriving
@@ -1120,109 +1121,52 @@ def streaming_decontaminate(
     time.
 
     Broadcast state, built ONCE before the stream starts (not per
-    micro-batch): the eval corpus's distinct gram-hash frame
-    (persisted — it is benchmark-sized, the operator's contract)
-    and its Bloom bitset (``functions/bloom.py`` — m_bits/64 longs,
-    never the keys). Per micro-batch, inside ``foreachBatch`` (the
-    documented Spark pattern for stream-static flows the streaming
-    planner can't express — here: a per-doc aggregation with no
-    watermark semantics, since the decision is stateless across
-    batches): shingle → per-doc distinct-gram totals → Bloom
-    map-side prefilter → EXACT semi-join confirm against the eval
-    grams → per-doc hit counts → kind split, appended to
-    ``out_path`` as parquet. Bloom false positives are removed by
-    the exact join, false negatives are impossible, so the decision
-    is bit-identical to the batch operator on the same rows
-    (no-hit-equals-passthrough is pinned in tests; the battery
-    oracle replays the gram decision over the literal batch split).
+    micro-batch): the eval corpus's distinct gram-hash index
+    (persisted — it is benchmark-sized, the operator's contract).
+    Per micro-batch, inside ``foreachBatch`` (the documented Spark
+    pattern for stream-static flows the streaming planner can't
+    express — here: a per-doc aggregation with no watermark
+    semantics, since the decision is stateless across batches), the
+    shingle-overlap kernel (``dedup/overlap.py``, shared with the
+    batch operator) counts each doc's distinct grams and its hits in
+    ONE broadcast left join + one per-doc reduce, then the kind
+    split is appended to ``out_path`` as parquet. Same kernel, same
+    ``max_grams_per_doc`` default: the decision is bit-identical to
+    the batch operator on the same rows (pinned in tests; the
+    battery oracle replays the gram decision over the literal batch
+    split).
 
     Output rows: ``(id_col, kind 'clean'|'quarantine', n_shingles,
     n_contaminated, batch_id)``. Returns the started
     StreamingQuery (availableNow trigger; callers await it)."""
-    from ..functions.text import distinct_shingles, word_shingles
-
-    spark = eval_df.sparkSession
     thresh = float(max_contamination)
 
-    # static side, built once: distinct eval gram hashes + bitset
-    eval_grams = (
-        eval_df.select(
-            F.explode(
-                distinct_shingles(
-                    word_shingles(F.col(content_col), int(ngram)),
-                    max_grams_per_doc,
-                )
-            ).alias("g")
+    def keys(df):
+        return doc_gram_keys(
+            df, content_col, id_col, ngram, max_grams_per_doc
         )
-        .select(F.xxhash64("g").alias("h"))
-        .distinct()
-        .persist()
-    )
-    n_eval = eval_grams.count()
-    bits = None
-    m_bits = 0
-    if bloom and n_eval > 0:
-        from ..functions.bloom import bloom_size_bits, build_bloom_bits
 
-        m_bits = bloom_size_bits(n_eval)
-        bits = build_bloom_bits(eval_grams, "h", m_bits)
+    # static side, built once: the distinct eval gram hashes (it
+    # needs no ids: ``eval_df`` may have no ``id_col``)
+    eval_keys = key_index(
+        keys(eval_df.select(F.lit(None).alias(id_col), content_col))
+    ).persist()
+    eval_keys.count()
 
     def _decontaminate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        eg = (
-            batch_df.select(
-                F.col(id_col).alias("id"),
-                F.explode_outer(
-                    distinct_shingles(
-                        word_shingles(F.col(content_col), int(ngram)),
-                        max_grams_per_doc,
-                    )
-                ).alias("g"),
-            )
-            .withColumn(
-                "h", F.when(F.col("g").isNotNull(), F.xxhash64("g"))
-            )
-            .drop("g")
-        )
-        totals = eg.groupBy("id").agg(
-            F.sum(F.when(F.col("h").isNotNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_shingles")
-        )
-        cand = eg.filter(F.col("h").isNotNull())
-        if bits is not None:
-            from ..functions.bloom import bloom_attach, bloom_maybe_contains
-
-            cand = bloom_attach(cand, bits).filter(
-                bloom_maybe_contains(
-                    F.col("h"), F.col("__bloom_bits"), m_bits
-                )
-            ).drop("__bloom_bits")
-        hits = (
-            cand.join(F.broadcast(eval_grams), on="h", how="left_semi")
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).cast("long").alias("__n_hit"))
-        )
-        scored = totals.join(hits, on="id", how="left").select(
+        hits = F.col("n_hit")
+        count_hits(keys(batch_df), F.broadcast(eval_keys)).select(
             F.col("id").alias(id_col),
-            F.coalesce("__n_hit", F.lit(0)).cast("long").alias(
-                "n_contaminated"
-            ),
-            "n_shingles",
-        )
-        out = scored.select(
-            id_col,
             F.when(
-                F.col("n_contaminated")
-                > thresh * F.greatest(F.col("n_shingles"), F.lit(1)),
+                hits > thresh * F.greatest(F.col("n_shingles"), F.lit(1)),
                 F.lit("quarantine"),
             )
             .otherwise(F.lit("clean"))
             .alias("kind"),
             "n_shingles",
-            "n_contaminated",
+            hits.alias("n_contaminated"),
             F.lit(int(batch_id)).cast("long").alias("batch_id"),
-        )
-        out.write.mode("append").parquet(out_path)
+        ).write.mode("append").parquet(out_path)
 
     writer = stream_docs.writeStream.foreachBatch(_decontaminate_batch)
     if checkpoint_path:

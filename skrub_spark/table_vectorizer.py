@@ -13,7 +13,8 @@ Turns an arbitrary DataFrame into an all-numeric feature DataFrame:
   (MinHashEncoder default, like the reference's hashing-friendly
   option; StringEncoder/GapEncoder pluggable)
 
-The cardinality split mirrors skrub's (default threshold 40). The
+The cardinality split mirrors skrub's: ``cardinality_threshold``
+defaults to ``get_config()["cardinality_threshold"]`` (40). The
 routing reads the approx distinct counts of the Cleaner's
 DropUninformative pass (with ``clean=False``, one cardinality agg of
 its own); one more agg collects every one-hot vocabulary. The
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .base import SparkTransformer
+from .config import get_config
 from .encoders.datetime_encoder import DatetimeEncoder
 from .encoders.minhash_encoder import MinHashEncoder
 from .operators.cleaner import Cleaner
@@ -44,7 +46,7 @@ def _safe(name: str) -> str:
 class TableVectorizer(SparkTransformer):
     def __init__(
         self,
-        cardinality_threshold: int = 40,
+        cardinality_threshold: int | None = None,
         high_cardinality=None,
         datetime=None,
         numeric=None,
@@ -83,7 +85,10 @@ class TableVectorizer(SparkTransformer):
             card = {c: row[c] for c in str_cols}
         else:
             card = {}
-        one_hot = [c for c in str_cols if card[c] <= self.cardinality_threshold]
+        thresh = self.cardinality_threshold
+        if thresh is None:
+            thresh = get_config()["cardinality_threshold"]
+        one_hot = [c for c in str_cols if card[c] <= thresh]
         # collect_set drops nulls; array_sort is orderBy's binary order
         self._low_card: dict[str, list] = {}
         if one_hot:

@@ -1,6 +1,7 @@
 """Tests for the round-5 curation operators: boilerplate line removal,
-decontamination, shuffling and incremental/streaming dedup. The LM
-perplexity filter's tests are in ``test_lm_filter.py``."""
+shuffling and incremental/streaming dedup. The LM perplexity filter's
+tests are in ``test_lm_filter.py``, decontamination's in
+``test_overlap.py``."""
 
 from __future__ import annotations
 
@@ -11,31 +12,6 @@ from skrub_spark.operators.boilerplate import remove_boilerplate_lines
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_decontaminate_train(spark):
-    from skrub_spark.dedup.contamination import decontaminate_train
-
-    base = " ".join(f"w{i}" for i in range(13))
-    train = _docs(
-        spark,
-        [
-            (1, base + " trailing words here"),   # shares a 13-gram -> removed
-            (2, "totally different set of words " * 4),
-            (3, "short doc"),                      # unshingleable -> survives
-        ],
-    )
-    ev = _docs(spark, [(100, base + " benchmark continuation")])
-    out = sorted(
-        r["doc_id"] for r in decontaminate_train(train, ev).collect()
-    )
-    assert out == [2, 3]
-    # threshold > 0 lets the partially-overlapping doc back in
-    out2 = sorted(
-        r["doc_id"]
-        for r in decontaminate_train(train, ev, max_contamination=1.0).collect()
-    )
-    assert out2 == [1, 2, 3]
 
 
 def test_shuffle_order(spark):

@@ -1013,36 +1013,6 @@ def test_asof_join_matched_row_verbatim(spark):
     assert row["price"] is None        # ...and took its NULL verbatim
 
 
-def test_ngram_contamination(spark):
-    """Contaminated eval doc (shares a 5-gram run with train) is
-    flagged; clean doc scores 0; short doc reports zero shingles;
-    boilerplate grams above max_train_doc_freq are ignored."""
-    from skrub_spark import ngram_contamination
-
-    leak = "alpha beta gamma delta epsilon zeta eta theta"
-    train = spark.createDataFrame(
-        [(1, f"intro words {leak} trailing text here")],
-        "doc_id int, text string",
-    )
-    eval_df = spark.createDataFrame(
-        [
-            (10, leak),                                   # fully leaked
-            (11, "совершенно unrelated fresh tokens only words again more"),
-            (12, "too short"),                            # < 5 words
-        ],
-        "doc_id int, text string",
-    )
-    out = {
-        r["doc_id"]: (r["n_shingles"], r["n_contaminated"])
-        for r in ngram_contamination(
-            train, eval_df, "text", "doc_id", ngram=5
-        ).collect()
-    }
-    assert out[10][0] == 4 and out[10][1] == 4   # all 4 shingles leaked
-    assert out[11][1] == 0
-    assert out[12] == (0, 0)
-
-
 def test_fuzzy_join_lsh_narrow_path_options(spark):
     """The narrow LSH path (payload join-back after argmin) honors
     max_dist/drop_unmatched/add_match_info/second_neighbor exactly

@@ -382,23 +382,6 @@ def test_corpus_shuffle_single_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_decontaminate_semi_join_no_cartesian(spark):
-    """Decontamination is inverted-index relational algebra: the
-    survivors come back via a semi-join, with no cartesian or
-    nested-loop join anywhere."""
-    from skrub_spark.dedup.contamination import decontaminate_train
-    from skrub_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    ev = docs.filter("source IN ('src0','src1')")
-    tr = docs.filter("source NOT IN ('src0','src1')")
-    df = decontaminate_train(tr, ev)
-    plan = plan_of(df, execute=True)
-    assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_snapshot_read_prunes_to_one_version(spark, tmp_path):
     """A pinned-version filter over the snapshot history reaches the
     scan as a partition filter — other versions are pruned, not
@@ -488,34 +471,6 @@ def test_curation_funnel_releases_caches(spark):
     assert "FileScan" not in plan_of(out)
 
 
-def test_bloom_prefilter_exact_and_selective(spark):
-    """The Bloom-prefiltered decontamination path (r7) must be
-    bit-identical to the plain path — false positives die at the
-    exact semi-join, false negatives are impossible — while the
-    bitset BUILD collects only m_bits/64 longs and the membership
-    test is a constant-folded Column (no Python, no key collect)."""
-    from skrub_spark.dedup.contamination import decontaminate_train
-    from skrub_spark.sources import load_table
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, SF, "documents")
-    is_eval = F.col("source").isin("src0", "src1")
-    train, ev = docs.filter(~is_eval), docs.filter(is_eval)
-    plain = sorted(
-        r["doc_id"]
-        for r in decontaminate_train(
-            train, ev, "text", "doc_id", ngram=13
-        ).select("doc_id").collect()
-    )
-    bloomed = sorted(
-        r["doc_id"]
-        for r in decontaminate_train(
-            train, ev, "text", "doc_id", ngram=13, bloom=True
-        ).select("doc_id").collect()
-    )
-    assert plain == bloomed
-
-
 def test_bloom_bits_roundtrip(spark):
     """Every inserted key tests positive; a disjoint key set tests
     mostly negative (measured fp ~0.6% at 16 bits/key; assert a
@@ -575,26 +530,6 @@ def test_scored_pipeline_plan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan  # no row-wise Python UDFs
     assert "Window" in plan  # the packing cumsum
-
-
-def test_bloom_bitset_not_in_plan_text(spark):
-    """The Bloom bitset must ride as broadcast DATA: the decontaminate
-    plan string stays small (a 16k-word literal array would inflate
-    it by ~100KB and cost ~1s of analysis per probe reference)."""
-    from pyspark.sql import functions as F
-
-    from skrub_spark.dedup.contamination import decontaminate_train
-    from skrub_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    is_eval = F.col("source").isin("src0", "src1")
-    df = decontaminate_train(
-        docs.filter(~is_eval), docs.filter(is_eval), "text", "doc_id",
-        ngram=13, bloom=True,
-    )
-    plan = plan_of(df)
-    assert len(plan) < 200_000, len(plan)
-    assert "__bloom_bits" in plan  # the data-borne bitset column
 
 
 def test_dsir_scoring_map_only(spark):

@@ -1,6 +1,6 @@
 """Round-12 operator contracts: best-fit-decreasing sequence
-packing, checksum-validating PII, streaming decontamination gate,
-preference-pair construction."""
+packing, checksum-validating PII, preference-pair construction (the
+streaming decontamination gate's are in ``test_overlap.py``)."""
 
 from __future__ import annotations
 
@@ -246,116 +246,6 @@ def test_checksum_redaction_no_overfire(spark):
     )
     r = df.select(redact_pii_checksum("text").alias("r")).collect()[0]
     assert r["r"] == "order 1111111111111111 ok"
-
-
-# ---------------------------------------------------------------------------
-# Streaming decontamination gate
-# ---------------------------------------------------------------------------
-
-
-def _run_decon_stream(spark, tmp_path, docs_rows, eval_rows, *, ngram=3):
-    """docs_rows: (doc_id, text); batch 0 = even ids, batch 1 = odd.
-    Returns {doc_id: (kind, n_shingles, n_contaminated, batch_id)}."""
-    import glob
-    import os as _os
-    import shutil
-    import uuid
-
-    from skrub_spark.streaming.ops import streaming_decontaminate
-
-    df = spark.createDataFrame(docs_rows, "doc_id long, text string")
-    ev = spark.createDataFrame(eval_rows, "doc_id long, text string")
-    tag = uuid.uuid4().hex[:6]
-    src = str(tmp_path / f"src_{tag}")
-    _os.makedirs(src)
-    for i, part in enumerate(
-        (df.filter("doc_id % 2 = 0"), df.filter("doc_id % 2 = 1"))
-    ):
-        d = src + f"_w{i}"
-        part.coalesce(1).write.mode("overwrite").parquet(d)
-        dst = _os.path.join(src, f"b{i}.parquet")
-        shutil.copyfile(
-            glob.glob(_os.path.join(d, "part-*.parquet"))[0], dst
-        )
-        _os.utime(dst, (1_700_000_000 + i * 60,) * 2)
-        shutil.rmtree(d)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    out = str(tmp_path / f"out_{tag}")
-    q = streaming_decontaminate(
-        stream,
-        ev,
-        "text",
-        "doc_id",
-        ngram=ngram,
-        out_path=out,
-        checkpoint_path=str(tmp_path / f"ck_{tag}"),
-    )
-    assert q.awaitTermination(300)
-    n_batches = sum(1 for p in q.recentProgress if p.numInputRows > 0)
-    assert n_batches >= 2, n_batches
-    return {
-        r["doc_id"]: (
-            r["kind"],
-            r["n_shingles"],
-            r["n_contaminated"],
-            r["batch_id"],
-        )
-        for r in spark.read.parquet(out).collect()
-    }
-
-
-def test_streaming_decon_quarantines_overlap(spark, tmp_path):
-    docs = [
-        (0, "alpha beta gamma delta epsilon"),  # shares eval 3-grams
-        (1, "one two three four five"),  # clean
-        (2, "zz yy xx ww vv"),  # clean
-        (3, "alpha beta gamma other words"),  # shares one 3-gram
-    ]
-    ev = [(100, "alpha beta gamma delta")]
-    got = _run_decon_stream(spark, tmp_path, docs, ev)
-    assert got[0][0] == "quarantine" and got[0][2] == 2
-    assert got[1][0] == "clean" and got[1][2] == 0
-    assert got[2][0] == "clean"
-    assert got[3][0] == "quarantine" and got[3][2] == 1
-    # batch split recorded: even ids batch 0, odd batch 1
-    assert got[0][3] == 0 and got[1][3] == 1
-
-
-def test_streaming_decon_no_hit_equals_passthrough(spark, tmp_path):
-    """Zero-overlap stream: every doc must come back clean with the
-    same id set — the gate must never drop or mutate rows."""
-    docs = [(i, f"w{i}a w{i}b w{i}c w{i}d") for i in range(20)]
-    ev = [(900, "completely different eval text here")]
-    got = _run_decon_stream(spark, tmp_path, docs, ev)
-    assert set(got) == set(range(20))
-    assert all(v[0] == "clean" and v[2] == 0 for v in got.values())
-
-
-def test_streaming_decon_matches_batch_operator(spark, tmp_path):
-    """The streaming gate's keep set must equal decontaminate_train
-    on the same rows (stateless across batches by construction)."""
-    from skrub_spark.dedup.contamination import decontaminate_train
-
-    docs = [
-        (i, f"tok{i} tok{i+1} tok{i+2} tok{i+3} tok{i+4}")
-        for i in range(30)
-    ]
-    ev = [(901, "tok10 tok11 tok12 tok13"), (902, "tok25 tok26 tok27")]
-    got = _run_decon_stream(spark, tmp_path, docs, ev)
-    stream_clean = {k for k, v in got.items() if v[0] == "clean"}
-    train = spark.createDataFrame(docs, "doc_id long, text string")
-    ev_df = spark.createDataFrame(ev, "doc_id long, text string")
-    batch_keep = {
-        r["doc_id"]
-        for r in decontaminate_train(
-            train, ev_df, "text", "doc_id", ngram=3
-        ).collect()
-    }
-    assert stream_clean == batch_keep
 
 
 # ---------------------------------------------------------------------------

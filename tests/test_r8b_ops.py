@@ -1043,43 +1043,6 @@ def test_streaming_transitions_cross_batch_continuity(spark, tmp_path):
     assert got == [("a", "b"), ("b", "c")]
 
 
-# ------------------------------------------------ duplication density
-
-
-def test_duplication_density_planted(spark):
-    from skrub_spark.dedup.density import duplication_density
-
-    shared = "alpha beta gamma delta"  # 2 distinct 3-shingles
-    rows = [
-        (1, shared + " one unique tail here"),
-        (2, shared + " two other ending words"),
-        (3, "totally different text with no overlap at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r
-        for r in duplication_density(df, "text", "doc_id").collect()
-    }
-    # docs 1/2 share exactly the 2 shingles inside `shared`
-    assert got[1]["n_dup"] == 2 and got[2]["n_dup"] == 2
-    assert got[3]["n_dup"] == 0 and got[3]["dup_fraction"] == 0.0
-    assert got[1]["dup_fraction"] == round(2 / got[1]["n_shingles"], 6)
-
-
-def test_duplication_density_short_doc_zero_row(spark):
-    from skrub_spark.dedup.density import duplication_density
-
-    df = spark.createDataFrame(
-        [(1, "only two"), (2, "a b c d")], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: r
-        for r in duplication_density(df, "text", "doc_id").collect()
-    }
-    assert got[1]["n_shingles"] == 0 and got[1]["dup_fraction"] is None
-    assert got[2]["n_shingles"] == 2
-
-
 # ----------------------------------------------------- ranking metrics
 
 

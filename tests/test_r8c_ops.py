@@ -235,34 +235,6 @@ def test_bfs_distances_directed(spark):
     assert d == {0: 0, 1: 1}  # 2 unreachable along edge direction
 
 
-# ------------------------------------------------------ n-gram novelty
-
-
-def test_ngram_novelty_fractions(spark):
-    from skrub_spark.dedup.density import ngram_novelty
-
-    ref = spark.createDataFrame(
-        [(100, "alpha beta gamma delta")], "doc_id long, text string"
-    )
-    # doc 1: both shingles inside ref text -> novelty 0
-    # doc 2: disjoint vocabulary -> novelty 1
-    # doc 3: one of two shingles new -> 0.5; doc 4: too short -> NULL
-    tgt = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta"),
-            (2, "foo bar baz qux"),
-            (3, "beta gamma delta epsilon"),
-            (4, "hi there"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in ngram_novelty(tgt, ref).collect()}
-    assert out[1]["novelty"] == 0.0
-    assert out[2]["novelty"] == 1.0
-    assert out[3]["n_shingles"] == 2 and out[3]["novelty"] == 0.5
-    assert out[4]["n_shingles"] == 0 and out[4]["novelty"] is None
-
-
 # ------------------------------------------------------- EWMA smoothing
 
 

@@ -406,21 +406,6 @@ def test_gram_cap_default_invisible_on_corpus(spark, sf_dir):
     assert capped == uncapped
 
 
-def test_gram_cap_threads_through_contamination(spark):
-    """A megadoc's contamination denominator is the CAPPED distinct
-    count — the cap is honest on both sides of the fraction."""
-    from skrub_spark.dedup.contamination import ngram_contamination
-
-    text = " ".join(f"t{i}" for i in range(50))
-    train = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    ev = spark.createDataFrame([(9, text)], "doc_id long, text string")
-    r = ngram_contamination(
-        train, ev, ngram=3, max_grams_per_doc=10
-    ).first()
-    assert r["n_shingles"] == 10 and r["n_contaminated"] == 10
-    assert r["contamination"] == 1.0
-
-
 # ------------------------------------------- r9: frozen GapEncoder
 
 

@@ -1,6 +1,8 @@
 """Source scan: the library's hash rule and its NULL sentinel are
-written once, in ``functions/hashing.py``, and the removed ``hash=``
-and ``use_stub`` switches stay removed. Runs no Spark."""
+written once, in ``functions/hashing.py``, the word-tokenizer split
+once, in ``functions/text.py``, and the removed ``hash=``,
+``use_stub``, ``bloom=`` and ``salt=`` switches stay removed. Runs no
+Spark."""
 
 from __future__ import annotations
 
@@ -58,3 +60,50 @@ def test_no_use_stub_in_multimodal():
         if "use_stub" in p.read_text(encoding="utf-8")
     ]
     assert hits == []
+
+
+def test_no_bloom_or_salt_on_overlap_operators():
+    from skrub_spark.dedup.contamination import (
+        decontaminate_train,
+        ngram_contamination,
+    )
+    from skrub_spark.dedup.density import duplication_density, ngram_novelty
+    from skrub_spark.streaming.ops import streaming_decontaminate
+
+    for fn in (ngram_contamination, decontaminate_train, streaming_decontaminate):
+        assert "bloom" not in inspect.signature(fn).parameters, fn.__name__
+    for fn in (duplication_density, ngram_novelty):
+        assert "salt" not in inspect.signature(fn).parameters, fn.__name__
+    # one exact membership join: no Bloom prefilter under dedup/ or streaming/
+    hits = [
+        p.relative_to(PKG).as_posix()
+        for d in ("dedup", "streaming")
+        for p in sorted((PKG / d).rglob("*.py"))
+        if re.search(r"functions\.bloom|from \.+functions import bloom",
+                     p.read_text(encoding="utf-8"))
+    ]
+    assert hits == []
+
+
+def test_word_split_written_once():
+    # queries.py's DuckDB oracles replay the split in their own SQL
+    hits = [
+        p.relative_to(PKG).as_posix()
+        for p in sorted(PKG.rglob("*.py"))
+        if "[^a-z0-9]+" in p.read_text(encoding="utf-8")
+    ]
+    assert hits == ["functions/text.py", "queries.py"]
+
+
+def test_streaming_gate_cap_matches_batch():
+    from skrub_spark.dedup.contamination import (
+        decontaminate_train,
+        ngram_contamination,
+    )
+    from skrub_spark.streaming.ops import streaming_decontaminate
+
+    caps = {
+        fn.__name__: inspect.signature(fn).parameters["max_grams_per_doc"].default
+        for fn in (ngram_contamination, decontaminate_train, streaming_decontaminate)
+    }
+    assert len(set(caps.values())) == 1, caps

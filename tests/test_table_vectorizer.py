@@ -105,6 +105,24 @@ def test_table_vectorizer_specific_transformers(spark):
     assert "seg_0" in out.columns and "seg_AUTO" not in out.columns
 
 
+def test_table_vectorizer_threshold_from_config(spark):
+    """Without ``cardinality_threshold`` the routing reads the
+    config's; keys the library does not read are rejected."""
+    from skrub_spark import config_context, set_config
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c"), (4, "a")], "id int, seg string"
+    )
+    one_hot = {"seg_a", "seg_b", "seg_c"}
+    assert one_hot <= set(TableVectorizer().fit(df).transform(df).columns)
+    with config_context(cardinality_threshold=2):
+        cols = set(TableVectorizer().fit(df).transform(df).columns)
+    assert not one_hot & cols and "seg_0" in cols
+    for key in ("broadcast_threshold", "shuffle_partitions"):
+        with pytest.raises(ValueError, match="unknown config key"):
+            set_config(**{key: 1})
+
+
 @pytest.mark.parametrize("clean", [True, False])
 def test_table_vectorizer_fit_jobs_flat_in_one_hot_columns(spark, clean, count_jobs):
     """Every one-hot vocabulary comes from one agg: the fit's job count
