@@ -712,7 +712,7 @@ class _BenchTracer(Tracer):
 
 
 def main() -> None:
-    from skrub_spark import get_session, release
+    from skrub_spark import codegen_compiles, get_session, release
     from skrub_spark.queries import queries
 
     spark = get_session(app_name="skrub_spark_bench")
@@ -722,15 +722,20 @@ def main() -> None:
     # warm the JVM + parquet footers with one cheap action
     spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
     # UNTIMED warm-up at sf0.001: run every headline query once on the
-    # tiny dataset so Catalyst planning, whole-stage codegen classes
-    # and the C2 JIT are populated before timing. Rationale: the
-    # engine is designed for 100 TB jobs where one-time compile cost
-    # amortizes to zero; a per-query first-run measurement at sf0.1
-    # is ~70% JIT (measured: ngram_jaccard 6.8s first run vs 0.9-1.2s
-    # steady state on identical data), i.e. it benchmarks the JVM
-    # compiler, not the query plans. The warm-up uses DIFFERENT
-    # (smaller) data, so no result rows or cached partitions carry
-    # into the timed runs — only compiled code and plan fragments.
+    # tiny dataset so the C2 JIT has compiled the engine's own code
+    # paths before timing. Rationale: the engine is designed for
+    # 100 TB jobs where one-time compile cost amortizes to zero; a
+    # per-query first-run measurement at sf0.1 is ~70% JIT (measured:
+    # ngram_jaccard 6.8s first run vs 0.9-1.2s steady state on
+    # identical data), i.e. it benchmarks the JVM compiler, not the
+    # query plans. Most generated classes do NOT carry over: the 300
+    # queries generate more than the codegen cache holds, and sf0.1
+    # plans differ from sf0.001 ones, so one 4-core sf0.1 timed leg
+    # still compiled 3670 classes (in 254 queries) with get_session's
+    # 1000-entry cache and 5342 (in 280) with Spark's default 100; see
+    # each record's `compiles`. The warm-up uses DIFFERENT (smaller)
+    # data, so no result rows or cached partitions carry into the
+    # timed runs.
     warm_dir = os.environ.get(
         "SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001"
     )
@@ -758,6 +763,7 @@ def main() -> None:
     layers: dict[str, list[dict]] = {n: [] for n in HEADLINE}
     for leg in range(legs):
         for name in HEADLINE:
+            compiled = codegen_compiles(spark)
             group = tracer.begin(name)
             t0 = time.time()
             df = qs[name](spark, SF_DIR)
@@ -765,6 +771,7 @@ def main() -> None:
             n = df.count()
             wall = time.time() - t0
             tracer.end()
+            compiled = codegen_compiles(spark) - compiled
             # queries persist/checkpoint their own branch points
             # (tfidf tf, LM count frames, contingency cells); across
             # ~250 sequential queries those blocks accumulate and
@@ -779,6 +786,7 @@ def main() -> None:
                 "wall_s": wall,
                 "build_s": build,
                 "rows": n,
+                "compiles": compiled,
                 **spark_layer,
                 "gap_s": wall - spark_layer["job_s"],
             }

@@ -256,7 +256,12 @@ from .operators.unigram_lm import (  # noqa: F401
     train_unigram,
     unigram_token_stats,
 )
-from .session import fan_out, get_session, release  # noqa: F401
+from .session import (  # noqa: F401
+    codegen_compiles,
+    fan_out,
+    get_session,
+    release,
+)
 from .table_vectorizer import TableVectorizer, tabular_pipeline  # noqa: F401
 
 # round 12

@@ -25,6 +25,11 @@ def sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # The higher-order-function lambdas below are parsed SQL
 # (``F.expr("t -> ...")``): a Python lambda builds its body one py4j
 # call per Column node, a parsed one costs a single call.

@@ -46,7 +46,9 @@ from .streaming.ops import session_window_features, windowed_event_counts
 
 def _prep(spark: SparkSession) -> SparkSession:
     # Driver may hand us a vanilla session; pin the confs correctness
-    # depends on (tz for datetime parts, ns-parquet reads).
+    # depends on (tz for datetime parts, ns-parquet reads). The codegen
+    # cache size (session._DEFAULTS) cannot be pinned here: it is a
+    # static conf, fixed when the session was created.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark

@@ -30,6 +30,17 @@ _DEFAULTS = {
     # ns timestamp type, so read as long and convert in load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # Spark compiles every whole-stage, projection and predicate class
+    # through one JVM-wide LRU cache of this many entries (Spark's
+    # default is 100). One skrub tabular pass (TableVectorizer fit 31 +
+    # transform 4, AggJoiner 11, fuzzy_join 33, TableReport 27, a
+    # pricing query 8: 114 classes, 4 cores) overflows 100, so every
+    # repeat of it evicted classes before their reuse and recompiled
+    # 100 of them: Janino plus JIT of the fresh classes on every pass.
+    # 1000 holds several such pipelines. The conf is static: it takes
+    # effect only when get_session creates the session, so a plain
+    # SparkSession, or one that existed before get_session, keeps 100.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -129,13 +140,27 @@ def release(spark: SparkSession) -> None:
             rdd.unpersist(False)
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the session's JVM has compiled so far: the count of
+    Spark's ``CodegenMetrics`` compilation-time histogram, which is
+    updated once per codegen cache miss. JVM-wide, so take the
+    difference of two readings around the work to count it."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return int(metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_session(
     app_name: str = "skrub_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults applied."""
+    """Build (or reuse) a SparkSession with engine defaults applied.
+
+    ``extra_conf`` overrides any default. Static confs among them
+    (``spark.driver.memory``, ``spark.sql.codegen.cache.maxEntries``)
+    apply only when this call creates the session: a session that is
+    already running keeps the values it was started with."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"

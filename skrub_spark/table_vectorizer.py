@@ -27,13 +27,14 @@ from __future__ import annotations
 import copy
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .base import SparkTransformer
 from .config import get_config
 from .encoders.datetime_encoder import DatetimeEncoder
 from .encoders.minhash_encoder import MinHashEncoder
+from .functions.text import sql_ident, sql_string
 from .operators.cleaner import Cleaner
 
 _NUMERIC = {"double", "float", "int", "bigint", "smallint", "tinyint"}
@@ -41,6 +42,15 @@ _NUMERIC = {"double", "float", "int", "bigint", "smallint", "tinyint"}
 
 def _safe(name: str) -> str:
     return re.sub(r"[^0-9a-zA-Z_]", "_", name)
+
+
+def _one_hot(c: str, v: str) -> Column:
+    """``c = v`` as a DOUBLE named ``{c}_{_safe(v)}``. Parsed from SQL
+    text, it costs one py4j call; the Column-built
+    ``(F.col(c) == F.lit(v)).cast("double").alias(...)`` costs one
+    per node, each recording a Python call site."""
+    name = sql_ident(f"{c}_{_safe(v)}")
+    return F.expr(f"CAST({sql_ident(c)} = {sql_string(v)} AS DOUBLE) AS {name}")
 
 
 class TableVectorizer(SparkTransformer):
@@ -163,14 +173,10 @@ class TableVectorizer(SparkTransformer):
     def _transform(self, df: DataFrame) -> DataFrame:
         work = self._cleaner.transform(df) if self._cleaner else df
         # one-hot low-cardinality strings inline
-        onehot_exprs = []
-        drop = []
-        for c, vals in self._low_card.items():
-            drop.append(c)
-            for v in vals:
-                onehot_exprs.append(
-                    (F.col(c) == F.lit(v)).cast("double").alias(f"{c}_{_safe(v)}")
-                )
+        drop = list(self._low_card)
+        onehot_exprs = [
+            _one_hot(c, v) for c, vals in self._low_card.items() for v in vals
+        ]
         work = work.select(
             *[F.col(c) for c in work.columns if c not in drop], *onehot_exprs
         )

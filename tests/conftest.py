@@ -88,6 +88,21 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def count_compiles(spark):
+    """``count_compiles(fn)`` runs ``fn()`` and returns ``(fn(),
+    compiles)``: the classes Spark's codegen compiled meanwhile, that
+    is its cache misses (``skrub_spark.codegen_compiles``)."""
+    from skrub_spark import codegen_compiles
+
+    def run(fn):
+        before = codegen_compiles(spark)
+        out = fn()
+        return out, codegen_compiles(spark) - before
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

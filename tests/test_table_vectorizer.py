@@ -15,7 +15,8 @@ from skrub_spark import (
     ToFloat,
     tabular_pipeline,
 )
-from skrub_spark.table_vectorizer import _safe
+from skrub_spark.functions.text import sql_ident
+from skrub_spark.table_vectorizer import _one_hot, _safe
 
 
 def _frame(spark):
@@ -161,3 +162,36 @@ def test_table_vectorizer_vocabulary_matches_distinct_order_by(spark, clean):
         assert [n for n in names if n.startswith(f"{c}_")] == [
             f"{c}_{_safe(v)}" for v in ref
         ]
+
+
+def _one_hot_columns(c, vals):
+    """The Column-built one-hot form the SQL text must reproduce
+    (``F.col`` reads its argument as an attribute path, so a name with
+    a backtick must be passed quoted)."""
+    return [
+        (F.col(sql_ident(c)) == F.lit(v)).cast("double").alias(f"{c}_{_safe(v)}")
+        for v in vals
+    ]
+
+
+def test_one_hot_sql_matches_column_built(spark):
+    """The one-hot columns parsed from SQL text equal the Column-built
+    form in names, types and values, for values with a quote, a
+    backslash, non-ASCII and the empty string, and for column names
+    with a space and a backtick."""
+    vals = ["it's", "back\\slash", "naïve ☃", "", "a'\\'b"]
+    rows = [(i, v) for i, v in enumerate(vals + [None, "other"])]
+    for c in ("a b`c", "seg"):
+        df = spark.createDataFrame(rows, f"id int, {sql_ident(c)} string")
+        got = df.select("id", *[_one_hot(c, v) for v in vals]).orderBy("id")
+        ref = df.select("id", *_one_hot_columns(c, vals)).orderBy("id")
+        assert got.schema == ref.schema
+        assert got.collect() == ref.collect()
+    # through the estimator: the fitted vocabulary keeps every value
+    df = spark.createDataFrame(rows, "id int, `a b` string")
+    tv = TableVectorizer(clean=False).fit(df)
+    assert tv._low_card["a b"] == sorted(vals + ["other"])
+    got = tv.transform(df).orderBy("id")
+    ref = df.select("id", *_one_hot_columns("a b", tv._low_card["a b"]))
+    assert got.schema == ref.schema
+    assert got.collect() == ref.orderBy("id").collect()
